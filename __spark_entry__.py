@@ -2844,15 +2844,32 @@ SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 4 AS chun
 FROM documents GROUP BY 1
 """)
 def _assist1(spark, sf):
-    # the assistant's one-scan pseudo-batch profile, on an engine-portable
-    # md5 chunk key (sketch/set columns excluded: HLL estimates and
-    # collect_set ordering are engine-specific by design)
-    from great_expectations_spark.assistant import chunk_metrics
-    from great_expectations_spark.pipeline.dedup import _md5_int
+    # per-batch registry metrics on the profiler's engine-portable md5
+    # pseudo-batch key (sketch columns excluded: HLL estimates are
+    # engine-specific by design)
+    from great_expectations_spark.rule_profiler import (
+        _portable_chunk_key, batch_metrics)
 
     docs = _tbl(spark, sf, "documents")
-    key = F.pmod(_md5_int(F.col("doc_id").cast("string")), F.lit(4))
-    m = chunk_metrics(docs, ["n_chars", "lang"], n_chunks=4, chunk_by=key)
+    names = {
+        "n_rows": ("table.row_count", None),
+        "n_chars__nulls": ("column_values.null.count", "n_chars"),
+        "n_chars__mean": ("column.mean", "n_chars"),
+        "n_chars__min": ("column.min", "n_chars"),
+        "n_chars__max": ("column.max", "n_chars"),
+        "n_chars__std": ("column.standard_deviation", "n_chars"),
+        "lang__nulls": ("column_values.null.count", "lang"),
+        "lang__len_min": ("column_values.length_min", "lang"),
+        "lang__len_max": ("column_values.length_max", "lang"),
+    }
+    requests = {k: (m, {"column": c} if c else {})
+                for k, (m, c) in names.items()}
+    rows = batch_metrics(docs, requests, _portable_chunk_key("doc_id", 4))
+    m = spark.createDataFrame(
+        [(chunk, *(vals[k] for k in names)) for chunk, vals in rows],
+        "chunk long, n_rows long, n_chars__nulls long, n_chars__mean double, "
+        "n_chars__min long, n_chars__max long, n_chars__std double, "
+        "lang__nulls long, lang__len_min int, lang__len_max int")
     return m.select(
         "chunk", "n_rows", "n_chars__nulls",
         F.round("n_chars__mean", 6).alias("n_chars__mean"),
@@ -2910,15 +2927,14 @@ def _assist2(spark, sf):
     # LCG resampler (assistant._resample_index) is what makes the SQL
     # reproduction possible — the oracle replays the full resample-
     # quantile-bias pipeline and must agree digit-for-digit at round-6.
-    from great_expectations_spark.assistant import (
-        chunk_metrics, estimate_range)
-    from great_expectations_spark.pipeline.dedup import _md5_int
+    from great_expectations_spark.assistant import estimate_range
+    from great_expectations_spark.rule_profiler import (
+        _portable_chunk_key, batch_metrics)
 
     docs = _tbl(spark, sf, "documents")
-    key = F.pmod(_md5_int(F.col("doc_id").cast("string")), F.lit(4))
-    rows = chunk_metrics(docs, ["n_chars"], n_chunks=4, chunk_by=key) \
-        .orderBy("chunk").collect()
-    vals = [r["n_chars__mean"] for r in rows]
+    rows = batch_metrics(docs, {"m": ("column.mean", {"column": "n_chars"})},
+                         _portable_chunk_key("doc_id", 4))
+    vals = [v["m"] for _, v in rows]  # batch-id order
     out = []
     for est in ("bootstrap", "quantiles", "exact"):
         lo, hi = estimate_range(

@@ -27,7 +27,6 @@ from great_expectations_spark.interactive import (
     get_metric,
     get_metrics,
 )
-from great_expectations_spark.assistant import chunk_metrics, onboarding_suite
 from great_expectations_spark.rule_profiler import (
     RuleBasedProfilerResult,
     run_rule_based_profiler,
@@ -69,8 +68,6 @@ __all__ = [
     "get_metrics",
     "validate",
     "validate_by",
-    "chunk_metrics",
-    "onboarding_suite",
     "run_rule_based_profiler",
     "onboarding_profiler_config",
     "run_onboarding_assistant",

@@ -1,102 +1,19 @@
-"""Onboarding assistant: calibrated suite generation from pseudo-batches.
+"""Numeric-range estimators for the profiler's multi-batch builders.
 
 The reference's data assistants (great_expectations/rule_based_profiler/
 data_assistant/onboarding_data_assistant.py; parameter estimation in
 rule_based_profiler/estimators/*) fit expectation thresholds from the
-metric spread across MANY batches, then emit a suite whose bounds cover
-that spread. This module re-expresses the idea engine-side with one scan:
-the table is split into ``n_chunks`` deterministic content-hash
-pseudo-batches, every per-column statistic is computed per chunk in a
-single ``groupBy().agg`` (all JVM-side Column aggregates), and bounds are
-the cross-chunk [min, max] envelope widened by a relative ``margin`` —
-the reference's "bootstrapped range" estimator with the chunk spread
-standing in for the batch spread.
-
-Scale: ONE shuffle on an 8-way (default) chunk key — every aggregate is
-map-side combinable, the driver sees n_chunks rows of a few hundred
-columns. No per-value collects; value sets are bounded by
-``set_cardinality_cap`` via the same slice-capped collect_set guard the
-distinct-values expectation uses.
+spread of a metric across MANY batches. Here the per-batch metric values
+come from ``rule_profiler.batch_metrics`` (one ``groupBy`` over real or
+pseudo batches); this module keeps only the plain driver-side estimators
+that turn those values into a [lower, upper] range: ``estimate_range``,
+``bootstrap_range`` and ``quantiles_range``. The onboarding path is
+``data_assistant.run_onboarding_assistant``.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Any
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from great_expectations_spark.core.suite import ExpectationSuite
-
-
-def content_chunk(cols: list[str], n_chunks: int) -> Column:
-    """Deterministic pseudo-batch id: xxhash64 of the row content modulo
-    ``n_chunks`` — stable across partitionings and runs."""
-    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_chunks))
-
-
-def _is_numeric(dt: T.DataType) -> bool:
-    return isinstance(dt, T.NumericType)
-
-
-def chunk_metrics(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    n_chunks: int = 8,
-    chunk_by: Column | str | None = None,
-    set_cardinality_cap: int = 20,
-) -> DataFrame:
-    """Per-chunk calibration statistics, one row per chunk.
-
-    Emits ``chunk, n_rows`` plus, per column: ``<c>__nulls``; numeric:
-    ``__mean/__min/__max/__std``; string: ``__len_min/__len_max``,
-    ``__n_distinct`` (approx), ``__set`` (collect_set sliced to cap+1 —
-    the +1 overflow sentinel, never unbounded). All aggregates ride ONE
-    fused groupBy. ``chunk_by`` overrides the content-hash chunk key
-    (e.g. an ingest-date or batch-id column).
-    """
-    if n_chunks < 2:
-        raise ValueError(f"n_chunks must be >= 2, got {n_chunks}")
-    columns = columns or df.columns
-    missing = [c for c in columns if c not in df.columns]
-    if missing:
-        raise ValueError(f"columns not in DataFrame: {missing}")
-    if chunk_by is None:
-        key = content_chunk(columns, n_chunks)
-    elif isinstance(chunk_by, str):
-        key = F.pmod(F.xxhash64(F.col(chunk_by)), F.lit(n_chunks))
-    else:
-        # a Column IS the chunk id (e.g. an ingest-date bucket or an
-        # engine-portable md5-derived key) — used verbatim, not re-hashed
-        key = chunk_by
-
-    aggs: list[Column] = [F.count(F.lit(1)).alias("n_rows")]
-    for c in columns:
-        dt = df.schema[c].dataType
-        col = F.col(c)
-        aggs.append(
-            F.sum(F.when(col.isNull(), 1).otherwise(0)).alias(f"{c}__nulls")
-        )
-        if _is_numeric(dt):
-            aggs += [
-                F.avg(col).alias(f"{c}__mean"),
-                F.min(col).alias(f"{c}__min"),
-                F.max(col).alias(f"{c}__max"),
-                F.stddev_samp(col).alias(f"{c}__std"),
-            ]
-        elif isinstance(dt, T.StringType):
-            aggs += [
-                F.min(F.length(col)).alias(f"{c}__len_min"),
-                F.max(F.length(col)).alias(f"{c}__len_max"),
-                F.approx_count_distinct(col).alias(f"{c}__n_distinct"),
-                F.slice(
-                    F.collect_set(col), 1, set_cardinality_cap + 1
-                ).alias(f"{c}__set"),
-            ]
-    return df.groupBy(key.alias("chunk")).agg(*aggs)
-
 
 # --------------------------------------------------------------------------
 # numeric-range estimators (reference parity: rule_based_profiler/
@@ -104,9 +21,9 @@ def chunk_metrics(
 # estimators/quantiles_numeric_range_estimator.py:37,
 # estimators/exact_numeric_range_estimator.py:33, consumed by
 # parameter_builder/numeric_metric_range_multi_batch_parameter_builder.py:86).
-# The metric-values vector here is the per-chunk statistics chunk_metrics
-# already computed — n_chunks doubles on the driver, so estimation is
-# O(n_resamples * n_chunks) pure-Python work with zero extra Spark jobs.
+# The metric-values vector is one value per batch, already on the driver,
+# so estimation is O(n_resamples * n_batches) pure-Python work with zero
+# extra Spark jobs.
 
 _LCG_M = 2147483647  # 2**31 - 1 (MINSTD modulus; products stay < 2**63)
 
@@ -230,180 +147,3 @@ def estimate_range(
             vals, false_positive_rate, n_resamples=n_resamples, seed=seed)
     raise ValueError(
         f"unknown estimator {estimator!r}; expected exact|quantiles|bootstrap")
-
-
-def _widen(lo: float, hi: float, margin: float) -> tuple[float, float]:
-    spread = hi - lo
-    pad = margin * max(spread, abs(lo), abs(hi), 1e-9)
-    return lo - pad, hi + pad
-
-
-def _merged_std(rows: list, c: str) -> float | None:
-    """Whole-table sample stddev of column ``c`` from per-chunk
-    (count, mean, std) moments — Chan's parallel-variance merge, same math
-    as the checkpoint rollup's numeric monoid. Driver-side over n_chunks
-    rows."""
-    parts = []  # (n_nonnull, mean, M2)
-    for r in rows:
-        n = (r["n_rows"] or 0) - (r[f"{c}__nulls"] or 0)
-        m = r[f"{c}__mean"]
-        if n <= 0 or m is None:
-            continue
-        s = r[f"{c}__std"]
-        m2 = (float(s) ** 2) * (n - 1) if (s is not None and n > 1) else 0.0
-        parts.append((n, float(m), m2))
-    total = sum(p[0] for p in parts)
-    if total < 2:
-        return None
-    gmean = sum(p[0] * p[1] for p in parts) / total
-    m2 = sum(p[2] + p[0] * (p[1] - gmean) ** 2 for p in parts)
-    return math.sqrt(m2 / (total - 1))
-
-
-def onboarding_suite(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    name: str = "onboarding",
-    n_chunks: int = 8,
-    margin: float = 0.1,
-    chunk_by: Column | str | None = None,
-    set_cardinality_cap: int = 20,
-    include_row_count: bool = True,
-    estimator: str = "envelope",
-    false_positive_rate: float = 0.05,
-    n_resamples: int = 999,
-    seed: int = 7,
-) -> ExpectationSuite:
-    """Generate a calibrated expectation suite from one profiling scan.
-
-    ``estimator`` selects how numeric-stat bounds derive from the
-    per-chunk metric values: ``"envelope"`` (engine default — cross-chunk
-    [min,max] widened by ``margin``) or the reference parameter-builder's
-    ``"exact"`` / ``"quantiles"`` / ``"bootstrap"`` modes
-    (numeric_metric_range_multi_batch_parameter_builder.py:86;
-    ``false_positive_rate``, ``n_resamples``, ``seed`` apply to the
-    statistical modes). Bootstrap/quantiles intervals are typically much
-    tighter than the margin envelope at the same false-alarm rate —
-    tests/test_assistant.py::test_bootstrap_tighter_than_envelope.
-
-    Per column, bounds are the cross-chunk envelope widened by ``margin``
-    (relative): numeric columns get mean/min/max/stddev between-bounds,
-    string columns get length bounds and — when the whole-table
-    cardinality stays under ``set_cardinality_cap`` — an in-set
-    expectation over the observed values; every column gets a
-    not-be-null expectation with ``mostly`` calibrated to the worst
-    chunk's null rate; the table gets a row-count range. The suite
-    passes on the profiled data by construction and on any batch whose
-    per-chunk statistics stay inside the widened envelope — the
-    reference assistant's contract.
-    """
-    if not 0 <= margin < 1:
-        raise ValueError(f"margin must be in [0, 1), got {margin}")
-    columns = columns or df.columns
-    rows = chunk_metrics(
-        df, columns, n_chunks=n_chunks, chunk_by=chunk_by,
-        set_cardinality_cap=set_cardinality_cap,
-    ).collect()
-    suite = ExpectationSuite(name=name)
-    if not rows:
-        suite.add("expect_table_row_count_to_be_between", min_value=0, max_value=0)
-        return suite
-
-    def env(field: str) -> tuple[Any, Any] | None:
-        vals = [r[field] for r in rows if r[field] is not None]
-        if not vals:
-            return None
-        return min(vals), max(vals)
-
-    if include_row_count:
-        # calibrated to THIS table's size — disable when future batches
-        # legitimately vary in volume (the reference's volume assistant
-        # models that trend instead; see history.flag_drift here)
-        n_total = sum(r["n_rows"] for r in rows)
-        lo, hi = _widen(float(n_total), float(n_total), margin)
-        suite.add(
-            "expect_table_row_count_to_be_between",
-            min_value=max(0, math.floor(lo)), max_value=math.ceil(hi),
-        )
-
-    for c in columns:
-        dt = df.schema[c].dataType
-        # worst-chunk null rate -> mostly (floored to 2 decimals, clamped)
-        worst_null = max(
-            (r[f"{c}__nulls"] / r["n_rows"]) for r in rows if r["n_rows"]
-        )
-        mostly = max(0.01, min(1.0, math.floor((1.0 - worst_null) * (1.0 - margin) * 100) / 100))
-        if worst_null < 1.0:
-            suite.add(
-                "expect_column_values_to_not_be_null", column=c, mostly=mostly
-            )
-        if _is_numeric(dt):
-            for stat, exp in (
-                ("mean", "expect_column_mean_to_be_between"),
-                ("min", "expect_column_min_to_be_between"),
-                ("max", "expect_column_max_to_be_between"),
-                ("std", "expect_column_stdev_to_be_between"),
-            ):
-                e = env(f"{c}__{stat}")
-                if e is None:
-                    continue
-                if estimator != "envelope":
-                    chunk_vals = [
-                        r[f"{c}__{stat}"] for r in rows
-                        if r[f"{c}__{stat}"] is not None
-                    ]
-                    lo, hi = estimate_range(
-                        chunk_vals, estimator=estimator,
-                        false_positive_rate=false_positive_rate,
-                        n_resamples=n_resamples, seed=seed,
-                    )
-                    if stat == "std":
-                        # same between-chunk-variance blind spot as the
-                        # envelope path (comment below): cover the
-                        # Chan-merged whole-table stddev
-                        merged = _merged_std(rows, c)
-                        if merged is not None:
-                            lo, hi = min(lo, merged), max(hi, merged)
-                        lo = max(0.0, lo)
-                    suite.add(exp, column=c, min_value=lo, max_value=hi)
-                    continue
-                lo, hi = _widen(float(e[0]), float(e[1]), margin)
-                if stat == "std":
-                    # the whole-table stddev adds BETWEEN-chunk variance the
-                    # per-chunk envelope can't see (total variance = within +
-                    # between), so a column correlated with the chunk key —
-                    # e.g. a low-cardinality numeric, whose content-hash
-                    # chunks are value-pure with std 0 — would fail its own
-                    # calibration suite. Fold the Chan-merged whole-table
-                    # stddev into the envelope before widening.
-                    merged = _merged_std(rows, c)
-                    if merged is not None:
-                        lo2, hi2 = _widen(min(float(e[0]), merged),
-                                          max(float(e[1]), merged), margin)
-                        lo, hi = lo2, hi2
-                    lo = max(0.0, lo)
-                suite.add(exp, column=c, min_value=lo, max_value=hi)
-        elif isinstance(dt, T.StringType):
-            e = env(f"{c}__len_min")
-            e2 = env(f"{c}__len_max")
-            if e and e2:
-                lo, hi = _widen(float(e[0]), float(e2[1]), margin)
-                suite.add(
-                    "expect_column_value_lengths_to_be_between",
-                    column=c, min_value=max(0, math.floor(lo)),
-                    max_value=math.ceil(hi), mostly=mostly,
-                )
-            observed: set[str] = set()
-            overflow = False
-            for r in rows:
-                s = r[f"{c}__set"]
-                observed.update(s or [])
-            if len(observed) > set_cardinality_cap:
-                overflow = True
-            approx_total = max((r[f"{c}__n_distinct"] for r in rows), default=0)
-            if observed and not overflow and approx_total <= set_cardinality_cap:
-                suite.add(
-                    "expect_column_values_to_be_in_set",
-                    column=c, value_set=sorted(observed), mostly=mostly,
-                )
-    return suite

@@ -26,9 +26,8 @@ emits ``expect_column_stdev_to_be_between`` per batch. This engine's
 validation unit is the whole table, and a whole-table stddev can exceed
 every per-chunk stddev (between-chunk mean spread adds variance), so a
 chunk-envelope stdev bound is unsound here; the ``stdev_range``
-parameter is still resolved for inspection, and the imperative
-``assistant.onboarding_suite`` provides a calibrated stdev bound via
-merged moments (Chan's parallel variance).
+parameter is still resolved for inspection, and a whole-table stdev
+expectation needs bounds set by hand.
 """
 
 from __future__ import annotations

@@ -16,8 +16,10 @@ Semantics reuse, not reimplementation: map conditions come from the SAME
 row_condition composition, NULL-is-not-unexpected coalesce, mostly ratio —
 mirroring plans/compiler._compile_map), and the mostly-success expression
 is the same whole-table formula ``checkpoint.rollup`` applies to merged
-counts. Aggregate between-expectations evaluate their bounds as Column
-predicates per group.
+counts. Aggregate observations come from the metric registry
+(``interactive.metric_aggs``), so medians, quantiles and distinct counts
+take the same exact-or-sketch form under ``Options`` as in ``validate``;
+their between-bounds evaluate as Column predicates per group.
 
 Out of scope (raise, or ``on_unsupported="skip"``): expectations needing
 eager jobs or cross-row state beyond the group — distinct-set membership/
@@ -31,6 +33,7 @@ shuffle joined back null-safely).
 
 from __future__ import annotations
 
+import dataclasses
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -39,6 +42,7 @@ from pyspark.sql import types as T
 
 from great_expectations_spark.core.suite import ExpectationSuite
 from great_expectations_spark.functions.conditions import MAP_KERNELS
+from great_expectations_spark.interactive import metric_aggs
 from great_expectations_spark.plans.compiler import (
     _STRING_ONLY_MAP_TYPES,
     CompileError,
@@ -46,23 +50,33 @@ from great_expectations_spark.plans.compiler import (
     _row_condition,
 )
 
-# aggregate expectation -> observed-value Column over the group
-_AGG_OBSERVED = {
-    "expect_column_mean_to_be_between": F.avg,
-    "expect_column_sum_to_be_between": F.sum,
-    "expect_column_min_to_be_between": F.min,
-    "expect_column_max_to_be_between": F.max,
-    "expect_column_stdev_to_be_between": F.stddev_samp,
-    "expect_column_median_to_be_between": lambda c: F.percentile(c, F.lit(0.5)),
+# aggregate expectation -> registry metric (interactive.metric_aggs) whose
+# aggregate is the group's observed value
+_AGG_METRICS = {
+    "expect_column_mean_to_be_between": "column.mean",
+    "expect_column_sum_to_be_between": "column.sum",
+    "expect_column_min_to_be_between": "column.min",
+    "expect_column_max_to_be_between": "column.max",
+    "expect_column_stdev_to_be_between": "column.standard_deviation",
+    "expect_column_median_to_be_between": "column.median",
+    "expect_column_unique_value_count_to_be_between":
+        "column.distinct_values.count",
+    "expect_column_proportion_of_unique_values_to_be_between":
+        "column.unique_proportion",
+    "expect_table_row_count_to_be_between": "table.row_count",
+    "expect_table_row_count_to_equal": "table.row_count",
 }
-_COUNT_TYPES = {
-    "expect_table_row_count_to_be_between",
-    "expect_table_row_count_to_equal",
-}
-_DISTINCT_TYPES = {
-    "expect_column_unique_value_count_to_be_between",
-    "expect_column_proportion_of_unique_values_to_be_between",
-}
+_NUMERIC_METRICS = {"column.mean", "column.sum", "column.min", "column.max",
+                    "column.standard_deviation", "column.median"}
+
+
+def _observed(metric: str, kwargs: dict[str, Any], o: Options) -> Column:
+    """The registry's aggregate for ``metric`` as one double Column over
+    the group (the proportion's ratio composed JVM-side)."""
+    exprs, _ = metric_aggs(metric, kwargs, o)
+    if metric == "column.unique_proportion":
+        return F.when(exprs["n"] > 0, exprs["d"].cast("double") / exprs["n"])
+    return exprs["v"].cast("double")
 
 
 def _between_cond(obs: Column, kwargs: dict[str, Any]) -> Column:
@@ -168,11 +182,19 @@ def validate_by(
                 entry["unexp"] = alias(
                     F.sum(F.when(unexpected, F.lit(1)).otherwise(F.lit(0))))
                 entry["mostly"] = float(kw.get("mostly", 1.0))
-            elif etype in _AGG_OBSERVED:
-                _numeric(df, kw["column"])
-                obs = _AGG_OBSERVED[etype](F.col(kw["column"]))
-                entry["obs"] = alias(obs.cast("double"))
-                _between_cond(F.lit(0.0), kw)  # validate bounds eagerly
+            elif etype in _AGG_METRICS:
+                metric = _AGG_METRICS[etype]
+                c = kw.get("column")
+                if metric in _NUMERIC_METRICS:
+                    _numeric(df, c)
+                elif c is not None and c not in df.columns:
+                    raise CompileError(f"column not found: {c!r}")
+                entry["obs"] = alias(_observed(
+                    metric, {"column": c} if c else {}, o))
+                if etype == "expect_table_row_count_to_equal":
+                    entry["equal"] = float(kw["value"])
+                else:
+                    _between_cond(F.lit(0.0), kw)  # validate bounds eagerly
             elif etype == "expect_column_quantile_values_to_be_between":
                 _numeric(df, kw["column"])
                 qr = kw["quantile_ranges"]
@@ -186,33 +208,12 @@ def validate_by(
                         if b is not None and not isinstance(b, (int, float)):
                             raise CompileError(
                                 f"grouped validation supports numeric bounds only, got {b!r}")
-                arr = F.array(*[F.lit(q) for q in qs])
-                col = F.col(kw["column"])
-                expr = (
-                    F.percentile_approx(col, arr, o.percentile_accuracy)
-                    if kw.get("allow_relative_error") or not o.exact_quantiles
-                    else F.percentile(col, arr))
-                entry["qalias"] = alias(expr)
+                qo = (dataclasses.replace(o, exact_quantiles=False)
+                      if kw.get("allow_relative_error") else o)
+                exprs, _ = metric_aggs("column.quantile_values", {
+                    "column": kw["column"], "quantiles": qs}, qo)
+                entry["qalias"] = alias(exprs["v"])
                 entry["ranges"] = ranges
-            elif etype in _COUNT_TYPES:
-                entry["obs"] = alias(F.count(F.lit(1)).cast("double"))
-                if etype == "expect_table_row_count_to_equal":
-                    entry["equal"] = float(kw["value"])
-                else:
-                    _between_cond(F.lit(0.0), kw)
-            elif etype in _DISTINCT_TYPES:
-                c = kw["column"]
-                if c not in df.columns:
-                    raise CompileError(f"column not found: {c!r}")
-                dc = (F.approx_count_distinct(F.col(c)) if o.approx_distinct
-                      else F.count_distinct(F.col(c)))
-                if etype == "expect_column_proportion_of_unique_values_to_be_between":
-                    nn = F.count(F.col(c))
-                    obs = F.when(nn > 0, dc.cast("double") / nn)
-                else:
-                    obs = dc.cast("double")
-                entry["obs"] = alias(obs)
-                _between_cond(F.lit(0.0), kw)
             else:
                 raise CompileError(
                     f"{etype} has whole-table semantics (eager/cross-row "

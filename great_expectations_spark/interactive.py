@@ -13,6 +13,10 @@ resolved one validation-graph wave per metric.
 Spark-first deltas:
   * ``get_metrics`` computes EVERY requested aggregate metric in ONE fused
     ``df.agg`` scan instead of one resolution wave per metric.
+  * ``metric_aggs`` is the one metric-name → aggregate table (the
+    reference's MetricConfiguration registry): the profiler's per-batch
+    ``rule_profiler.batch_metrics`` and ``grouped.validate_by`` resolve
+    through it too, with the compiler's exact-vs-sketch helpers.
   * eager metrics (value_counts, distinct_values, most_common_value) ride
     the same bounded-collect guards the compiler uses
     (``Options.distinct_set_cap``) — nothing unbounded reaches the driver.
@@ -36,6 +40,9 @@ from great_expectations_spark.core.suite import (
 from great_expectations_spark.plans.compiler import (
     Options,
     _bounded_group_counts,
+    _distinct_count_agg,
+    _median_agg,
+    _quantiles_agg,
     supported_expectations,
 )
 from great_expectations_spark.validator import validate
@@ -43,79 +50,119 @@ from great_expectations_spark.validator import validate
 # ---------------------------------------------------------------- metrics
 
 
-def _fused(name: str, kw: dict, o: Options):
-    """(aliased agg exprs, finalize(values)->metric) for one-agg metrics."""
+def _one(expr: Column, post=lambda v: v):
+    return {"v": expr}, lambda d: post(d["v"])
+
+
+def _quantile(col: Column, kw: dict, o: Options):
+    # one scalar quantile (metric_value_kwargs {"quantile": p}), so a
+    # per-batch range builder can envelope any quantile, not just the
+    # median (the reference numeric rule's quantile ranges,
+    # onboarding_data_assistant.py:298)
+    p = float(kw["quantile"])
+    if not 0.0 <= p <= 1.0:
+        raise ValueError(f"quantile must be in [0, 1], got {p}")
+    return _one(_quantiles_agg(col, p, o))
+
+
+def _values_between_count(col: Column, kw: dict, o: Options):
+    cond = F.lit(True)
+    if kw.get("min_value") is not None:
+        lo = F.lit(kw["min_value"])
+        cond = cond & (col > lo if kw.get("strict_min") else col >= lo)
+    if kw.get("max_value") is not None:
+        hi = F.lit(kw["max_value"])
+        cond = cond & (col < hi if kw.get("strict_max") else col <= hi)
+    return _one(F.sum((col.isNotNull() & cond).cast("long")),
+                lambda v: int(v or 0))
+
+
+def _histogram(col: Column, kw: dict, o: Options):
+    # reference column_histogram.py:229-296 (Bucketizer + groupBy): here
+    # the bucket counts are conditional sums fused into the same agg —
+    # [lo,hi) per bin, last bin closed, same as the KL path
+    bins = [float(b) for b in kw["bins"]]
+    exprs = {}
+    for i in range(len(bins) - 1):
+        upper = (col <= F.lit(bins[i + 1])) if i == len(bins) - 2 else (
+            col < F.lit(bins[i + 1]))
+        exprs[f"b{i}"] = F.sum(
+            ((col >= F.lit(bins[i])) & upper).cast("long"))
+    return exprs, lambda d: [int(d[f"b{i}"] or 0)
+                             for i in range(len(bins) - 1)]
+
+
+# metric name -> (col, kwargs, options) -> (agg Columns by tag, finalize)
+_REGISTRY = {
+    "table.row_count": lambda col, kw, o: _one(F.count(F.lit(1))),
+    "column.sum": lambda col, kw, o: _one(F.sum(col)),
+    "column.mean": lambda col, kw, o: _one(F.avg(col)),
+    "column.min": lambda col, kw, o: _one(F.min(col)),
+    "column.max": lambda col, kw, o: _one(F.max(col)),
+    "column.standard_deviation": lambda col, kw, o: _one(F.stddev_samp(col)),
+    "column.median": lambda col, kw, o: _one(_median_agg(col, o)),
+    "column.quantile": _quantile,
+    "column.quantile_values": lambda col, kw, o: _one(
+        _quantiles_agg(col, [float(q) for q in kw["quantiles"]], o),
+        lambda v: list(v) if v is not None else None),
+    "column.distinct_values.count": lambda col, kw, o: _one(
+        _distinct_count_agg(col, o), lambda v: int(v or 0)),
+    "column.unique_proportion": lambda col, kw, o: (
+        {"d": _distinct_count_agg(col, o), "n": F.count(col)},
+        lambda d: (int(d["d"]) / int(d["n"])) if d["n"] else None),
+    "column_values.null.count": lambda col, kw, o: _one(
+        F.sum(col.isNull().cast("long")), lambda v: int(v or 0)),
+    "column_values.nonnull.count": lambda col, kw, o: _one(
+        F.count(col), lambda v: int(v or 0)),
+    "column.values_between.count": _values_between_count,
+    "column_values.length_min": lambda col, kw, o: _one(F.min(F.length(col))),
+    "column_values.length_max": lambda col, kw, o: _one(F.max(F.length(col))),
+    "column.histogram": _histogram,
+}
+
+
+def metric_aggs(name: str, kw: dict, o: Options):
+    """The metric registry: (aggregate Columns by tag, finalize(values by
+    tag) -> metric) for a metric name + domain/value kwargs, or None when
+    the metric has no aggregate form (see ``_eager``). Whole-table
+    ``get_metrics``, the profiler's per-batch ``batch_metrics`` and
+    ``grouped.validate_by`` all resolve through this one table; its
+    exact-vs-sketch choices come from the compiler's helpers."""
+    build = _REGISTRY.get(name)
+    if build is None:
+        return None
     c = kw.get("column")
-    col = F.col(c) if c else None
+    if c is None and not name.startswith("table."):
+        raise ValueError(f"metric {name!r} needs a column domain")
+    return build(F.col(c) if c else None, kw, o)
 
-    def one(expr: Column, post=lambda v: v):
-        return {"v": expr}, lambda d: post(d["v"])
 
-    if name == "table.row_count":
-        return one(F.count(F.lit(1)))
-    if name == "column.sum":
-        return one(F.sum(col))
-    if name == "column.mean":
-        return one(F.avg(col))
-    if name == "column.min":
-        return one(F.min(col))
-    if name == "column.max":
-        return one(F.max(col))
-    if name == "column.standard_deviation":
-        return one(F.stddev_samp(col))
-    if name == "column.median":
-        expr = (F.percentile(col, F.lit(0.5)) if o.exact_median
-                else F.percentile_approx(col, 0.5, o.percentile_accuracy))
-        return one(expr)
-    if name == "column.quantile_values":
-        qs = [float(q) for q in kw["quantiles"]]
-        arr = F.array(*[F.lit(q) for q in qs])
-        expr = (F.percentile(col, arr) if o.exact_quantiles
-                else F.percentile_approx(col, arr, o.percentile_accuracy))
-        return one(expr, lambda v: list(v) if v is not None else None)
-    if name == "column.distinct_values.count":
-        expr = (F.approx_count_distinct(col) if o.approx_distinct
-                else F.count_distinct(col))
-        return one(expr, lambda v: int(v or 0))
-    if name == "column.unique_proportion":
-        dc = (F.approx_count_distinct(col) if o.approx_distinct
-              else F.count_distinct(col))
-        return (
-            {"d": dc, "n": F.count(col)},
-            lambda d: (int(d["d"]) / int(d["n"])) if d["n"] else None,
-        )
-    if name == "column_values.null.count":
-        return one(F.sum(col.isNull().cast("long")), lambda v: int(v or 0))
-    if name == "column_values.nonnull.count":
-        return one(F.count(col), lambda v: int(v or 0))
-    if name == "column.values_between.count":
-        cond = F.lit(True)
-        if kw.get("min_value") is not None:
-            lo = F.lit(kw["min_value"])
-            cond = cond & (col > lo if kw.get("strict_min") else col >= lo)
-        if kw.get("max_value") is not None:
-            hi = F.lit(kw["max_value"])
-            cond = cond & (col < hi if kw.get("strict_max") else col <= hi)
-        return one(F.sum((col.isNotNull() & cond).cast("long")),
-                   lambda v: int(v or 0))
-    if name == "column_values.length_min":
-        return one(F.min(F.length(col)))
-    if name == "column_values.length_max":
-        return one(F.max(F.length(col)))
-    if name == "column.histogram":
-        # reference column_histogram.py:229-296 (Bucketizer + groupBy):
-        # here the bucket counts are conditional sums fused into the same
-        # agg — [lo,hi) per bin, last bin closed, same as the KL path
-        bins = [float(b) for b in kw["bins"]]
-        exprs = {}
-        for i in range(len(bins) - 1):
-            upper = (col <= F.lit(bins[i + 1])) if i == len(bins) - 2 else (
-                col < F.lit(bins[i + 1]))
-            exprs[f"b{i}"] = F.sum(
-                ((col >= F.lit(bins[i])) & upper).cast("long"))
-        return exprs, lambda d: [int(d[f"b{i}"] or 0)
-                                 for i in range(len(bins) - 1)]
-    return None
+def plan_metrics(requests: dict[str, tuple[str, dict[str, Any]]],
+                 o: Options):
+    """Every registry metric among ``requests`` as ONE aliased aggregate
+    list, plus ``finish(row) -> {key: value}`` over a row of those aliases
+    and the keys left for eager resolution."""
+    aggs: list[Column] = []
+    finalize: dict[str, Any] = {}
+    eager: list[str] = []
+    for key, (name, kw) in requests.items():
+        plan = metric_aggs(name, kw, o)
+        if plan is None:
+            eager.append(key)
+            continue
+        exprs, fin = plan
+        aliases = {}
+        for tag, expr in exprs.items():
+            alias = f"m{len(aggs)}"
+            aggs.append(expr.alias(alias))
+            aliases[tag] = alias
+        finalize[key] = (fin, aliases)
+
+    def finish(row) -> dict[str, Any]:
+        return {key: fin({tag: row[a] for tag, a in aliases.items()})
+                for key, (fin, aliases) in finalize.items()}
+
+    return aggs, finish, eager
 
 
 def _eager(df: DataFrame, name: str, kw: dict, o: Options):
@@ -159,12 +206,9 @@ def _eager(df: DataFrame, name: str, kw: dict, o: Options):
             return [lo + i * step for i in range(n_bins)] + [hi]
         if mode == "quantile":
             qs = [i / n_bins for i in range(n_bins + 1)]
-            expr = (F.percentile(col, F.array(*[F.lit(q) for q in qs]))
-                    if o.exact_quantiles
-                    else F.percentile_approx(
-                        col, F.array(*[F.lit(q) for q in qs]),
-                        o.percentile_accuracy))
-            vals = df.agg(expr.alias("q")).head().q
+            vals = get_metrics(df, {"q": (
+                "column.quantile_values", {"column": c, "quantiles": qs})},
+                o)["q"]
             return [float(v) for v in vals] if vals is not None else None
         raise KeyError(f"unsupported column.partition bins mode {mode!r}")
     if name == "column.most_common_value":
@@ -189,12 +233,13 @@ def _eager(df: DataFrame, name: str, kw: dict, o: Options):
             out = pd.DataFrame(columns=list(df.columns))
         return out
     raise KeyError(
-        f"unsupported metric {name!r}; supported: table.row_count, "
-        "table.head, table.columns, table.column_types, column.{sum,mean,min,"
-        "max,standard_deviation,median,quantile_values,distinct_values[.count],"
-        "unique_proportion,value_counts,most_common_value,histogram,"
-        "partition,values_between.count}, column_values.{null,nonnull}.count, "
-        "column_values.length_{min,max}")
+        f"unsupported metric {name!r}; supported: "
+        f"{', '.join(sorted([*_REGISTRY, *_EAGER_METRICS]))}")
+
+
+_EAGER_METRICS = ("table.columns", "table.column_types", "table.head",
+                  "column.value_counts", "column.distinct_values",
+                  "column.partition", "column.most_common_value")
 
 
 def get_metrics(
@@ -211,25 +256,10 @@ def get_metrics(
     run bounded by ``Options.distinct_set_cap``.
     """
     o = options or Options()
-    aggs: dict[str, Column] = {}
-    finalize: dict[str, Any] = {}
-    out: dict[str, Any] = {}
-    for key, (name, kw) in requests.items():
-        plan = _fused(name, kw, o)
-        if plan is None:
-            out[key] = _eager(df, name, kw, o)
-            continue
-        exprs, fin = plan
-        aliases = {}
-        for i, (tag, expr) in enumerate(exprs.items()):
-            alias = f"m{len(aggs)}"
-            aggs[alias] = expr.alias(alias)
-            aliases[tag] = alias
-        finalize[key] = (fin, aliases)
+    aggs, finish, eager = plan_metrics(requests, o)
+    out = {key: _eager(df, *requests[key], o) for key in eager}
     if aggs:
-        row = df.agg(*aggs.values()).head().asDict()
-        for key, (fin, aliases) in finalize.items():
-            out[key] = fin({tag: row[a] for tag, a in aliases.items()})
+        out.update(finish(df.agg(*aggs).head()))
     return out
 
 

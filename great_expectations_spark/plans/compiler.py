@@ -546,18 +546,8 @@ _agg_between("expect_column_max_to_be_between", lambda k, c, o: F.max(c),
              monoid_kind="max")
 _agg_between("expect_column_stdev_to_be_between", lambda k, c, o: F.stddev_samp(c),
              monoid_kind="stdev")
-_agg_between(
-    "expect_column_median_to_be_between",
-    # reference column_median.py:90-121 averages the two middle elements on
-    # even counts (exact approxQuantile) — F.percentile interpolates the
-    # same way; GK sketch variant for 10^12-row runs via exact_median=False
-    lambda k, c, o: (
-        F.percentile(c, F.lit(0.5))
-        if o.exact_median
-        else F.percentile_approx(c, 0.5, o.percentile_accuracy)
-    ),
-    monoid_kind="kll_median",
-)
+_agg_between("expect_column_median_to_be_between",
+             lambda k, c, o: _median_agg(c, o), monoid_kind="kll_median")
 
 
 def _bounded_group_counts(
@@ -586,10 +576,36 @@ def _bounded_group_counts(
     return rows
 
 
-def _distinct_count_agg(kwargs: dict[str, Any], col: Column, options: Options) -> Column:
-    if options.approx_distinct:
+# The exact-vs-sketch choices, made once: the compiler, the metric registry
+# (interactive.metric_aggs) and everything routed through it — per-batch
+# profiler metrics, grouped validation — build these aggregates here.
+
+
+def _median_agg(col: Column, o: Options) -> Column:
+    """Median of ``col``. Reference column_median.py:90-121 averages the two
+    middle elements on even counts (exact approxQuantile) — F.percentile
+    interpolates the same way; GK sketch for 10^12-row runs via
+    ``exact_median=False``."""
+    if o.exact_median:
+        return F.percentile(col, F.lit(0.5))
+    return F.percentile_approx(col, 0.5, o.percentile_accuracy)
+
+
+def _quantiles_agg(col: Column, qs: float | list[float], o: Options) -> Column:
+    """Interpolated (type-7) quantile of ``col`` at one probability, or an
+    array of them for a list: exact F.percentile (buffers the column per
+    group), or the GK sketch when ``exact_quantiles`` is off."""
+    p = (F.array(*[F.lit(float(q)) for q in qs]) if isinstance(qs, (list, tuple))
+         else F.lit(float(qs)))
+    if o.exact_quantiles:
+        return F.percentile(col, p)
+    return F.percentile_approx(col, p, o.percentile_accuracy)
+
+
+def _distinct_count_agg(col: Column, o: Options) -> Column:
+    if o.approx_distinct:
         return F.approx_count_distinct(col)  # HLL++
-    return F.countDistinct(col)
+    return F.count_distinct(col)
 
 
 @compiler("expect_column_unique_value_count_to_be_between")
@@ -599,7 +615,7 @@ def _unique_count(config: ExpectationConfiguration, options: Options) -> Compile
     col = _guard(F.col(kwargs["column"]), rc)
     mode = "approx" if options.approx_distinct else "exact"
     key = f"column.distinct_count.{mode}|{kwargs['column']}|{_rc_id(kwargs)}"
-    aggs = {key: _distinct_count_agg(kwargs, col, options)}
+    aggs = {key: _distinct_count_agg(col, options)}
     k_hll = None
     if options.chunk_monoids:
         k_hll = f"monoid.hll|{kwargs['column']}|{_rc_id(kwargs)}"
@@ -629,7 +645,7 @@ def _unique_proportion(config: ExpectationConfiguration, options: Options) -> Co
     k_distinct = f"column.distinct_count.{mode}|{c}|{_rc_id(kwargs)}"
     k_nonnull = f"column.nonnull|{c}|{_rc_id(kwargs)}"
     aggs = {
-        k_distinct: _distinct_count_agg(kwargs, col, options),
+        k_distinct: _distinct_count_agg(col, options),
         k_nonnull: F.count(col),
     }
     k_hll = None
@@ -696,7 +712,8 @@ def _quantiles(config: ExpectationConfiguration, options: Options) -> Compiled:
                 d = d.where(rc)
             return {key: d.stat.approxQuantile(c, [float(q) for q in quantiles], 0.0)}
     else:
-        aggs[key] = F.percentile_approx(col, quantiles, accuracy)
+        aggs[key] = _quantiles_agg(col, quantiles, dataclasses.replace(
+            options, exact_quantiles=False, percentile_accuracy=accuracy))
 
     def finalize(metrics: Metrics) -> EVR:
         values = _py(metrics.get(key)) or [None] * len(quantiles)

@@ -33,9 +33,14 @@ parameter as its own metric-resolution wave):
           Metric/ValueSet/ValueCounts/Histogram parameter request of
           every (rule × domain) — agg-expressible metrics fuse into one
           scan there; eager ones stay bounded
-  pass 2b ONE ``groupBy(chunk).agg`` per distinct (n_chunks, chunk_by)
-          for all NumericMetricRange builders (pseudo-batch emulation,
-          see below), then driver-side ``assistant.estimate_range``
+  pass 2b ONE ``batch_metrics`` call — one ``groupBy(batch).agg`` — per
+          distinct batching (real splitter spec or (n_chunks, chunk_by)
+          pseudo-chunks, see below) for all NumericMetricRange builders
+          and per-batch MetricMultiBatch builders, then driver-side
+          ``assistant.estimate_range``. Passes 2 and 2b resolve metrics
+          through the same registry (``interactive.metric_aggs``), so a
+          metric and its exact-vs-sketch choice under ``Options`` are the
+          same whole-table and per batch
   pass 2c ONE ``profiler.infer_formats`` scan per distinct candidate
           list for all date-format/regex builders
   pass 3  expectation building: pure driver-side substitution +
@@ -49,10 +54,13 @@ column_value / mod_integer / ..., see ``batch_key_expr``) and every
 its metric per REAL batch slice, all batches riding ONE
 ``groupBy(batch_key)`` instead of the reference's N per-batch jobs — the
 exchange count is independent of the batch count (pinned by
-tests/test_plan_shapes.py). Without a ``batch_spec`` the builders fall
-back to deterministic pseudo-chunks — an engine-portable md5 hash of
-``chunk_by`` modulo ``n_chunks`` (the ``assistant.chunk_metrics``
-convention) — which is the same one-groupBy shape with synthetic keys.
+tests/test_plan_shapes.py). Every metric with an aggregate form resolves
+per batch; the eager ones (value_counts, distinct_values,
+most_common_value, partition, table schema metrics) keep the single-batch
+value. Without a ``batch_spec`` the builders fall back to deterministic
+pseudo-chunks — an engine-portable md5 hash of ``chunk_by`` modulo
+``n_chunks`` (``_portable_chunk_key``) — which is the same one-groupBy
+shape with synthetic keys.
 """
 
 from __future__ import annotations
@@ -72,7 +80,7 @@ from great_expectations_spark.core.suite import (
 )
 
 __all__ = ["run_rule_based_profiler", "RuleBasedProfilerResult",
-           "batch_key_expr"]
+           "batch_key_expr", "batch_metrics"]
 
 
 # --------------------------------------------------------------- cardinality
@@ -172,7 +180,9 @@ def _resolve_domains(
     Categorical/MapMetric builder's statistics ride ONE fused df.agg."""
     out: dict[str, list[_Domain]] = {}
     # (rule, candidate cols, decide(count_row) -> cols) deferred until the
-    # single fused agg has run
+    # single fused agg has run. Distinct counts here stay exact whatever
+    # Options says (not the registry's sketch-able form): uniqueness and
+    # cardinality-limit admission compare them against exact thresholds.
     fused_aggs: dict[str, Column] = {"__n__": F.count(F.lit(1)).alias("__n__")}
     deferred: list[tuple[str, Any]] = []
 
@@ -470,46 +480,9 @@ def _eval_condition(cond: str, variables: dict, domain: _Domain,
 # --------------------------------------------------------- parameter phase
 
 
-# metric_name → per-chunk aggregate, for the numeric-range pseudo-batch
-# pass (numeric_metric_range_multi_batch_parameter_builder.py:86 resolves
-# the same names per batch)
-def _chunk_agg(metric: str, kw: dict[str, Any]) -> Column:
-    c = kw.get("column")
-    col = F.col(c) if c else None
-
-    def one_quantile():
-        # "column.quantile" with metric_value_kwargs {"quantile": p}: one
-        # scalar per batch, so a NumericMetricRange builder can envelope
-        # any quantile, not just the median (the reference numeric rule's
-        # quantile ranges, onboarding_data_assistant.py:298)
-        p = float(kw["quantile"])
-        if not 0.0 <= p <= 1.0:
-            raise ValueError(f"quantile must be in [0, 1], got {p}")
-        return F.percentile(col, F.lit(p))
-
-    table = {
-        "table.row_count": lambda: F.count(F.lit(1)),
-        "column.min": lambda: F.min(col),
-        "column.max": lambda: F.max(col),
-        "column.mean": lambda: F.avg(col),
-        "column.sum": lambda: F.sum(col),
-        "column.median": lambda: F.expr(f"percentile({c}, 0.5)"),
-        "column.quantile": one_quantile,
-        "column.standard_deviation": lambda: F.stddev_samp(col),
-        "column.distinct_values.count": lambda: F.count_distinct(col),
-    }
-    if metric not in table:
-        raise ValueError(
-            f"NumericMetricRange metric {metric!r} not chunk-aggregable "
-            f"(supported: {sorted(table)})")
-    if metric != "table.row_count" and not c:
-        raise ValueError(f"metric {metric!r} needs a column domain")
-    return table[metric]()
-
-
 def _portable_chunk_key(chunk_by: str, n_chunks: int) -> Column:
     """Engine-portable pseudo-batch id: md5-derived 60-bit int of the
-    chunk column modulo n_chunks (the assistant oracle's convention) —
+    chunk column modulo n_chunks —
     replayable as ``('0x'||substr(md5(CAST(c AS VARCHAR)),1,15))::BIGINT
     % n`` in ANSI-ish SQL."""
     from great_expectations_spark.pipeline.dedup import _md5_int
@@ -606,15 +579,44 @@ def _sub_variables(obj: Any, rule_vars: dict, domain: _Domain) -> Any:
     return obj
 
 
-def chunk_aggregate_frame(df: DataFrame, key: Column,
-                          aggs: list[Column]) -> DataFrame:
+def chunk_aggregate_frame(
+    df: DataFrame, key: Column,
+    requests: dict[str, tuple[str, dict[str, Any]]], options: Any = None,
+) -> tuple[DataFrame, Any]:
     """The multi-batch resolution plan: ONE partial-aggregated groupBy on
-    the batch key carrying every builder's aggregate — its exchange count
-    is 1 regardless of how many batches the splitter resolves (plan shape
-    pinned by tests/test_plan_shapes.py)."""
-    return (df.groupBy(key.alias("__chunk"))
-            .agg(*aggs)
-            .orderBy(F.col("__chunk").asc_nulls_first()))
+    the batch key carrying every request's registry aggregates
+    (``interactive.metric_aggs``) — its exchange count is 1 regardless of
+    how many batches the splitter resolves (plan shape pinned by
+    tests/test_plan_shapes.py). Returns ``(frame, finish)``;
+    ``finish(row)`` maps one batch row to ``{request key: value}``."""
+    from great_expectations_spark.interactive import plan_metrics
+    from great_expectations_spark.plans.compiler import Options
+
+    aggs, finish, eager = plan_metrics(requests, options or Options())
+    if eager:
+        raise ValueError(
+            "metrics with no per-batch aggregate form: "
+            f"{sorted({requests[k][0] for k in eager})}")
+    frame = (df.groupBy(key.alias("__chunk"))
+             .agg(*aggs)
+             .orderBy(F.col("__chunk").asc_nulls_first()))
+    return frame, finish
+
+
+def batch_metrics(
+    df: DataFrame,
+    requests: dict[str, tuple[str, dict[str, Any]]],
+    key: Column,
+    options: Any = None,
+) -> list[tuple[Any, dict[str, Any]]]:
+    """``requests`` (caller key -> (metric_name, kwargs), the
+    ``get_metrics`` shape) resolved per batch of ``key``:
+    ``[(batch_id, {request key: value})]`` in batch-id order, all from ONE
+    ``groupBy(key).agg`` — the driver holds one row per batch. Metrics,
+    and their exact-vs-sketch choices under ``options``, are the ones
+    ``get_metrics`` computes over the whole table."""
+    frame, finish = chunk_aggregate_frame(df, key, requests, options)
+    return [(r["__chunk"], finish(r)) for r in frame.collect()]
 
 
 def _sorted_value_set(vals: list[Any]) -> list[Any]:
@@ -633,12 +635,12 @@ def _resolve_parameters(
     batch_specs: dict[str, dict | None] | None = None,
 ) -> dict[tuple[str, _Domain], dict[str, dict]]:
     """Every (rule × domain × parameter_builder), with all single-batch
-    metrics fused into ONE get_metrics call, all numeric-range chunk aggs
-    into ONE groupBy per distinct batching (real splitter spec or
+    metrics fused into ONE get_metrics call, all per-batch metrics into
+    ONE batch_metrics groupBy per distinct batching (real splitter spec or
     (n_chunks, chunk_by) pseudo-chunk fallback), and all format builders
     into ONE infer_formats per candidate list."""
     from great_expectations_spark.assistant import estimate_range
-    from great_expectations_spark.interactive import get_metrics
+    from great_expectations_spark.interactive import get_metrics, metric_aggs
     from great_expectations_spark.profiler import (
         CANDIDATE_REGEXES,
         CANDIDATE_STRFTIME,
@@ -651,7 +653,8 @@ def _resolve_parameters(
     batch_specs = batch_specs or {}
     metric_requests: dict[str, tuple[str, dict]] = {}
     metric_sinks: list[tuple[tuple[str, _Domain], str, str, str]] = []
-    # plan_key -> {"key": batch-key Column, "aggs": {alias: agg Column}};
+    # plan_key -> {"key": batch-key Column, "requests": {alias: (metric,
+    # kwargs)}, "label": str};
     # plan_key is ("real", json-sig) for a genuine splitter batching or
     # ("pseudo", n_chunks, chunk_by) for the md5 fallback — ONE groupBy
     # per distinct batching regardless of builder or batch count
@@ -697,53 +700,48 @@ def _resolve_parameters(
                                                  sort_keys=True))
                         if pk not in chunk_plans:
                             kcol, label = batch_key_expr(df, spec_or_none)
-                            chunk_plans[pk] = {"key": kcol, "aggs": {},
+                            chunk_plans[pk] = {"key": kcol, "requests": {},
                                                "label": label}
                         return pk
                     pk = ("pseudo", n_chunks, chunk_by)
                     if pk not in chunk_plans:
                         chunk_plans[pk] = {
                             "key": _portable_chunk_key(chunk_by, n_chunks),
-                            "aggs": {},
+                            "requests": {},
                             "label": f"md5({chunk_by})%{n_chunks}"}
                     return pk
 
-                if cls == "MetricMultiBatchParameterBuilder" and \
-                        rule_spec is not None:
-                    # real batches: one per-batch value per resolved batch
-                    # (reference metric_multi_batch_parameter_builder.py
-                    # resolves the metric for every Batch), riding the
-                    # shared groupBy(batch_key). Metrics with no per-chunk
-                    # aggregate form (value_counts, histogram, ...) keep
-                    # the single-batch degradation instead of erroring.
+                def add_chunk_request(plan_key, metric, mkw):
+                    requests = chunk_plans[plan_key]["requests"]
+                    alias = f"c{len(requests)}"
+                    requests[alias] = (metric, mkw)
+                    return alias
+
+                if cls in ("MetricSingleBatchParameterBuilder",
+                           "MetricMultiBatchParameterBuilder"):
                     dk = domain_kwargs_for(pb, domain, rule_vars)
                     metric = pb["metric_name"]
-                    try:
-                        agg = _chunk_agg(
-                            metric,
-                            {**dk, **(pb.get("metric_value_kwargs") or {})})
-                    except ValueError:
+                    mkw = {**dk, **(pb.get("metric_value_kwargs") or {})}
+                    if (cls == "MetricMultiBatchParameterBuilder"
+                            and rule_spec is not None
+                            and metric_aggs(metric, mkw, options) is not None):
+                        # real batches: one per-batch value per resolved
+                        # batch (reference metric_multi_batch_parameter_
+                        # builder.py resolves the metric for every Batch),
+                        # riding the shared groupBy(batch_key)
+                        plan_key = plan_for(rule_spec, 0, "")
+                        alias = add_chunk_request(plan_key, metric, mkw)
+                        chunk_sinks.append((key, name, plan_key, alias, {
+                            "mode": "multibatch_values",
+                            "metric_name": metric,
+                        }))
+                    else:
+                        # single batch; eager metrics (value_counts,
+                        # distinct_values, partition, table.* schema, ...)
+                        # keep the single-batch value under a batch_spec
                         alias = f"m{len(metric_requests)}"
-                        vk = pb.get("metric_value_kwargs") or {}
-                        metric_requests[alias] = (metric, {**dk, **vk})
+                        metric_requests[alias] = (metric, mkw)
                         metric_sinks.append((key, name, alias, cls))
-                        continue
-                    plan_key = plan_for(rule_spec, 0, "")
-                    plan = chunk_plans[plan_key]
-                    alias = f"c{len(plan['aggs'])}"
-                    plan["aggs"][alias] = agg.alias(alias)
-                    chunk_sinks.append((key, name, plan_key, alias, {
-                        "mode": "multibatch_values",
-                        "metric_name": metric,
-                    }))
-                elif cls in ("MetricSingleBatchParameterBuilder",
-                             "MetricMultiBatchParameterBuilder"):
-                    dk = domain_kwargs_for(pb, domain, rule_vars)
-                    vk = pb.get("metric_value_kwargs") or {}
-                    metric = pb["metric_name"]
-                    alias = f"m{len(metric_requests)}"
-                    metric_requests[alias] = (metric, {**dk, **vk})
-                    metric_sinks.append((key, name, alias, cls))
                 elif cls == "NumericMetricRangeMultiBatchParameterBuilder":
                     dk = domain_kwargs_for(pb, domain, rule_vars)
                     metric = pb["metric_name"]
@@ -753,13 +751,13 @@ def _resolve_parameters(
                     # an explicit builder-level chunk_by opts out of the
                     # rule's real batching for THIS parameter
                     spec = None if "chunk_by" in pb else rule_spec
+                    mkw = {**dk, **(pb.get("metric_value_kwargs") or {})}
+                    if metric_aggs(metric, mkw, options) is None:
+                        raise ValueError(
+                            f"NumericMetricRange metric {metric!r} has no "
+                            "per-batch aggregate form")
                     plan_key = plan_for(spec, n_chunks, chunk_by)
-                    plan = chunk_plans[plan_key]
-                    alias = f"c{len(plan['aggs'])}"
-                    plan["aggs"][alias] = _chunk_agg(
-                        metric,
-                        {**dk, **(pb.get("metric_value_kwargs") or {})}
-                    ).alias(alias)
+                    alias = add_chunk_request(plan_key, metric, mkw)
                     chunk_sinks.append((key, name, plan_key, alias, {
                         "mode": "range",
                         "estimator": pb.get("estimator", "bootstrap"),
@@ -847,25 +845,28 @@ def _resolve_parameters(
 
     # pass 2b: one groupBy per distinct batching (real or pseudo) — the
     # driver holds one row per batch, never per input row
-    chunk_rows: dict[tuple, list] = {}
-    for plan_key, plan in chunk_plans.items():
-        chunk_rows[plan_key] = chunk_aggregate_frame(
-            df, plan["key"], list(plan["aggs"].values())).collect()
+    chunk_rows = {
+        plan_key: batch_metrics(df, plan["requests"], plan["key"], options)
+        for plan_key, plan in chunk_plans.items()}
     for key, name, plan_key, alias, spec in chunk_sinks:
         rows = chunk_rows[plan_key]
         real = plan_key[0] == "real"
         if spec["mode"] == "multibatch_values":
             out[key][name] = {
-                "value": [r[alias] for r in rows],
+                "value": [vals[alias] for _, vals in rows],
                 "details": {
                     "metric_configuration": {
                         "metric_name": spec["metric_name"]},
                     "num_batches": len(rows),
-                    "batch_identifiers": [str(r["__chunk"]) for r in rows],
+                    "batch_identifiers": [str(b) for b, _ in rows],
                     "batching": chunk_plans[plan_key]["label"],
                 }}
             continue
-        values = [r[alias] for r in rows if r[alias] is not None]
+        values = [vals[alias] for _, vals in rows if vals[alias] is not None]
+        if any(isinstance(v, list) for v in values):
+            raise ValueError(
+                f"NumericMetricRange metric {spec['metric_name']!r} is not "
+                "scalar")
         details = {
             "estimator": spec["estimator"],
             "metric_configuration": {"metric_name": spec["metric_name"]},
@@ -873,7 +874,7 @@ def _resolve_parameters(
             "batching": chunk_plans[plan_key]["label"],
         }
         if real:
-            details["batch_identifiers"] = [str(r["__chunk"]) for r in rows]
+            details["batch_identifiers"] = [str(b) for b, _ in rows]
         else:
             details["chunk_by"] = spec["chunk_by"]
         if not values:
@@ -983,7 +984,8 @@ def run_rule_based_profiler(
     config level (``config["batch_spec"]``) or per rule
     (``rule["batch_spec"]``, most specific wins). Without one,
     ``NumericMetricRange*`` builders fall back to md5 pseudo-chunks and
-    ``MetricMultiBatch`` degrades to the single-batch value, as before.
+    ``MetricMultiBatch`` degrades to the single-batch value; with one,
+    only eager metrics (value_counts, distinct_values, ...) do.
 
     Oracles: rule_profiler_events (ranges + categorical value sets
     replayed in DuckDB at the digit level), rule_profiler_real_batches

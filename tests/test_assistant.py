@@ -1,11 +1,14 @@
-"""Onboarding assistant: calibrated suite generation (assistant.py)."""
+"""Onboarding assistant (data_assistant.run_onboarding_assistant), the
+per-batch metric plan it rides (rule_profiler.batch_metrics), and the
+numeric-range estimators (assistant.py)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from great_expectations_spark.assistant import chunk_metrics, onboarding_suite
+from great_expectations_spark.data_assistant import run_onboarding_assistant
+from great_expectations_spark.rule_profiler import batch_metrics
 from great_expectations_spark.validator import validate
 
 SF = "/root/testdata/sf0.001"
@@ -16,51 +19,44 @@ def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").cache()
 
 
-def test_suite_passes_on_profiled_data(spark, docs):
-    suite = onboarding_suite(docs)
-    res = validate(docs, suite, result_format="BOOLEAN_ONLY")
-    failed = [r.expectation_config.expectation_type for r in res.results if not r.success]
-    assert res.success, failed
+@pytest.fixture(scope="module")
+def docs_suite(spark, docs):
+    return run_onboarding_assistant(docs).suite
 
 
-def test_suite_passes_on_same_distribution_holdout(spark, docs):
-    # disjoint 30% holdout: row count and id extremes legitimately differ
-    # (same caveat as the reference assistant), so calibrate on the
-    # distribution-stable columns with a wider margin and no row-count
-    from great_expectations_spark.pipeline.sampling import train_holdout_split
-
-    train, holdout = train_holdout_split(docs, "doc_id", holdout_fraction=0.3)
-    suite = onboarding_suite(
-        train, columns=["n_chars", "lang", "text"], margin=0.25,
-        include_row_count=False,
-    )
-    res = validate(holdout, suite, result_format="BOOLEAN_ONLY")
-    failed = [r.expectation_config.expectation_type for r in res.results if not r.success]
-    assert res.success, failed
+def _failed(res):
+    return {r.expectation_config.expectation_type
+            for r in res.results if not r.success}
 
 
-def test_suite_fails_on_drifted_data(spark, docs):
-    suite = onboarding_suite(docs, columns=["n_chars", "lang"])
+def test_suite_passes_on_profiled_data(spark, docs, docs_suite):
+    res = validate(docs, docs_suite, result_format="BOOLEAN_ONLY")
+    assert res.success, _failed(res)
+
+
+def test_suite_fails_on_drifted_data(spark, docs, docs_suite):
     # shift the numeric column far outside the envelope; inject an unseen
     # category
     drifted = docs.withColumn("n_chars", F.col("n_chars") + F.lit(10**6)) \
                   .withColumn("lang", F.lit("??"))
-    res = validate(drifted, suite, result_format="BOOLEAN_ONLY")
+    res = validate(drifted, docs_suite, result_format="BOOLEAN_ONLY")
     assert not res.success
-    failed = {r.expectation_config.expectation_type for r in res.results if not r.success}
+    failed = _failed(res)
     assert "expect_column_mean_to_be_between" in failed
+    assert "expect_column_values_to_be_in_set" in failed
 
 
-def test_suite_fails_on_null_surge(spark, docs):
-    suite = onboarding_suite(docs, columns=["text"])
+def test_suite_fails_on_null_surge(spark, docs, docs_suite):
     surged = docs.withColumn(
         "text", F.when(F.pmod(F.col("doc_id"), 2) == 0, None).otherwise(F.col("text")))
-    res = validate(surged, suite, result_format="BOOLEAN_ONLY")
+    res = validate(surged, docs_suite, result_format="BOOLEAN_ONLY")
     assert not res.success
+    assert "expect_column_values_to_not_be_null" in _failed(res)
 
 
 def test_high_cardinality_column_gets_no_in_set(spark, docs):
-    suite = onboarding_suite(docs, columns=["text", "lang"], set_cardinality_cap=5)
+    suite = run_onboarding_assistant(
+        docs, cardinality_limit_mode="VERY_FEW").suite
     types_by_col = {}
     for e in suite.expectations:
         types_by_col.setdefault(e.kwargs.get("column"), set()).add(e.expectation_type)
@@ -69,52 +65,48 @@ def test_high_cardinality_column_gets_no_in_set(spark, docs):
     assert "expect_column_values_to_be_in_set" in types_by_col.get("lang", set())
 
 
-def test_chunk_metrics_shape_and_determinism(spark, docs):
-    m1 = chunk_metrics(docs, ["n_chars", "lang"], n_chunks=4)
-    assert {r["chunk"] for r in m1.collect()} <= {0, 1, 2, 3}
-    a = sorted(tuple(r) for r in m1.select("chunk", "n_rows", "n_chars__mean").collect())
-    b = sorted(
-        tuple(r)
-        for r in chunk_metrics(docs.repartition(9), ["n_chars", "lang"], n_chunks=4)
-        .select("chunk", "n_rows", "n_chars__mean").collect()
-    )
-    assert a == b
-
-
 def test_explicit_chunk_column_used_verbatim(spark, docs):
     key = F.pmod(F.col("doc_id"), F.lit(3))
-    m = chunk_metrics(docs, ["n_chars"], n_chunks=3, chunk_by=key)
-    assert {r["chunk"] for r in m.collect()} == {0, 1, 2}
+    rows = batch_metrics(docs, {"n": ("table.row_count", {})}, key)
+    assert [b for b, _ in rows] == [0, 1, 2]
 
 
 def test_bad_args(spark, docs):
+    key = F.pmod(F.col("doc_id"), F.lit(3))
+    with pytest.raises(ValueError):  # no aggregate form
+        batch_metrics(docs, {"m": ("column.value_counts", {"column": "lang"})},
+                      key)
+    with pytest.raises(ValueError):  # column metric without a column
+        batch_metrics(docs, {"m": ("column.mean", {})}, key)
     with pytest.raises(ValueError):
-        chunk_metrics(docs, ["nope"])
-    with pytest.raises(ValueError):
-        chunk_metrics(docs, ["lang"], n_chunks=1)
-    with pytest.raises(ValueError):
-        onboarding_suite(docs, margin=1.5)
+        run_onboarding_assistant(docs, exclude_column_names=list(docs.columns))
 
 
 def test_empty_input(spark):
     df = spark.createDataFrame([], "a long, b string")
-    suite = onboarding_suite(df)
-    kinds = {e.expectation_type for e in suite.expectations}
-    assert kinds == {"expect_table_row_count_to_be_between"}
+    suite = run_onboarding_assistant(df).suite
+    res = validate(df, suite, result_format="BOOLEAN_ONLY")
+    assert res.success, _failed(res)
+    row_counts = [e for e in suite.expectations
+                  if e.expectation_type == "expect_table_row_count_to_be_between"]
+    assert [(e.kwargs["min_value"], e.kwargs["max_value"])
+            for e in row_counts] == [(0, 0)]
 
 
 def test_suite_passes_on_chunk_correlated_column(spark):
-    """A low-cardinality numeric column content-hashes into value-pure
-    chunks (per-chunk std 0) while the whole-table std is large — the
-    between-chunk variance term. The stdev envelope must still contain
-    the whole-table value (Chan merge), or the suite fails the very data
-    it profiled."""
+    """A low-cardinality numeric column splits into value-pure chunks
+    (per-chunk std 0) while the whole-table std is large — the
+    between-chunk variance term. The assistant emits no chunk-envelope
+    stdev bound for exactly this reason, so its suite still validates
+    green on the data it profiled."""
     df = spark.createDataFrame(
         [(float(0.0),)] * 50 + [(float(1000.0),)] * 50, "flag double")
-    suite = onboarding_suite(df, columns=["flag"])
-    res = validate(df, suite, result_format="BOOLEAN_ONLY")
-    failed = [r.expectation_config.expectation_type for r in res.results if not r.success]
-    assert res.success, failed
+    res_suite = run_onboarding_assistant(df)
+    assert "stdev_range" in res_suite.parameters["numeric_columns_rule"]["flag"]
+    kinds = {e.expectation_type for e in res_suite.suite.expectations}
+    assert "expect_column_stdev_to_be_between" not in kinds
+    res = validate(df, res_suite.suite, result_format="BOOLEAN_ONLY")
+    assert res.success, _failed(res)
 
 
 # ---- numeric-range estimators (reference parity) ---------------------------
@@ -159,47 +151,14 @@ def test_bootstrap_bias_correction_branches():
     assert lo == pytest.approx(5.0) and hi == pytest.approx(5.0)
 
 
-def test_bootstrap_tighter_than_envelope(spark, docs):
-    """VERDICT r2 #3 'done' criterion: at equal false-alarm behavior on a
-    same-distribution holdout, the bootstrap estimator's numeric bounds
-    are tighter than the relative-margin envelope's."""
-    from great_expectations_spark.assistant import onboarding_suite
-    from great_expectations_spark.pipeline.sampling import train_holdout_split
-    from great_expectations_spark.validator import validate
-
-    train, holdout = train_holdout_split(docs, "doc_id", holdout_fraction=0.3)
-    kw = dict(columns=["n_chars"], include_row_count=False)
-    env_suite = onboarding_suite(train, margin=0.25, **kw)
-    boot_suite = onboarding_suite(
-        train, estimator="bootstrap", false_positive_rate=0.1, **kw)
-
-    def width(suite, etype):
-        for e in suite.expectations:
-            if e.expectation_type == etype:
-                return e.kwargs["max_value"] - e.kwargs["min_value"]
-        raise AssertionError(f"{etype} not in suite")
-
-    for etype in ("expect_column_mean_to_be_between",):
-        assert width(boot_suite, etype) < width(env_suite, etype)
-
-    # no false alarm on the holdout for the numeric-stat expectations
-    # (the reference contract at the chosen fpr); min/max point stats on a
-    # 30% subsample legitimately move, so check the distribution-stable
-    # mean/std bounds
-    res = validate(holdout, boot_suite, result_format="BOOLEAN_ONLY")
-    by_type = {r.expectation_config.expectation_type: r.success for r in res.results}
-    assert by_type["expect_column_mean_to_be_between"], boot_suite.expectations
-    assert by_type["expect_column_stdev_to_be_between"], boot_suite.expectations
-
-
 def test_estimator_suite_passes_on_profiled_data(spark, docs):
     for est in ("exact", "quantiles"):
-        suite = onboarding_suite(
-            docs, columns=["n_chars"], estimator=est, include_row_count=False)
+        suite = run_onboarding_assistant(docs, estimator=est).suite
         res = validate(docs, suite, result_format="BOOLEAN_ONLY")
         # exact bounds contain the observed stats by construction;
         # quantiles at default fpr clip the chunk extremes, so only the
         # within-bounds stats are guaranteed — check mean specifically
-        by_type = {r.expectation_config.expectation_type: r.success
+        by_type = {(r.expectation_config.expectation_type,
+                    r.expectation_config.kwargs.get("column")): r.success
                    for r in res.results}
-        assert by_type["expect_column_mean_to_be_between"], est
+        assert by_type[("expect_column_mean_to_be_between", "n_chars")], est

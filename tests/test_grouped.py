@@ -5,12 +5,14 @@ validate() returns on df.where(group == g) — same counts, same mostly
 semantics, same between verdicts — without running one job per group.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from great_expectations_spark import ExpectationSuite, validate
 from great_expectations_spark.grouped import validate_by, violations_by
-from great_expectations_spark.plans.compiler import CompileError
+from great_expectations_spark.plans.compiler import CompileError, Options
 
 SUITE = (
     ExpectationSuite("grp")
@@ -98,14 +100,24 @@ def test_quantile_ranges_per_group(spark, df):
         .add("expect_column_quantile_values_to_be_between", column="v",
              quantile_ranges={"quantiles": [0.5],
                               "value_ranges": [[1000, None]]})
+        .add("expect_column_median_to_be_between", column="v",
+             min_value=30, max_value=50)
     )
-    rows = {(r.g, r.expectation_index): r
-            for r in validate_by(df, suite, ["g"]).collect()}
-    for g in ("a", "b", "c"):
-        ref = validate(df.where(F.col("g") == g), suite)
-        assert rows[(g, 0)].success == ref.results[0].success
-        assert rows[(g, 1)].success is False  # median nowhere near 1000
-        assert rows[(g, 0)].observed_value is None
+    # the default exact median, then the sketch validate() would use
+    for opts, median_fn in ((Options(), "percentile"),
+                            (Options(exact_median=False), "percentile_approx")):
+        out = validate_by(df, suite, ["g"], options=opts)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert re.search(rf"{median_fn}\(v#\d+, 0\.5,", plan), plan
+        rows = {(r.g, r.expectation_index): r for r in out.collect()}
+        for g in ("a", "b", "c"):
+            ref = validate(df.where(F.col("g") == g), suite, options=opts)
+            assert rows[(g, 0)].success == ref.results[0].success
+            assert rows[(g, 1)].success is False  # median nowhere near 1000
+            assert rows[(g, 0)].observed_value is None
+            assert rows[(g, 2)].success == ref.results[2].success
+            assert rows[(g, 2)].observed_value == pytest.approx(
+                float(ref.results[2].result["observed_value"]))
 
 
 def test_string_only_map_type_needs_string_column(spark, df):

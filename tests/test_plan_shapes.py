@@ -328,12 +328,13 @@ def test_compression_ratio_row_local_arrow_no_exchange(spark, fresh_docs):
 
 
 def test_rule_profiler_real_batches_single_exchange(spark, tmp_path):
-    """Real-batch MultiBatch resolution (rule_profiler.chunk_aggregate_frame
-    over batch_key_expr) is ONE groupBy: exactly one aggregate Exchange
-    with map-side partial aggregation, and the exchange count does NOT
-    grow with the batch count (30 day-batches vs 5 mod-batches — same
-    plan shape). This is what keeps a 10^12-row date-partitioned profile
-    run at one shuffle instead of N per-batch jobs."""
+    """Real-batch MultiBatch resolution (rule_profiler.batch_metrics'
+    chunk_aggregate_frame over batch_key_expr, fed registry metric
+    requests) is ONE groupBy: exactly one aggregate Exchange with map-side
+    partial aggregation, and the exchange count does NOT grow with the
+    batch count (30 day-batches vs 5 mod-batches — same plan shape). This
+    is what keeps a 10^12-row date-partitioned profile run at one shuffle
+    instead of N per-batch jobs."""
     from great_expectations_spark.rule_profiler import (
         batch_key_expr,
         chunk_aggregate_frame,
@@ -346,9 +347,9 @@ def test_rule_profiler_real_batches_single_exchange(spark, tmp_path):
     for spec in ({"splitter": "date_part", "column": "ts", "part": "day"},
                  {"splitter": "mod_integer", "column": "event_id", "mod": 5}):
         key, _ = batch_key_expr(events, spec)
-        frame = chunk_aggregate_frame(
-            events, key, [F.avg("value").alias("c0"),
-                          F.count(F.lit(1)).alias("c1")])
+        frame, _ = chunk_aggregate_frame(
+            events, key, {"c0": ("column.mean", {"column": "value"}),
+                          "c1": ("table.row_count", {})})
         plan = _plan(frame)
         # one aggregate exchange (+ the orderBy's range exchange), never
         # one per batch

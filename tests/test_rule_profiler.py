@@ -632,7 +632,7 @@ def test_metric_multibatch_nonaggregable_falls_back_single_batch(spark, events):
     """Under a real batch_spec, a MetricMultiBatch metric with no
     per-chunk aggregate form (column.value_counts) degrades to the
     single-batch value instead of erroring, while aggregable siblings in
-    the same rule still resolve per batch."""
+    the same rule (row count, histogram) still resolve per batch."""
     cfg = {
         "name": "fb", "config_version": 1.0,
         "batch_spec": {"splitter": "date_part", "column": "ts",
@@ -648,13 +648,27 @@ def test_metric_multibatch_nonaggregable_falls_back_single_batch(spark, events):
                 {"name": "daily_n",
                  "class_name": "MetricMultiBatchParameterBuilder",
                  "metric_name": "table.row_count",
-                 "metric_domain_kwargs": "$domain.domain_kwargs"}],
+                 "metric_domain_kwargs": "$domain.domain_kwargs"},
+                {"name": "hist",
+                 "class_name": "MetricMultiBatchParameterBuilder",
+                 "metric_name": "column.histogram",
+                 "metric_domain_kwargs": {"column": "value"},
+                 "metric_value_kwargs": {"bins": [-1e9, 0.0, 1e9]}}],
             "expectation_configuration_builders": []}}}
     res = run_rule_based_profiler(events, cfg)
     p = res.parameters["r"]["event_type"]
     assert p["vc"]["details"]["num_batches"] == 1  # single-batch fallback
     assert sum(n for _v, n in p["vc"]["value"][0]) <= events.count()
     assert p["daily_n"]["details"]["num_batches"] == 30  # real batches
+    # the histogram has an aggregate form, so it resolves per real batch
+    hist = p["hist"]
+    assert hist["details"]["num_batches"] == 30
+    per_day = {str(r["d"]): r["n"] for r in events.where(F.col("value").isNotNull())
+               .groupBy(F.dayofmonth("ts").alias("d"))
+               .agg(F.count(F.lit(1)).alias("n")).collect()}
+    for day, counts in zip(hist["details"]["batch_identifiers"],
+                           hist["value"]):
+        assert sum(counts) == per_day.get(day, 0)
 
 
 def test_quantile_chunk_metric_range(spark, events):
@@ -697,3 +711,92 @@ def test_quantile_chunk_metric_range(spark, events):
                      "metric_value_kwargs": {"quantile": 1.5},
                      "metric_domain_kwargs": "$domain.domain_kwargs"}],
                 "expectation_configuration_builders": []}}})
+
+
+# ------------------------------------------- per-batch registry metrics
+
+
+def test_numeric_range_median_on_column_name_with_space(spark, events):
+    """The per-batch median builds its aggregate from a column reference,
+    not SQL text: a column named ``n chars`` resolves like any other."""
+    df = events.select(F.col("event_id"), F.col("value").alias("n chars"))
+    cfg = {
+        "name": "sp", "config_version": 1.0,
+        "rules": {"r": {
+            "domain_builder": {"class_name": "ColumnDomainBuilder",
+                               "include_column_names": ["n chars"]},
+            "parameter_builders": [
+                {"name": "med",
+                 "class_name": "NumericMetricRangeMultiBatchParameterBuilder",
+                 "metric_name": "column.median",
+                 "metric_domain_kwargs": "$domain.domain_kwargs",
+                 "estimator": "exact", "n_chunks": 4}],
+            "expectation_configuration_builders": []}}}
+    res = run_rule_based_profiler(df, cfg)
+    lo, hi = res.parameters["r"]["n chars"]["med"]["value"]
+    whole = df.agg(F.percentile(F.col("n chars"), F.lit(0.5))).first()[0]
+    assert res.parameters["r"]["n chars"]["med"]["details"]["num_batches"] == 4
+    # the whole-table median lies inside the per-batch median envelope
+    assert lo - 1e-9 <= whole <= hi + 1e-9
+
+
+_SKETCH_REQUESTS = {
+    "med": ("column.median", {"column": "value"}),
+    "q": ("column.quantile", {"column": "value", "quantile": 0.25}),
+    "qs": ("column.quantile_values", {"column": "value",
+                                      "quantiles": [0.1, 0.9]}),
+    "dc": ("column.distinct_values.count", {"column": "event_type"}),
+}
+
+
+def _batch_plan(events, options):
+    from great_expectations_spark.rule_profiler import (
+        _portable_chunk_key,
+        chunk_aggregate_frame,
+    )
+
+    frame, _ = chunk_aggregate_frame(
+        events, _portable_chunk_key("event_id", 4), _SKETCH_REQUESTS, options)
+    return frame._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_batch_metrics_follow_options(spark, events):
+    """``Options`` reach the per-batch pass: the sketch settings plan
+    percentile_approx and approx_count_distinct with no exact percentile;
+    the defaults plan the exact forms."""
+    from great_expectations_spark.plans.compiler import Options
+
+    sketch = _batch_plan(events, Options(
+        exact_median=False, exact_quantiles=False, approx_distinct=True))
+    assert "percentile_approx" in sketch
+    assert "approx_count_distinct" in sketch
+    assert "percentile(" not in sketch, sketch
+
+    exact = _batch_plan(events, Options())
+    assert "percentile(" in exact
+    assert "percentile_approx" not in exact
+    assert "count(distinct" in exact
+    assert "approx_count_distinct" not in exact
+
+
+def test_batch_metrics_shape_and_determinism(spark, docs):
+    """One (batch_id, values) pair per batch, in batch-id order, and the
+    same answers whatever the input partitioning."""
+    from great_expectations_spark.rule_profiler import (
+        _portable_chunk_key,
+        batch_metrics,
+    )
+
+    requests = {"n_rows": ("table.row_count", {}),
+                "mean": ("column.mean", {"column": "n_chars"}),
+                "len_max": ("column_values.length_max", {"column": "lang"})}
+    key = _portable_chunk_key("doc_id", 4)
+    m1 = batch_metrics(docs, requests, key)
+    ids = [b for b, _ in m1]
+    assert set(ids) <= {0, 1, 2, 3} and ids == sorted(ids)
+    assert sum(v["n_rows"] for _, v in m1) == docs.count()
+    m2 = batch_metrics(docs.repartition(9), requests, key)
+    assert m1 == m2
+    with pytest.raises(ValueError):
+        batch_metrics(docs, {"vc": ("column.value_counts",
+                                    {"column": "lang"})}, key)
