@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
 from great_expectations_spark.core.suite import ExpectationSuite
+from great_expectations_spark.sources.session import local_frame
 from great_expectations_spark.validator import validate
 
 RESULTS_SCHEMA = (
@@ -81,6 +82,43 @@ def results_rows(result, run_id: str, chunk_id: str, chunk_predicate: str,
             )
         )
     return rows
+
+
+def read_results(spark: SparkSession, results_path: str,
+                 results_format: str = "parquet") -> DataFrame:
+    """The results table at ``results_path``. A parquet read pins
+    RESULTS_SCHEMA instead of inferring it: no footer-merge job, and the
+    columns a table begun by an older engine lacks read as NULL."""
+    if results_format == "delta":
+        from great_expectations_spark.sources import delta
+
+        return delta.read_results(spark, results_path)
+    return spark.read.schema(RESULTS_SCHEMA).parquet(results_path)
+
+
+def append_results(spark: SparkSession, rows: list[tuple], results_path: str,
+                   results_format: str = "parquet") -> None:
+    """Append ``results_rows`` output to the results table as one file —
+    the one writer shared by ``run_checkpoint`` and ``validate_stream``."""
+    frame = local_frame(spark, rows, RESULTS_SCHEMA).coalesce(1)
+    if results_format == "delta":
+        from great_expectations_spark.sources import delta
+
+        delta.write_results(frame, results_path)
+    else:
+        frame.write.mode("append").parquet(results_path)
+
+
+def missing_table(e: AnalysisException) -> bool:
+    """True iff ``e`` says the results table does not exist yet. Only that
+    means a first write: treating any other read failure as first-run
+    would re-append chunks that ``rollup`` then double-counts."""
+    return any(m in str(e) for m in (
+        "PATH_NOT_FOUND", "Path does not exist",
+        # delta's missing-table shapes
+        "DELTA_MISSING_DELTA_TABLE", "is not a Delta table",
+        "DELTA_PATH_DOES_NOT_EXIST",
+    ))
 
 
 def _values_json(vals: list | None) -> str | None:
@@ -490,9 +528,8 @@ class CheckpointResult:
             "|multicolumn_values_to_be_unique|unique_value_count"
             "|to_be_increasing|to_be_decreasing|in_other_table")
         if merged:
-            spark = self.results_df.sparkSession
-            mdf = spark.createDataFrame(
-                merged,
+            mdf = local_frame(
+                self.results_df.sparkSession, merged,
                 "expectation_index int, expectation_type string, "
                 "kwargs_json string, merged_observed_json string, "
                 "merged_success boolean",
@@ -569,28 +606,21 @@ def run_checkpoint(
 
         options = Options(chunk_monoids=True)
 
-    if results_format == "parquet":
-        def _read_results():
-            # mergeSchema: a table begun by an older engine (fewer columns)
-            # stays readable after this engine appends the current schema
-            return spark.read.option("mergeSchema", "true").parquet(results_path)
+    if results_format == "delta":
+        from great_expectations_spark.sources.delta import require_delta
 
-        def _append_results(rows_df):
-            rows_df.coalesce(1).write.mode("append").parquet(results_path)
-    elif results_format == "delta":
-        from great_expectations_spark.sources import delta as _delta
-
-        _delta.require_delta(spark)
-
-        def _read_results():
-            return _delta.read_results(spark, results_path)
-
-        def _append_results(rows_df):
-            _delta.write_results(rows_df.coalesce(1), results_path)
-    else:
+        require_delta(spark)
+    elif results_format != "parquet":
         raise ValueError(
             f"results_format must be 'parquet' or 'delta', got {results_format!r}"
             " (Iceberg tables go through sources.iceberg.write_results)")
+
+    # named closures: perfbench/jobs.py attributes jobs by these qualnames
+    def _read_results() -> DataFrame:
+        return read_results(spark, results_path, results_format)
+
+    def _append_results(rows: list[tuple]) -> None:
+        append_results(spark, rows, results_path, results_format)
 
     done: set[str] = set()
     try:
@@ -600,18 +630,8 @@ def run_checkpoint(
             for r in existing.where(F.col("run_id") == run_id).select("chunk_id").distinct().collect()
         }
     except AnalysisException as e:
-        # ONLY a missing results table means first run; any other read
-        # failure must propagate — treating a transient error as first-run
-        # would re-append chunks that rollup() then double-counts
-        missing_markers = (
-            "PATH_NOT_FOUND", "Path does not exist",
-            # delta's missing-table shapes
-            "DELTA_MISSING_DELTA_TABLE", "is not a Delta table",
-            "DELTA_PATH_DOES_NOT_EXIST",
-        )
-        if not any(m in str(e) for m in missing_markers):
+        if not missing_table(e):
             raise
-        existing = None  # first run: no results table yet
 
     todo = [(cid, pred) for cid, pred in splitter.chunks if cid not in done]
     skipped = [cid for cid, _ in splitter.chunks if cid in done]
@@ -628,7 +648,7 @@ def run_checkpoint(
             result, run_id, chunk_id,
             str(pred._jc if hasattr(pred, "_jc") else pred), wall)
         with write_lock:
-            _append_results(spark.createDataFrame(rows, RESULTS_SCHEMA))
+            _append_results(rows)
             completed.append(chunk_id)
             if on_chunk:
                 on_chunk(chunk_id, wall)

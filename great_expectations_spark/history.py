@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from great_expectations_spark.checkpoint import _COUNT_KEYS, _merge_monoids
+from great_expectations_spark.sources.session import local_frame
 
 # chunk-RELATIVE map conditions (cross-chunk dups / boundary inversions are
 # invisible per chunk) — same exclusion list rollup() applies; their summed
@@ -92,8 +93,8 @@ def metric_series(results_df: DataFrame, runs: list[str] | None = None) -> DataF
     )
 
     merged = _merge_monoids(r, extra_keys=("run_id",))
-    mdf = spark.createDataFrame(
-        merged,
+    mdf = local_frame(
+        spark, merged,
         "run_id string, expectation_index int, expectation_type string, "
         "kwargs_json string, merged_observed_json string, merged_success boolean",
     )

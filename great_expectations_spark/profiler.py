@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 )
 
 from great_expectations_spark.core.suite import ExpectationSuite
+from great_expectations_spark.sources.session import local_frame
 
 # reference cardinality bands (basic_dataset_profiler.py: _get_column_cardinality)
 _BANDS = [(1, "one"), (2, "two"), (20, "very_few"), (60, "few"),
@@ -126,7 +127,7 @@ def profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
         "min double, max double, mean double, stddev double, "
         "min_ts string, max_ts string, min_len double, max_len double, avg_len double"
     )
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def profile_details(

@@ -52,8 +52,9 @@ def read_results(spark: SparkSession, path: str) -> DataFrame:
 
 def write_results(df: DataFrame, path: str, mode: str = "append") -> None:
     """Append validation-result rows as a Delta commit. Schema evolution
-    (mergeSchema) is on so a table begun by an older engine gains new
-    columns the way the parquet path's mergeSchema read does."""
+    (mergeSchema) is on so a table begun by an older engine gains the new
+    columns; the parquet path instead reads with RESULTS_SCHEMA pinned, so
+    its older files read the missing columns as NULL."""
     require_delta(df.sparkSession)
     (
         df.write.format("delta")

@@ -105,6 +105,15 @@ def write_results(
             f"write_results supports mode='append' or 'overwrite', got {mode!r}")
 
 
+def _results_columns() -> list[tuple[str, str]]:
+    """RESULTS_SCHEMA as (name, SQL type) pairs, in order."""
+    columns = []
+    for field in RESULTS_SCHEMA.split(","):
+        name, _, ftype = field.strip().partition(" ")
+        columns.append((name, "bigint" if ftype == "long" else ftype))
+    return columns
+
+
 def migrate_results_table(spark: SparkSession, results_table: str) -> list[str]:
     """Bring an existing results table up to the current RESULTS_SCHEMA.
 
@@ -118,8 +127,7 @@ def migrate_results_table(spark: SparkSession, results_table: str) -> list[str]:
     Returns the list of columns added."""
     current = {f.lower() for f in spark.table(results_table).columns}
     added = []
-    for field in RESULTS_SCHEMA.split(","):
-        name, _, ftype = field.strip().partition(" ")
+    for name, ftype in _results_columns():
         if name.lower() not in current:
             spark.sql(
                 f"ALTER TABLE {results_table} ADD COLUMN {name} {ftype}")
@@ -129,20 +137,17 @@ def migrate_results_table(spark: SparkSession, results_table: str) -> list[str]:
 
 def plan_table_ddl(results_table: str) -> str:
     """DDL for the production results table (documentation + bootstrap) —
-    column-for-column the checkpoint RESULTS_SCHEMA, so writeTo(...).append()
+    its columns are generated from the checkpoint RESULTS_SCHEMA, in order
+    (``long`` → ``bigint``), so writeTo(...).append()
     resolves against a fresh table; for a table created by an OLDER engine
     version, run ``migrate_results_table`` first (IF NOT EXISTS will not
     add new columns to an existing table). Input snapshot ids belong to
     the lineage JSON inside chunk_predicate, not extra columns the writers
     never produce."""
+    columns = ",\n".join(f"  {name} {ftype}" for name, ftype in _results_columns())
     return f"""
 CREATE TABLE IF NOT EXISTS {results_table} (
-  run_id string, chunk_id string, chunk_predicate string,
-  expectation_index int, expectation_type string, kwargs_json string,
-  success boolean, element_count bigint, missing_count bigint,
-  unexpected_count bigint, observed_value_json string,
-  raised_exception boolean, rows_scanned bigint, wall_time_s double,
-  finished_at double, monoid_json string
+{columns}
 ) USING iceberg
 PARTITIONED BY (run_id)
 """

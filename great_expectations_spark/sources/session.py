@@ -10,8 +10,10 @@ instead of unexpected-value counts).
 from __future__ import annotations
 
 import os
+from typing import Any, Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 
 def get_spark(
@@ -48,3 +50,36 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Any],
+                schema: str | StructType) -> DataFrame:
+    """A small frame of Python rows (tuples, or dicts keyed by field name)
+    built as one Arrow table, so Spark plans it as a ``LocalTableScan``.
+
+    ``createDataFrame(list)`` pickles rows through a Python ``map`` over
+    ``defaultParallelism`` partitions: every action on it starts Python
+    workers. This frame runs no job to collect and no Python worker to
+    write. Each row is first checked with the same verifier the list path
+    uses, because pyarrow alone coerces silently (1.5 into a ``long``
+    column becomes 1). Timestamps are refused: Arrow and the list path
+    localize naive datetimes differently."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier, _parse_datatype_string
+
+    struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    if any(isinstance(f.dataType, TimestampType) for f in struct.fields):
+        raise TypeError("local_frame does not take timestamp columns")
+    verify = _make_type_verifier(struct)
+    names = struct.names
+    columns: list[list[Any]] = [[] for _ in names]
+    for row in rows:
+        verify(row)
+        values = [row.get(n) for n in names] if isinstance(row, dict) else row
+        for col, v in zip(columns, values):
+            col.append(v)
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)

@@ -11,7 +11,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
-from great_expectations_spark.checkpoint import RESULTS_SCHEMA, results_rows
+from great_expectations_spark.checkpoint import (
+    append_results, missing_table, read_results, results_rows,
+)
 from great_expectations_spark.core.suite import ExpectationSuite
 from great_expectations_spark.validator import validate
 
@@ -43,15 +45,12 @@ class _SeenChunks:
         self._seen: set[str] | None = None
 
     def _seed(self) -> set[str]:
+        # a directory holding no committed file (a write died before its
+        # commit) reads as an empty table under the pinned schema
         try:
-            existing = self._spark.read.parquet(self._path)
+            existing = read_results(self._spark, self._path)
         except AnalysisException as e:
-            # UNABLE_TO_INFER_SCHEMA = the directory exists but holds no
-            # committed parquet footer (a write died before its commit):
-            # no rows are visible, so writing IS the first write
-            if any(m in str(e) for m in
-                   ("PATH_NOT_FOUND", "Path does not exist",
-                    "UNABLE_TO_INFER_SCHEMA")):
+            if missing_table(e):
                 return set()
             raise
         rows = (existing.where(F.col("run_id") == self._run_id)
@@ -111,9 +110,7 @@ def validate_stream(
                           options=options)
         rows = results_rows(result, run_id, chunk_id,
                             "streaming-micro-batch", time.time() - t0)
-        spark.createDataFrame(rows, RESULTS_SCHEMA).coalesce(1).write.mode("append").parquet(
-            results_path
-        )
+        append_results(spark, rows, results_path)
         seen.mark(chunk_id)
 
     writer = (

@@ -41,6 +41,7 @@ from great_expectations_spark.plans.compiler import (
     compile_expectation,
     _py,
 )
+from great_expectations_spark.sources.session import local_frame
 
 
 def _required_columns(config: ExpectationConfiguration) -> list[str]:
@@ -843,4 +844,4 @@ def suite_result_to_df(spark: SparkSession, result: SuiteValidationResult) -> Da
         "element_count long, unexpected_count long, unexpected_percent double, "
         "missing_count long, observed_value_json string, raised_exception boolean"
     )
-    return spark.createDataFrame(rows, schema=schema)
+    return local_frame(spark, rows, schema)

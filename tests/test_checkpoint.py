@@ -140,3 +140,57 @@ def test_delta_unavailable_raises_cleanly(spark, docs, tmp_path):
         run_checkpoint(docs, _suite(), sp, str(tmp_path / "r"), run_id="x",
                        results_format="delta")
 
+
+def test_checkpoint_job_counts_and_rows(spark, docs, tmp_path, monkeypatch,
+                                       new_job_ids):
+    """A 2-chunk run launches exactly one write job per chunk, and its
+    results reads (resume + final) launch no schema-inference job; the
+    rows it writes equal those of the createDataFrame(list) path, except
+    for the timings."""
+    from great_expectations_spark import checkpoint as ck
+
+    jobs: dict[str, list[int]] = {"append": [], "read": []}
+
+    def counted(name, fn):
+        def call(*a, **kw):
+            out, ids = new_job_ids(lambda: fn(*a, **kw))
+            jobs[name].append(len(ids))
+            return out
+        return call
+
+    sp = Splitter.hashed_column("doc_id", 2)
+    suite = _suite().add("expect_column_values_to_be_in_set",
+                         column="lang", value_set=["en"])
+    with monkeypatch.context() as m:
+        m.setattr(ck, "append_results", counted("append", ck.append_results))
+        m.setattr(ck, "read_results", counted("read", ck.read_results))
+        res = run_checkpoint(docs, suite, sp, str(tmp_path / "arrow"),
+                             run_id="r1", result_format="SUMMARY")
+    assert res.completed_chunks == [c for c, _ in sp.chunks]
+    assert jobs == {"append": [1, 1], "read": [0]}  # first read: no table yet
+
+    with monkeypatch.context() as m:
+        m.setattr(ck, "local_frame",
+                  lambda spark, rows, schema: spark.createDataFrame(rows, schema))
+        listed = run_checkpoint(docs, suite, sp, str(tmp_path / "list"),
+                                run_id="r1", result_format="SUMMARY")
+
+    def written(r):
+        return sorted(r.results_df.drop("wall_time_s", "finished_at").collect())
+
+    assert written(res) == written(listed)
+    assert res.results_df.where(F.col("unexpected_json").isNotNull()).count() == 2
+
+
+def test_iceberg_ddl_columns_match_results_schema(spark):
+    import re
+
+    from pyspark.sql.types import _parse_datatype_string
+
+    from great_expectations_spark.checkpoint import RESULTS_SCHEMA
+    from great_expectations_spark.sources.iceberg import plan_table_ddl
+
+    ddl = plan_table_ddl("cat.db.results")
+    body = re.search(r"\((.*)\) USING iceberg", ddl, re.S).group(1)
+    assert (_parse_datatype_string(body.strip())
+            == _parse_datatype_string(RESULTS_SCHEMA))

@@ -514,3 +514,15 @@ def test_seen_chunks_seeds_once_then_memory(spark, docs, tmp_path):
     assert gate2.already_written("batch-0") is False
     gate3 = _SeenChunks(spark, results, "run-OTHER")
     assert gate3.already_written("batch-0") is False
+
+
+def test_seen_chunks_directory_without_committed_files(spark, tmp_path):
+    """A results directory holding no committed parquet file (a write that
+    died before its commit) is read as an empty table: writing is the
+    first write."""
+    from great_expectations_spark.streaming.validate_stream import _SeenChunks
+
+    results = tmp_path / "results"
+    (results / "_temporary" / "0").mkdir(parents=True)
+    gate = _SeenChunks(spark, str(results), "run-x")
+    assert gate.already_written("batch-0") is False
