@@ -14,9 +14,12 @@ Spark-first deltas:
   * ``get_metrics`` computes EVERY requested aggregate metric in ONE fused
     ``df.agg`` scan instead of one resolution wave per metric.
   * ``metric_aggs`` is the one metric-name → aggregate table (the
-    reference's MetricConfiguration registry): the profiler's per-batch
-    ``rule_profiler.batch_metrics`` and ``grouped.validate_by`` resolve
-    through it too, with the compiler's exact-vs-sketch helpers.
+    reference's MetricConfiguration registry): ``profiler.profile`` /
+    ``profile_details``, the rule profiler's domain pass and per-batch
+    ``batch_metrics``, and ``grouped.validate_by`` resolve through it
+    too. Its exact-vs-sketch aggregates come from the compiler's helpers
+    and its histogram bins from the KL path's builder, so no module
+    outside ``plans/compiler.py`` writes its own.
   * eager metrics (value_counts, distinct_values, most_common_value) ride
     the same bounded-collect guards the compiler uses
     (``Options.distinct_set_cap``) — nothing unbounded reaches the driver.
@@ -39,6 +42,7 @@ from great_expectations_spark.core.suite import (
 )
 from great_expectations_spark.plans.compiler import (
     Options,
+    _bin_sums,
     _bounded_group_counts,
     _distinct_count_agg,
     _median_agg,
@@ -79,17 +83,11 @@ def _values_between_count(col: Column, kw: dict, o: Options):
 
 def _histogram(col: Column, kw: dict, o: Options):
     # reference column_histogram.py:229-296 (Bucketizer + groupBy): here
-    # the bucket counts are conditional sums fused into the same agg —
-    # [lo,hi) per bin, last bin closed, same as the KL path
-    bins = [float(b) for b in kw["bins"]]
-    exprs = {}
-    for i in range(len(bins) - 1):
-        upper = (col <= F.lit(bins[i + 1])) if i == len(bins) - 2 else (
-            col < F.lit(bins[i + 1]))
-        exprs[f"b{i}"] = F.sum(
-            ((col >= F.lit(bins[i])) & upper).cast("long"))
-    return exprs, lambda d: [int(d[f"b{i}"] or 0)
-                             for i in range(len(bins) - 1)]
+    # the bucket counts are conditional sums fused into the same agg,
+    # built by the KL path's bin builder
+    sums = _bin_sums(col, [float(b) for b in kw["bins"]])
+    return ({f"b{i}": s for i, s in enumerate(sums)},
+            lambda d: [int(d[f"b{i}"] or 0) for i in range(len(sums))])
 
 
 # metric name -> (col, kwargs, options) -> (agg Columns by tag, finalize)
@@ -117,6 +115,7 @@ _REGISTRY = {
     "column.values_between.count": _values_between_count,
     "column_values.length_min": lambda col, kw, o: _one(F.min(F.length(col))),
     "column_values.length_max": lambda col, kw, o: _one(F.max(F.length(col))),
+    "column_values.length_mean": lambda col, kw, o: _one(F.avg(F.length(col))),
     "column.histogram": _histogram,
 }
 

@@ -1373,15 +1373,21 @@ def _hist_keys(config_id: str, nbins: int) -> list[str]:
     return [f"hist|{config_id}|{i}" for i in range(nbins + 2)]  # + below/above
 
 
+def _bin_sums(col: Column, bins: list[float]) -> list[Column]:
+    """One conditional count per interior bin of the ascending ``bins``
+    edges: [lo, hi) each, the last bin closed so the top edge is counted
+    (the KL histogram and the ``column.histogram`` metric)."""
+    last = len(bins) - 2
+    return [_bool_sum((col >= F.lit(lo))
+                      & ((col <= F.lit(hi)) if i == last else (col < F.lit(hi))))
+            for i, (lo, hi) in enumerate(zip(bins, bins[1:]))]
+
+
 def _hist_aggs(col: Column, bins: list[float], config_id: str) -> dict[str, Column]:
     keys = _hist_keys(config_id, len(bins) - 1)
-    aggs: dict[str, Column] = {keys[0]: _bool_sum(col < F.lit(bins[0]))}
-    for i in range(len(bins) - 1):
-        lo, hi = bins[i], bins[i + 1]
-        upper = (col <= F.lit(hi)) if i == len(bins) - 2 else (col < F.lit(hi))
-        aggs[keys[i + 1]] = _bool_sum((col >= F.lit(lo)) & upper)
-    aggs[keys[-1]] = _bool_sum(col > F.lit(bins[-1]))
-    return aggs
+    sums = [_bool_sum(col < F.lit(bins[0])), *_bin_sums(col, bins),
+            _bool_sum(col > F.lit(bins[-1]))]
+    return dict(zip(keys, sums))
 
 
 @compiler("expect_column_kl_divergence_to_be_less_than")

@@ -5,18 +5,20 @@ Reference: profile/basic_dataset_profiler.py:33-91 classifies each column
 validator. This profiler computes the same facts — type, null fraction,
 approx cardinality + band, min/max/mean/stddev for numerics, length
 stats for strings — for EVERY column in ONE ``df.agg`` pass (plus zero
-extra jobs), then emits a tidy DataFrame.
+extra jobs), then emits a tidy DataFrame. Every aggregate comes from the
+metric registry (``interactive.metric_aggs``), so each metric and each
+exact-vs-sketch choice is written once.
 
-Use it to bootstrap a suite: ``suggest_suite`` turns a profile into the
-obvious expectations (not_null for near-complete columns, in_set for
-low-cardinality, between for numerics), mirroring the reference's
-BasicSuiteBuilderProfiler intent.
+``profile_details`` adds the per-column drill-down of the profiling docs
+page, and ``infer_formats`` the regex / strftime candidate evaluation of
+the rule profiler's format builders. Suites are bootstrapped by
+``data_assistant.run_onboarding_assistant``.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -27,12 +29,31 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from great_expectations_spark.core.suite import ExpectationSuite
+from great_expectations_spark.interactive import metric_aggs, plan_metrics
+from great_expectations_spark.plans.compiler import Options
 from great_expectations_spark.sources.session import local_frame
 
 # reference cardinality bands (basic_dataset_profiler.py: _get_column_cardinality)
 _BANDS = [(1, "one"), (2, "two"), (20, "very_few"), (60, "few"),
           (1000, "many"), (10000, "very_many"), (float("inf"), "unique_or_more")]
+
+_LENGTHS = {"min_len": ("column_values.length_min", "double"),
+            "max_len": ("column_values.length_max", "double"),
+            "avg_len": ("column_values.length_mean", "double")}
+
+# profile field -> (registry metric, Spark-side cast) per column kind;
+# datetimes are rendered as strings in the session time zone, and the
+# length of a binary value is its byte count
+_KIND_STATS = {
+    "numeric": {"min": ("column.min", "double"),
+                "max": ("column.max", "double"),
+                "mean": ("column.mean", "double"),
+                "stddev": ("column.standard_deviation", "double")},
+    "datetime": {"min_ts": ("column.min", "string"),
+                 "max_ts": ("column.max", "string")},
+    "string": _LENGTHS,
+    "binary": _LENGTHS,
+}
 
 
 def _band(n: int, total: int) -> str:
@@ -44,82 +65,63 @@ def _band(n: int, total: int) -> str:
     return "unique_or_more"
 
 
+def _kind(dt) -> str:
+    if isinstance(dt, NumericType):
+        return "numeric"
+    if isinstance(dt, (TimestampType, DateType)):
+        return "datetime"
+    if isinstance(dt, BooleanType):
+        return "boolean"
+    if isinstance(dt, BinaryType):
+        return "binary"
+    if isinstance(dt, StringType):
+        return "string"
+    return "other"
+
+
 def profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """One fused scan; returns a DataFrame with one row per column:
     (column, dtype, kind, n_rows, n_null, null_fraction, approx_distinct,
     cardinality_band, min, max, mean, stddev, min_len, max_len, avg_len)."""
     spark = df.sparkSession
     fields = [f for f in df.schema.fields if columns is None or f.name in columns]
+    sketch = Options(approx_distinct=True)  # cardinality as an HLL++ count
 
-    aggs = [F.count(F.lit(1)).alias("__n")]
+    def agg(metric: str, column: str | None, cast: str | None = None):
+        exprs, _ = metric_aggs(metric, {"column": column}, sketch)
+        return exprs["v"] if cast is None else exprs["v"].cast(cast)
+
+    aggs = [agg("table.row_count", None)]
+    slots: list[tuple[str, str]] = []  # (column, profile field) per agg after the first
     for f in fields:
-        c, name = F.col(f.name), f.name
-        aggs.append(F.sum(F.when(c.isNull(), 1).otherwise(0)).alias(f"{name}__null"))
-        if not isinstance(f.dataType, BinaryType):
-            aggs.append(F.approx_count_distinct(c).alias(f"{name}__card"))
-        if isinstance(f.dataType, NumericType):
-            aggs.extend([
-                F.min(c).cast("double").alias(f"{name}__min"),
-                F.max(c).cast("double").alias(f"{name}__max"),
-                F.mean(c).cast("double").alias(f"{name}__mean"),
-                F.stddev_samp(c).cast("double").alias(f"{name}__std"),
-            ])
-        elif isinstance(f.dataType, (TimestampType, DateType)):
-            aggs.extend([
-                F.min(c).cast("string").alias(f"{name}__tmin"),
-                F.max(c).cast("string").alias(f"{name}__tmax"),
-            ])
-        elif isinstance(f.dataType, StringType):
-            aggs.extend([
-                F.min(F.length(c)).cast("double").alias(f"{name}__lmin"),
-                F.max(F.length(c)).cast("double").alias(f"{name}__lmax"),
-                F.avg(F.length(c)).cast("double").alias(f"{name}__lavg"),
-            ])
-        elif isinstance(f.dataType, BinaryType):
-            aggs.extend([
-                F.min(F.octet_length(c)).cast("double").alias(f"{name}__lmin"),
-                F.max(F.octet_length(c)).cast("double").alias(f"{name}__lmax"),
-                F.avg(F.octet_length(c)).cast("double").alias(f"{name}__lavg"),
-            ])
-    row = df.agg(*aggs).first()
-    n = row["__n"]
-
-    def kind(dt) -> str:
-        if isinstance(dt, NumericType):
-            return "numeric"
-        if isinstance(dt, (TimestampType, DateType)):
-            return "datetime"
-        if isinstance(dt, BooleanType):
-            return "boolean"
-        if isinstance(dt, BinaryType):
-            return "binary"
-        if isinstance(dt, StringType):
-            return "string"
-        return "other"
+        kind = _kind(f.dataType)
+        wanted = {"n_null": ("column_values.null.count", None)}
+        if kind != "binary":
+            wanted["approx_distinct"] = ("column.distinct_values.count", None)
+        wanted.update(_KIND_STATS.get(kind, {}))
+        for field, (metric, cast) in wanted.items():
+            slots.append((f.name, field))
+            aggs.append(agg(metric, f.name, cast))
+    row = df.agg(*[a.alias(f"m{i}") for i, a in enumerate(aggs)]).first()
+    n = row[0]
+    stats: dict[str, dict] = {f.name: {} for f in fields}
+    for (name, field), value in zip(slots, row[1:]):
+        stats[name][field] = value
 
     out = []
     for f in fields:
-        name = f.name
-        nn = int(row[f"{name}__null"] or 0)
-        card = int(row[f"{name}__card"]) if f"{name}__card" in row.asDict() else None
+        s = stats[f.name]
+        nn = int(s.pop("n_null") or 0)
+        card = s.get("approx_distinct")
         out.append({
-            "column": name,
+            **s,
+            "column": f.name,
             "dtype": f.dataType.simpleString(),
-            "kind": kind(f.dataType),
+            "kind": _kind(f.dataType),
             "n_rows": n,
             "n_null": nn,
             "null_fraction": round(nn / n, 6) if n else None,
-            "approx_distinct": card,
             "cardinality_band": _band(card, n - nn) if card is not None else None,
-            "min": row.asDict().get(f"{name}__min"),
-            "max": row.asDict().get(f"{name}__max"),
-            "mean": row.asDict().get(f"{name}__mean"),
-            "stddev": row.asDict().get(f"{name}__std"),
-            "min_ts": row.asDict().get(f"{name}__tmin"),
-            "max_ts": row.asDict().get(f"{name}__tmax"),
-            "min_len": row.asDict().get(f"{name}__lmin"),
-            "max_len": row.asDict().get(f"{name}__lmax"),
-            "avg_len": row.asDict().get(f"{name}__lavg"),
         })
     schema = (
         "column string, dtype string, kind string, n_rows long, n_null long, "
@@ -128,6 +130,22 @@ def profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
         "min_ts string, max_ts string, min_len double, max_len double, avg_len double"
     )
     return local_frame(spark, out, schema)
+
+
+def _top_values(df: DataFrame, columns: list[str], top_k: int) -> DataFrame:
+    """(c, v, n) rows: the ``top_k`` most frequent non-null values of each
+    of ``columns`` as strings, count ties broken by value. ONE scan of
+    ``df``: the columns are melted into (column, value) rows, counted by
+    one groupBy and cut per column by a row_number window."""
+    melted = df.select(F.explode(F.array(*[
+        F.struct(F.lit(c).alias("c"), F.col(c).cast("string").alias("v"))
+        for c in columns])).alias("cv")).select("cv.c", "cv.v")
+    counts = (melted.where(F.col("v").isNotNull())
+              .groupBy("c", "v").agg(F.count(F.lit(1)).alias("n")))
+    rank = F.row_number().over(
+        Window.partitionBy("c").orderBy(F.col("n").desc(), F.col("v").asc()))
+    return counts.withColumn("__rank", rank).where(
+        F.col("__rank") <= top_k).drop("__rank")
 
 
 def profile_details(
@@ -142,13 +160,13 @@ def profile_details(
     (render/renderer/column_section_renderer.py:33: "Example Values" /
     common-value bars and histograms per column).
 
-    Two jobs regardless of column count:
-      * ONE unioned top-k value-counts frame covering every column whose
-        approx-distinct stays under ``max_set_card`` (each branch is its
-        own bounded groupBy+limit; one collect);
-      * ONE fused ``df.agg`` of conditional-sum histogram bins for every
-        numeric column with a non-degenerate [min, max] (the KL/histogram
-        agg convention — no per-column scan).
+    Two jobs and two scans of ``df`` regardless of column count:
+      * ONE top-k value-counts frame covering every column whose
+        approx-distinct stays under ``max_set_card`` (one melted groupBy
+        plus a per-column row_number cut; one collect);
+      * ONE fused ``df.agg`` of ``column.histogram`` metrics for every
+        numeric column with a non-degenerate [min, max] (conditional-sum
+        bins, the KL convention — no per-column scan).
 
     Returns {column: {"top_values": [(value_str, count), ...],
     "histogram": {"edges": [...], "counts": [...]}}} — feed to
@@ -162,47 +180,29 @@ def profile_details(
                if r["approx_distinct"] is not None
                and 0 < r["approx_distinct"] <= max_set_card]
     if vc_cols:
-        branches = []
-        for c in vc_cols:
-            branches.append(
-                df.where(F.col(c).isNotNull())
-                .groupBy(F.col(c).cast("string").alias("v"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .orderBy(F.col("n").desc(), F.col("v").asc())
-                .limit(top_k)
-                .select(F.lit(c).alias("c"), "v", "n"))
-        union = branches[0]
-        for b in branches[1:]:
-            union = union.unionByName(b)
-        for r in union.collect():
+        for r in _top_values(df, vc_cols, top_k).collect():
             out.setdefault(r["c"], {}).setdefault("top_values", []).append(
                 (r["v"], int(r["n"])))
         for c in out:
             out[c]["top_values"].sort(key=lambda t: (-t[1], t[0]))
 
-    hist_specs = [(r["column"], float(r["min"]), float(r["max"]))
-                  for r in rows
-                  if r["kind"] == "numeric" and r["min"] is not None
-                  and r["max"] is not None and r["min"] < r["max"]]
-    if hist_specs:
-        aggs = []
-        edges_by_col: dict[str, list[float]] = {}
-        for c, lo, hi in hist_specs:
-            edges = [lo + (hi - lo) * i / bins for i in range(bins + 1)]
-            edges_by_col[c] = edges
-            col = F.col(c)
-            for i in range(bins):
-                upper = (col <= F.lit(edges[i + 1])) if i == bins - 1 \
-                    else (col < F.lit(edges[i + 1]))
-                aggs.append(F.sum(
-                    ((col >= F.lit(edges[i])) & upper).cast("long")
-                ).alias(f"__h__{c}__{i}"))
-        hrow = df.agg(*aggs).first()
-        for c, _lo, _hi in hist_specs:
+    requests = {}
+    for r in rows:
+        if (r["kind"] == "numeric" and r["min"] is not None
+                and r["max"] is not None and r["min"] < r["max"]):
+            lo, hi = float(r["min"]), float(r["max"])
+            # the last edge is the profiled max itself: lo + (hi - lo) *
+            # bins / bins can land one ULP below it, leaving the max row
+            # in no bin
+            edges = [lo + (hi - lo) * i / bins for i in range(bins)] + [hi]
+            requests[r["column"]] = (
+                "column.histogram", {"column": r["column"], "bins": edges})
+    if requests:
+        aggs, finish, _ = plan_metrics(requests, Options())
+        counts = finish(df.agg(*aggs).first())
+        for c, (_, kw) in requests.items():
             out.setdefault(c, {})["histogram"] = {
-                "edges": edges_by_col[c],
-                "counts": [int(hrow[f"__h__{c}__{i}"] or 0)
-                           for i in range(bins)]}
+                "edges": kw["bins"], "counts": counts[c]}
     return out
 
 
@@ -313,6 +313,20 @@ def _strftime_mask_udf(candidates: list[str]):
     return _mask
 
 
+def best_candidate(ratios: dict[str, float],
+                   threshold: float) -> tuple[str | None, float]:
+    """The candidate with the highest success ratio at or above
+    ``threshold`` and that ratio, or ``(None, 0.0)`` (reference
+    ParameterBuilder._get_best_candidate_above_threshold,
+    parameter_builder.py:696-714). ``ratios`` iterates in candidate
+    order, so a tie keeps the earlier candidate."""
+    best, best_ratio = None, 0.0
+    for cand, ratio in ratios.items():
+        if ratio > best_ratio and ratio >= threshold:
+            best, best_ratio = cand, ratio
+    return best, best_ratio
+
+
 def infer_formats(
     df: DataFrame,
     columns: list[str] | None = None,
@@ -363,13 +377,6 @@ def infer_formats(
                 )
     row = src.agg(*aggs).first()
 
-    def best_of(ratios: dict[str, float]) -> tuple[str | None, float]:
-        best, best_ratio = None, 0.0
-        for cand, ratio in ratios.items():
-            if ratio > best_ratio and ratio >= threshold:
-                best, best_ratio = cand, ratio
-        return best, best_ratio
-
     out: dict[str, dict] = {}
     for c in cols:
         nn = row[f"{c}__nn"] or 0
@@ -383,8 +390,8 @@ def infer_formats(
         # clear the default threshold of exactly 1.0
         re_ratios = {r: (n / nn if nn else 0.0) for r, n in re_counts.items()}
         sf_ratios = {f: (n / nn if nn else 0.0) for f, n in sf_counts.items()}
-        rb, rr = best_of(re_ratios)
-        sb, sr = best_of(sf_ratios)
+        rb, rr = best_candidate(re_ratios, threshold)
+        sb, sr = best_candidate(sf_ratios, threshold)
         out[c] = {
             "nonnull": int(nn),
             "regex": {"best": rb, "ratio": rr, "ratios": re_ratios,
@@ -394,76 +401,3 @@ def infer_formats(
         }
     return out
 
-
-def suggest_suite(df: DataFrame, name: str = "profiled", null_tolerance: float = 0.05,
-                  set_cardinality_max: int = 20,
-                  infer_string_formats: bool = True,
-                  format_threshold: float = 1.0) -> ExpectationSuite:
-    """Bootstrap a suite from a profile (BasicSuiteBuilderProfiler-style).
-
-    At most THREE scans regardless of column count: the fused ``profile``
-    pass, ONE fused bounded ``collect_set`` job for every
-    low-cardinality column at once (not one distinct().collect() per
-    column — that's N extra full scans at crawl scale), and — when
-    ``infer_string_formats`` — ONE fused ``infer_formats`` pass over the
-    string columns that did not get an in-set expectation, adding a
-    match_strftime (preferred: more informative for datelike strings) or
-    match_regex expectation for the best candidate at
-    ``format_threshold`` (the reference's regex/date-format parameter
-    builders; see infer_formats). The collect_set is sliced at cap+1 so
-    an approx_count_distinct underestimate can't pull an unbounded set
-    onto the driver; overflow falls back to a range expectation for
-    numerics and is skipped otherwise.
-    """
-    prof = {r.column: r for r in profile(df).collect()}
-    suite = ExpectationSuite(name=name)
-    suite.add("expect_table_columns_to_match_set", column_set=list(prof))
-    suite.add("expect_table_row_count_to_be_between",
-              min_value=max(int(next(iter(prof.values())).n_rows * 0.5), 1))
-    set_candidates = [
-        col for col, r in prof.items()
-        if (r.approx_distinct is not None and r.approx_distinct <= set_cardinality_max
-            and r.kind in ("string", "boolean", "numeric"))
-    ]
-    value_sets: dict[str, list] = {}
-    if set_candidates:
-        row = df.agg(*[
-            F.slice(F.collect_set(F.col(c)), 1, set_cardinality_max + 1).alias(c)
-            for c in set_candidates
-        ]).first()
-        value_sets = {c: row[c] for c in set_candidates}
-    in_set_cols: set[str] = set()
-    for col, r in prof.items():
-        if r.null_fraction is not None and r.null_fraction <= null_tolerance:
-            suite.add("expect_column_values_to_not_be_null", column=col,
-                      mostly=max(0.0, round(1 - max(r.null_fraction * 2, 0.01), 4)))
-        values = value_sets.get(col)
-        if values is not None and len(values) <= set_cardinality_max:
-            in_set_cols.add(col)
-            suite.add("expect_column_values_to_be_in_set", column=col,
-                      value_set=sorted(values, key=str), mostly=0.99)
-        elif r.kind == "numeric" and r.min is not None and r.max is not None:
-            span = (r.max - r.min) or 1.0
-            suite.add("expect_column_values_to_be_between", column=col,
-                      min_value=r.min - 0.5 * span, max_value=r.max + 0.5 * span,
-                      mostly=0.99)
-    if infer_string_formats:
-        fmt_cols = [
-            col for col, r in prof.items()
-            if r.kind == "string" and r.n_null < r.n_rows
-            and col not in in_set_cols
-        ]
-        if fmt_cols:
-            inferred = infer_formats(df, fmt_cols, threshold=format_threshold)
-            for col in fmt_cols:
-                f = inferred.get(col)
-                if not f:
-                    continue
-                if f["strftime"]["best"] is not None:
-                    suite.add(
-                        "expect_column_values_to_match_strftime_format",
-                        column=col, strftime_format=f["strftime"]["best"])
-                elif f["regex"]["best"] is not None:
-                    suite.add("expect_column_values_to_match_regex",
-                              column=col, regex=f["regex"]["best"])
-    return suite

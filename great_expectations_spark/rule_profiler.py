@@ -28,7 +28,7 @@ parameter as its own metric-resolution wave):
           read ``df.schema``, zero jobs)
   pass 1  ONE fused ``df.agg`` for every Categorical / MapMetric domain
           builder across ALL rules (row count + exact distinct counts +
-          map-metric unexpected counts)
+          non-null counts, registry metrics under default ``Options``)
   pass 2  ONE ``interactive.get_metrics`` call carrying every
           Metric/ValueSet/ValueCounts/Histogram parameter request of
           every (rule × domain) — agg-expressible metrics fuse into one
@@ -178,12 +178,15 @@ def _resolve_domains(
 ) -> dict[str, list[_Domain]]:
     """All rules' domains. Schema-only builders cost zero jobs; every
     Categorical/MapMetric builder's statistics ride ONE fused df.agg."""
+    from great_expectations_spark.interactive import plan_metrics
+    from great_expectations_spark.plans.compiler import Options
+
     out: dict[str, list[_Domain]] = {}
-    # (rule, candidate cols, decide(count_row) -> cols) deferred until the
-    # single fused agg has run. Distinct counts here stay exact whatever
-    # Options says (not the registry's sketch-able form): uniqueness and
+    # (rule, decide(counts) -> cols) deferred until the single fused agg
+    # has run. Its registry metrics resolve under default Options whatever
+    # the run's Options say, so distinct counts stay exact: uniqueness and
     # cardinality-limit admission compare them against exact thresholds.
-    fused_aggs: dict[str, Column] = {"__n__": F.count(F.lit(1)).alias("__n__")}
+    requests: dict[str, tuple[str, dict]] = {"__n__": ("table.row_count", {})}
     deferred: list[tuple[str, Any]] = []
 
     for rname, rule in rules.items():
@@ -218,15 +221,15 @@ def _resolve_domains(
                     f"unknown cardinality_limit_mode {mode!r}; one of "
                     f"{sorted(_CARDINALITY_MODES)}")
             for c in cand:
-                fused_aggs.setdefault(
-                    f"__d__{c}", F.count_distinct(F.col(c)).alias(f"__d__{c}"))
+                requests.setdefault(f"__d__{c}", (
+                    "column.distinct_values.count", {"column": c}))
                 # relative modes divide by the NON-NULL count — the
                 # reference's RelativeCardinalityLimit compares
                 # column.unique_proportion = distinct / nonnull
                 # (column_proportion_of_unique_values.py), not distinct /
                 # total rows; a 90%-null all-distinct column must read 1.0
-                fused_aggs.setdefault(
-                    f"__nn__{c}", F.count(F.col(c)).alias(f"__nn__{c}"))
+                requests.setdefault(f"__nn__{c}", (
+                    "column_values.nonnull.count", {"column": c}))
 
             def decide_cat(row, cand=cand, mode=mode):
                 kind, limit = _CARDINALITY_MODES[mode]
@@ -258,12 +261,11 @@ def _resolve_domains(
             max_vals = int(db.get("max_unexpected_values", 0))
             max_ratio = db.get("max_unexpected_ratio")
             for c in cand:
-                fused_aggs.setdefault(
-                    f"__nn__{c}", F.count(F.col(c)).alias(f"__nn__{c}"))
+                requests.setdefault(f"__nn__{c}", (
+                    "column_values.nonnull.count", {"column": c}))
                 if metric == "column_values.unique":
-                    fused_aggs.setdefault(
-                        f"__d__{c}",
-                        F.count_distinct(F.col(c)).alias(f"__d__{c}"))
+                    requests.setdefault(f"__d__{c}", (
+                        "column.distinct_values.count", {"column": c}))
 
             def decide_map(row, cand=cand, max_vals=max_vals,
                            max_ratio=max_ratio, metric=metric):
@@ -308,9 +310,10 @@ def _resolve_domains(
                 "MultiColumnDomainBuilder, MapMetricColumnDomainBuilder)")
 
     if deferred:
-        row = df.agg(*fused_aggs.values()).first()
+        aggs, finish, _ = plan_metrics(requests, Options())
+        counts = finish(df.agg(*aggs).first())
         for rname, decide in deferred:
-            out[rname] = [_domain(rname, column=c) for c in decide(row)]
+            out[rname] = [_domain(rname, column=c) for c in decide(counts)]
     return out
 
 
@@ -644,6 +647,7 @@ def _resolve_parameters(
     from great_expectations_spark.profiler import (
         CANDIDATE_REGEXES,
         CANDIDATE_STRFTIME,
+        best_candidate,
         infer_formats,
     )
 
@@ -922,11 +926,7 @@ def _resolve_parameters(
         info = fmt_results[(kind, cands, smod)].get(col)
         section = (info or {}).get(kind, {})
         ratios = section.get("ratios", {})
-        best, best_ratio = None, 0.0
-        for cand in cands:  # candidate order breaks ties (profiler.py note)
-            ratio = ratios.get(cand, 0.0)
-            if ratio > best_ratio and ratio >= thr:
-                best, best_ratio = cand, ratio
+        best, best_ratio = best_candidate(ratios, thr)
         detail_key = ("candidate_strings" if kind == "strftime"
                       else "evaluated_regexes")
         details = {"success_ratio": best_ratio, detail_key: dict(ratios)}

@@ -323,3 +323,16 @@ def test_profile_details_respects_cardinality_cap(spark):
     assert all("top_values" not in (d.get(c) or {}) for c in ("id", "s"))
     # numeric histogram still present for id
     assert sum(d["id"]["histogram"]["counts"]) == 500
+
+
+def test_profile_details_histogram_counts_the_max(spark):
+    """The last edge is the profiled max itself: with uniform edges
+    lo + (hi - lo) * i / bins the top edge lands one ULP below 0.9 here
+    and the max row fell in no bin."""
+    from great_expectations_spark.profiler import profile_details
+
+    df = spark.createDataFrame([(0.2,), (0.5,), (0.9,), (None,)], "x double")
+    h = profile_details(df, bins=4)["x"]["histogram"]
+    assert h["edges"][0] == 0.2 and h["edges"][-1] == 0.9
+    assert sum(h["counts"]) == 3  # the non-null count
+    assert h["counts"] == [1, 1, 0, 1]

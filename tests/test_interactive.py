@@ -5,6 +5,9 @@ Reference: Validator.expect_* dynamic dispatch accumulating a suite
 get_metrics resolves every agg-expressible metric in ONE fused df.agg.
 """
 
+import ast
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -200,3 +203,33 @@ def test_validator_head(df):
     v = InteractiveValidator(df.orderBy("id"), name="h")
     out = v.head(2)
     assert len(out) == 2 and list(out["id"]) == [0, 1]
+
+
+# ------------------------------------------------------------ registry guard
+
+ENGINE = pathlib.Path(__file__).resolve().parent.parent / "great_expectations_spark"
+
+# exact and sketch aggregates whose choice belongs to Options: built only
+# by plans/compiler.py's helpers (reached through the metric registry)
+SKETCHABLE = {"count_distinct", "countDistinct", "approx_count_distinct",
+              "percentile", "percentile_approx", "approx_percentile",
+              "approxQuantile"}
+
+
+def _sketchable_calls(tree: ast.AST) -> list[int]:
+    return [node.lineno for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and (node.func.attr if isinstance(node.func, ast.Attribute)
+                 else getattr(node.func, "id", None)) in SKETCHABLE]
+
+
+def test_exact_and_sketch_aggregates_only_in_compiler():
+    offenders = []
+    for path in sorted(ENGINE.rglob("*.py")):
+        rel = path.relative_to(ENGINE).as_posix()
+        if rel.startswith("pipeline/") or rel == "plans/compiler.py":
+            continue
+        offenders += [f"{rel}:{line}"
+                      for line in _sketchable_calls(ast.parse(path.read_text()))]
+    assert offenders == [], (
+        "resolve through interactive.metric_aggs: " + ", ".join(offenders))

@@ -357,3 +357,17 @@ def test_rule_profiler_real_batches_single_exchange(spark, tmp_path):
         assert n_exchanges == 2, plan
         assert plan.count("hashpartitioning") == 1, plan
         assert _partial_agg_before_exchange(plan), plan
+
+
+def test_profile_details_top_values_single_scan(spark, fresh_docs):
+    """profile_details' top-values frame reads the source ONCE however
+    many columns qualify (melted columns, one groupBy, a row_number cut),
+    not once per column through a union of per-column branches."""
+    from great_expectations_spark.profiler import _top_values
+
+    frame = _top_values(fresh_docs, ["lang", "source", "n_chars"], 3)
+    leaves = frame._jdf.queryExecution().optimizedPlan().collectLeaves()
+    assert leaves.size() == 1, leaves.toString()
+    plan = _plan(frame)
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
+    assert len(frame.collect()) <= 3 * 3

@@ -31,11 +31,67 @@ def test_profile_one_row_per_column(spark, docs):
     assert prof["n_chars"].min == docs.agg(F.min("n_chars")).first()[0]
 
 
-def test_suggested_suite_passes_on_its_own_data(spark, docs):
-    from great_expectations_spark import validate
-    from great_expectations_spark.profiler import suggest_suite
+def test_profile_rows_pinned_across_types(spark):
+    """Every column kind through the registry aggregates: the rows are
+    pinned (HLL++ cardinality, datetimes rendered Spark-side in the
+    session time zone, binary lengths in bytes, an all-null column)."""
+    import datetime
+    import decimal
 
-    suite = suggest_suite(docs)
+    from great_expectations_spark.profiler import profile
+
+    df = spark.createDataFrame([
+        (1, 0.5, decimal.Decimal("1.250"), "ab", bytearray(b"\x00\x01"), True,
+         datetime.datetime(2024, 1, 5, 7, 8, 9), datetime.date(2024, 1, 5), None),
+        (7, -2.25, decimal.Decimal("-3.500"), "héllo", bytearray(b"xyz"), False,
+         datetime.datetime(2023, 12, 31, 23, 59, 59), datetime.date(2023, 12, 31), None),
+        (None, 10.0, None, None, None, None, None, None, None),
+        (3, 1e-3, decimal.Decimal("100.001"), "", bytearray(b""), True,
+         datetime.datetime(2024, 6, 1), datetime.date(2024, 6, 1), None),
+    ], "l long, d double, m decimal(10,3), s string, b binary, f boolean, "
+       "t timestamp, dt date, z double")
+    stats = ("min", "max", "mean", "stddev", "min_ts", "max_ts",
+             "min_len", "max_len", "avg_len")
+    base = {"n_rows": 4, "n_null": 1, "null_fraction": 0.25,
+            "cardinality_band": "unique", **dict.fromkeys(stats)}
+    expected = {
+        "l": {"dtype": "bigint", "kind": "numeric", "approx_distinct": 3,
+              "min": 1.0, "max": 7.0, "mean": 3.6666666666666665,
+              "stddev": 3.0550504633038935},
+        "d": {"dtype": "double", "kind": "numeric", "approx_distinct": 4,
+              "n_null": 0, "null_fraction": 0.0, "min": -2.25, "max": 10.0,
+              "mean": 2.06275, "stddev": 5.42502690469519},
+        "m": {"dtype": "decimal(10,3)", "kind": "numeric", "approx_distinct": 3,
+              "min": -3.5, "max": 100.001, "mean": 32.5836667,
+              "stddev": 58.433408683161154},
+        "s": {"dtype": "string", "kind": "string", "approx_distinct": 3,
+              "min_len": 0.0, "max_len": 5.0, "avg_len": 2.3333333333333335},
+        "b": {"dtype": "binary", "kind": "binary", "approx_distinct": None,
+              "cardinality_band": None,
+              "min_len": 0.0, "max_len": 3.0, "avg_len": 1.6666666666666667},
+        "f": {"dtype": "boolean", "kind": "boolean", "approx_distinct": 2,
+              "cardinality_band": "two"},
+        "t": {"dtype": "timestamp", "kind": "datetime", "approx_distinct": 3,
+              "min_ts": "2023-12-31 23:59:59", "max_ts": "2024-06-01 00:00:00"},
+        "dt": {"dtype": "date", "kind": "datetime", "approx_distinct": 3,
+               "min_ts": "2023-12-31", "max_ts": "2024-06-01"},
+        "z": {"dtype": "double", "kind": "numeric", "approx_distinct": 0,
+              "n_null": 4, "null_fraction": 1.0, "cardinality_band": "one"},
+    }
+    got = [r.asDict() for r in profile(df).collect()]
+    assert [r["column"] for r in got] == list(expected)
+    for r in got:
+        want = {"column": r["column"], **base, **expected[r["column"]]}
+        assert r == pytest.approx(want, rel=1e-12), r["column"]
+
+
+def test_suggested_suite_passes_on_its_own_data(spark, docs):
+    """The onboarding assistant's suite validates green on the data it
+    was profiled from."""
+    from great_expectations_spark import validate
+    from great_expectations_spark.data_assistant import run_onboarding_assistant
+
+    suite = run_onboarding_assistant(docs).suite
     assert len(suite.expectations) >= 5
     res = validate(docs, suite, result_format="BOOLEAN_ONLY")
     assert all(r.success for r in res.results), [
@@ -44,24 +100,23 @@ def test_suggested_suite_passes_on_its_own_data(spark, docs):
 
 
 def test_suggest_suite_fused_value_sets(spark):
-    """Value sets come from ONE fused bounded collect job; columns past the
-    cardinality cap fall back to range expectations (numeric) or nothing."""
-    from great_expectations_spark.profiler import suggest_suite
+    """Under a VERY_FEW cardinality limit a 2-value column gets its value
+    set; a 40-value column gets a range, never an in-set expectation."""
+    from great_expectations_spark.data_assistant import run_onboarding_assistant
 
     df = spark.createDataFrame(
         [(i, ["a", "b"][i % 2], float(i)) for i in range(40)],
         "id long, tag string, x double",
     )
-    suite = suggest_suite(df, set_cardinality_max=5)
+    suite = run_onboarding_assistant(df, cardinality_limit_mode="VERY_FEW").suite
     by_col = {}
     for e in suite.expectations:
         by_col.setdefault(e.kwargs.get("column"), []).append(e.expectation_type)
-    assert "expect_column_values_to_be_in_set" in by_col["tag"]
-    in_set = next(e for e in suite.expectations
-                  if e.expectation_type == "expect_column_values_to_be_in_set"
-                  and e.kwargs["column"] == "tag")
-    assert in_set.kwargs["value_set"] == ["a", "b"]
-    # 40-distinct columns exceed the cap: ranges, never unbounded sets
+    in_set = [e for e in suite.expectations
+              if e.expectation_type == "expect_column_values_to_be_in_set"
+              and e.kwargs["column"] == "tag"]
+    assert len(in_set) == 1
+    assert sorted(in_set[0].kwargs["value_set"]) == ["a", "b"]
     assert "expect_column_values_to_be_in_set" not in by_col.get("x", [])
     assert "expect_column_values_to_be_between" in by_col["x"]
 
@@ -444,32 +499,24 @@ def test_suggest_suite_includes_passing_formats_on_webpages(spark):
     """VERDICT r2 #4 'done' criterion: suggested suites on the webpages
     fixture include a passing regex/strftime expectation."""
     from great_expectations_spark import validate
-    from great_expectations_spark.profiler import suggest_suite
+    from great_expectations_spark.data_assistant import run_onboarding_assistant
     from great_expectations_spark.sources.webpages import webpages
 
     wp = webpages(spark, 400).withColumn(
         "fetch_date", F.date_format("warc_ts", "yyyy-MM-dd HH:mm:ss"))
     cols = wp.select("url", "fetch_date", "text", "lang")
-    suite = suggest_suite(cols)
-    types = {(e.expectation_type, e.kwargs.get("column"))
-             for e in suite.expectations}
-    assert ("expect_column_values_to_match_strftime_format", "fetch_date") in types
-    assert any(t == "expect_column_values_to_match_regex" for t, _ in types)
-    res = validate(cols, suite, result_format="BOOLEAN_ONLY")
-    assert res.success, [
-        (r.expectation_config.expectation_type, r.expectation_config.kwargs)
-        for r in res.results if not r.success]
-
-
-def test_suggest_suite_format_inference_opt_out(spark):
-    from great_expectations_spark.profiler import suggest_suite
-    from great_expectations_spark.sources.webpages import webpages
-
-    wp = webpages(spark, 200).select("url", "text")
-    suite = suggest_suite(wp, infer_string_formats=False)
-    types = {e.expectation_type for e in suite.expectations}
-    assert "expect_column_values_to_match_regex" not in types
-    assert "expect_column_values_to_match_strftime_format" not in types
+    for threshold in (0.9, 1.0):
+        suite = run_onboarding_assistant(cols, format_threshold=threshold).suite
+        types = {(e.expectation_type, e.kwargs.get("column"))
+                 for e in suite.expectations}
+        assert ("expect_column_values_to_match_strftime_format",
+                "fetch_date") in types, threshold
+        assert any(t == "expect_column_values_to_match_regex"
+                   for t, _ in types), threshold
+        res = validate(cols, suite, result_format="BOOLEAN_ONLY")
+        assert res.success, [
+            (r.expectation_config.expectation_type, r.expectation_config.kwargs)
+            for r in res.results if not r.success]
 
 
 def test_infer_formats_single_row_full_match(spark):
