@@ -12,7 +12,8 @@ semantic-type classification becomes an explicit ``df.schema`` pass
 ``include_column_names``), so the emitted config is plain data a user
 can inspect, edit, and re-run — and the profiling cost keeps the
 runner's fused shape: one schema pass, one fused domain agg, one fused
-metric agg, one groupBy per batching, one format-inference scan.
+metric agg, one groupBy per batching, one format-inference scan (plus a
+strptime confirm scan only when some value could be a date).
 
 Every emitted expectation validates GREEN on the data that produced it
 (the reference assistant's contract): exact estimators produce envelope
@@ -277,10 +278,11 @@ def onboarding_profiler_config(
                  "class_name": "MetricSingleBatchParameterBuilder",
                  "metric_name": "column_values.length_max",
                  "metric_domain_kwargs": "$domain.domain_kwargs"},
-                # format_sample_mod: candidate evaluation is per-row
-                # Python work (strftime mask = pandas UDF) — at crawl
-                # scale run it on a deterministic 1/mod sample; ratios,
-                # not exact counts, drive the emission
+                # format_sample_mod: candidate evaluation is a regex per
+                # candidate per row (plus Python strptime on the values
+                # a strftime prefilter admits) — at crawl scale run it
+                # on a seeded per-row 1/mod F.rand sample; ratios, not
+                # exact counts, drive the emission
                 {"name": "date_format",
                  "class_name": "SimpleDateFormatStringParameterBuilder",
                  "metric_domain_kwargs": "$domain.domain_kwargs",

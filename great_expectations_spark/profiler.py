@@ -10,15 +10,21 @@ metric registry (``interactive.metric_aggs``), so each metric and each
 exact-vs-sketch choice is written once.
 
 ``profile_details`` adds the per-column drill-down of the profiling docs
-page, and ``infer_formats`` the regex / strftime candidate evaluation of
-the rule profiler's format builders. Suites are bootstrapped by
-``data_assistant.run_onboarding_assistant``.
+page, and ``infer_formats`` / ``infer_formats_by_column`` the regex /
+strftime candidate evaluation of the rule profiler's format builders.
+Suites are bootstrapped by ``data_assistant.run_onboarding_assistant``.
 """
 
 from __future__ import annotations
 
+import _strptime
+import functools
+import operator
+import re
+import sys
+
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -216,9 +222,13 @@ def profile_details(
 # lists are ordered most-specific-first and ties keep the earlier (more
 # informative) candidate, deterministically; (b) the reference issues one
 # metric computation per candidate — here every regex is a JVM-codegen
-# conditional sum and every strftime candidate is one bit of a per-column
-# bitmask computed by a single Arrow-batched pandas UDF, so the whole
-# evaluation is ONE scan regardless of candidate count.
+# conditional sum, and so is every strftime candidate's PREFILTER (a Java
+# regex that every value strptime accepts must fully match, read through
+# ``prefilter_text``, see ``strptime_prefilter``), so the first scan runs
+# no Python at all. Only when some prefilter admits rows does a second
+# scan run, feeding just the admitted values to one Arrow-batched pandas
+# UDF per column whose bits (one per candidate) Python strptime decides —
+# the counts stay exact.
 
 CANDIDATE_REGEXES: list[str] = [
     # ordered most-specific → least-specific (see deviation note above);
@@ -268,27 +278,111 @@ CANDIDATE_STRFTIME: list[str] = [
     "%H:%M:%S.%f",
 ]
 
+# strptime directives whose text comes from the locale (names, AM/PM, time
+# zone names): an executor's locale may differ from the driver's, so the
+# prefilter admits any run of characters there
+_LOCALE_NAMES = "aAbBpZ"
+# directives whose whole layout comes from the locale: no prefilter
+_LOCALE_LAYOUTS = ("c", "x", "X")
+# candidates per strftime mask UDF: every bit fits a positive long
+_MASK_BITS = 62
+# Python's re counts hundreds of non-ASCII code points as \d or \s. The
+# prefilters read their input with each of those mapped to one private-use
+# sentinel per class (``prefilter_text``), so a \d or \s in a prefilter is
+# a class of a few characters, not hundreds
+_SENTINELS = {"\\d": "\ue000", "\\s": "\ue001"}
+
+
+@functools.cache
+def _py_class(escape: str) -> tuple[str, str]:
+    """(the non-ASCII code points Python's ``re`` matches with ``escape``
+    in a str pattern, a Java class of its ASCII matches plus the escape's
+    sentinel). Java's own classes differ from Python's: ``(?U)\\s`` lacks
+    the separators ``\\x1c``-``\\x1f``, which Python counts as
+    whitespace."""
+    every = "".join(map(chr, range(sys.maxunicode + 1)))
+    hits = re.findall(escape, every)
+    ranges: list[list[int]] = []
+    for ch in [ch for ch in hits if ch < "\x80"] + [_SENTINELS[escape]]:
+        if ranges and ranges[-1][1] == ord(ch) - 1:
+            ranges[-1][1] = ord(ch)
+        else:
+            ranges.append([ord(ch), ord(ch)])
+
+    def lit(cp: int) -> str:
+        ch = chr(cp)
+        return ch if ch.isascii() and ch.isalnum() else f"\\x{{{cp:X}}}"
+
+    return "".join(ch for ch in hits if ch >= "\x80"), "[" + "".join(
+        lit(lo) + (f"-{lit(hi)}" if hi > lo else "")
+        for lo, hi in ranges) + "]"
+
+
+def _fold(ch: str) -> str:
+    """``ch`` as ``prefilter_text`` writes it."""
+    for escape, sentinel in _SENTINELS.items():
+        if ch in _py_class(escape)[0]:
+            return sentinel
+    return ch
+
+
+def prefilter_text(col: Column) -> Column:
+    """``col`` as the strftime prefilters read it: every non-ASCII code
+    point that Python's ``re`` matches with ``\\d`` (``\\s``) becomes that
+    class's sentinel, code point for code point."""
+    digits, spaces = _py_class("\\d")[0], _py_class("\\s")[0]
+    return F.translate(col, digits + spaces,
+                       _SENTINELS["\\d"] * len(digits)
+                       + _SENTINELS["\\s"] * len(spaces))
+
+
+def strptime_prefilter(fmt: str) -> str | None:
+    """A Java regex that fully matches ``prefilter_text(v)`` for every
+    value ``v`` that ``datetime.strptime(v, fmt)`` accepts, or None when
+    ``fmt`` has no translation (``%c`` / ``%x`` / ``%X``, a bad directive,
+    a stray ``%``).
+
+    Derived from CPython's own ``_strptime`` regex — the one strptime
+    matches before its range checks (Feb 30, second 62 and the like fail
+    only there) — with ``\\d`` and ``\\s`` spelled as the ASCII code
+    points Python matches plus the sentinel ``prefilter_text`` maps the
+    rest to (literals mapped the same way), IGNORECASE as ``(?iu)``, and
+    the locale name directives widened to any characters. strptime takes
+    the first match in alternation order and then demands that it end the
+    string; a backtracking Java full match accepts every such string, so
+    the prefilter admits a superset of what strptime accepts."""
+    table = {k: v for k, v in _strptime._TimeRE_cache.items()
+             if k not in _LOCALE_LAYOUTS}
+    table.update(dict.fromkeys(_LOCALE_NAMES, "(?s:.*)"))
+    try:
+        pattern = _strptime.TimeRE.pattern(table, fmt)
+    except (KeyError, IndexError):
+        return None
+    out, i = [], 0
+    while i < len(pattern):
+        if pattern[i] == "\\":
+            esc = pattern[i:i + 2]
+            out.append(_py_class(esc)[1] if esc in _SENTINELS else esc)
+            i += 2
+        elif pattern.startswith("(?P<", i):  # named group -> plain group
+            out.append("(?:")
+            i = pattern.index(">", i) + 1
+        else:
+            out.append(_fold(pattern[i]))
+            i += 1
+    # a leading \A lets Java try the match at offset 0 only
+    return "(?iu)\\A(?:" + "".join(out) + ")\\z"
+
+
 def _strftime_mask_udf(candidates: list[str]):
     """One Arrow-batched pandas UDF: per value, a bitmask long with bit i
     set iff the value parses under candidates[i] (Python strptime — the
     SAME kernel the strftime expectation uses, functions/udfs.py:60, so an
-    inferred format is guaranteed to pass its own expectation)."""
+    inferred format is guaranteed to pass its own expectation); at most
+    ``_MASK_BITS`` candidates."""
     from datetime import datetime
 
     from pyspark.sql import types as T
-
-    if len(candidates) > 62:
-        raise ValueError("at most 62 strftime candidates per mask")
-    # Digit short-circuit, PER candidate: a digit-free value can only match
-    # candidates without a numeric directive ("%B"/"%A"-style), so those
-    # still take the strptime path while the (default) numeric formats are
-    # skipped. "%%" escapes are stripped first — "%%d" matches the literal
-    # string "%d", which demands no digit.
-    import re as _re
-
-    digit_directive = _re.compile(r"%[dmjyYHIMSfUWeuwVGgTDRFs]")
-    numeric = [bool(digit_directive.search(fmt.replace("%%", "")))
-               for fmt in candidates]
 
     @F.pandas_udf(T.LongType())
     def _mask(s: pd.Series) -> pd.Series:
@@ -296,11 +390,8 @@ def _strftime_mask_udf(candidates: list[str]):
             if v is None:
                 return 0
             v = str(v)
-            has_digit = any(ch.isdigit() for ch in v)
             out = 0
             for i, fmt in enumerate(candidates):
-                if numeric[i] and not has_digit:
-                    continue
                 try:
                     datetime.strptime(v, fmt)
                     out |= 1 << i
@@ -327,63 +418,91 @@ def best_candidate(ratios: dict[str, float],
     return best, best_ratio
 
 
-def infer_formats(
+def _confirm_strftime(
+    src: DataFrame, live: dict[int, list[tuple[str, str | None]]],
+) -> dict[int, dict[str, int]]:
+    """Exact strptime hit counts for ``live`` = {k: [(format, prefilter),
+    ...]}, the candidates whose prefilter admitted some value of column
+    ``c{k}`` of ``src`` (``t{k}`` is its ``prefilter_text``). ONE scan of
+    ``src`` keeps the rows some prefilter admits and feeds each column's
+    admitted values (NULL otherwise) to one mask UDF per ``_MASK_BITS``
+    candidates; Python strptime decides every admitted value."""
+    gates, masks, slots = [], [], []
+    for k, cands in live.items():
+        col = F.col(f"c{k}")
+        gate = (col.isNotNull() if any(p is None for _, p in cands)
+                else functools.reduce(
+                    operator.or_, [F.col(f"t{k}").rlike(p) for _, p in cands]))
+        gates.append(gate)
+        fmts = [f for f, _ in cands]
+        for j in range(0, len(fmts), _MASK_BITS):
+            part = fmts[j:j + _MASK_BITS]
+            masks.append(_strftime_mask_udf(part)(F.when(gate, col))
+                         .alias(f"m{len(masks)}"))
+            slots.append((k, part))
+    admitted = src.where(functools.reduce(operator.or_, gates)).select(*masks)
+    row = admitted.agg(*[
+        F.sum(F.shiftrightunsigned(F.col(f"m{m}"), i).bitwiseAND(F.lit(1)))
+        for m, (_, part) in enumerate(slots) for i in range(len(part))]).first()
+    hits: dict[int, dict[str, int]] = {k: {} for k in live}
+    values = iter(row)
+    for k, part in slots:
+        for f in part:
+            hits[k][f] = int(next(values) or 0)
+    return hits
+
+
+def infer_formats_by_column(
     df: DataFrame,
-    columns: list[str] | None = None,
-    candidate_regexes: list[str] | None = None,
-    candidate_strings: list[str] | None = None,
+    plan: dict[str, tuple[list[str], list[str]]],
     threshold: float = 1.0,
 ) -> dict[str, dict]:
-    """Evaluate every candidate regex / strftime format against every
-    string column in ONE fused scan; per column returns
+    """``infer_formats`` with candidate lists per column: ``plan`` =
+    {column: (regexes, strftime formats)}; columns that are not strings
+    are left out. The rule profiler resolves every format builder of one
+    sample in one call, each column against only its builders'
+    candidates.
 
-        {"nonnull": int,
-         "regex": {"best": str|None, "ratio": float, "ratios": {...},
-                   "counts": {...}},
-         "strftime": {"best": str|None, "ratio": float, "ratios": {...},
-                      "counts": {...}}}
-
-    with success_ratio = matching / (nonnull + eps) and ``best`` the
-    highest ratio >= threshold (reference
-    ParameterBuilder._get_best_candidate_above_threshold,
-    parameter_builder.py:696-714). Pass ``candidate_strings=[]`` to skip
-    strftime evaluation (and its pandas-UDF column) entirely."""
-    regexes = CANDIDATE_REGEXES if candidate_regexes is None else candidate_regexes
-    strfs = CANDIDATE_STRFTIME if candidate_strings is None else candidate_strings
-    cols = [
-        f.name for f in df.schema.fields
-        if isinstance(f.dataType, StringType)
-        and (columns is None or f.name in columns)
-    ]
+    ``df`` is read twice when the confirm scan runs, so it must yield the
+    same rows both times: persist a random sample before passing it."""
+    strings = {f.name for f in df.schema.fields
+               if isinstance(f.dataType, StringType)}
+    cols = [c for c in plan if c in strings]
     if not cols:
         return {}
-
-    src = df
+    src = df.select(
+        *[F.col(c).alias(f"c{k}") for k, c in enumerate(cols)],
+        *[prefilter_text(F.col(c)).alias(f"t{k}")
+          for k, c in enumerate(cols) if plan[c][1]])
+    prefilters = {f: strptime_prefilter(f) for c in cols for f in plan[c][1]}
     aggs = []
-    for c in cols:
-        col = F.col(c)
-        aggs.append(F.count(col).alias(f"{c}__nn"))
-        for i, r in enumerate(regexes):
-            aggs.append(
-                F.sum(F.when(col.rlike(r), 1).otherwise(0)).alias(f"{c}__re{i}"))
-        if strfs:
-            src = src.withColumn(f"__mask__{c}", _strftime_mask_udf(strfs)(col))
-            for i in range(len(strfs)):
-                aggs.append(
-                    F.sum(
-                        F.shiftrightunsigned(F.col(f"__mask__{c}"), i)
-                        .bitwiseAND(F.lit(1))
-                    ).alias(f"{c}__sf{i}")
-                )
+    for k, c in enumerate(cols):
+        regexes, strfs = plan[c]
+        col = F.col(f"c{k}")
+        aggs.append(F.count(col).alias(f"{k}nn"))
+        aggs += [F.sum(F.when(col.rlike(r), 1).otherwise(0)).alias(f"{k}re{i}")
+                 for i, r in enumerate(regexes)]
+        aggs += [F.count(F.when(F.col(f"t{k}").rlike(prefilters[f]), 1))
+                 .alias(f"{k}pf{i}")
+                 for i, f in enumerate(strfs) if prefilters[f] is not None]
     row = src.agg(*aggs).first()
 
+    # a candidate without a prefilter admits every non-null value
+    live = {}
+    for k, c in enumerate(cols):
+        cands = [(f, prefilters[f]) for i, f in enumerate(plan[c][1])
+                 if row[f"{k}nn" if prefilters[f] is None else f"{k}pf{i}"]]
+        if cands:
+            live[k] = cands
+    hits = _confirm_strftime(src, live) if live else {}
+
     out: dict[str, dict] = {}
-    for c in cols:
-        nn = row[f"{c}__nn"] or 0
+    for k, c in enumerate(cols):
+        regexes, strfs = plan[c]
+        nn = row[f"{k}nn"]
         re_counts = {
-            r: int(row[f"{c}__re{i}"] or 0) for i, r in enumerate(regexes)}
-        sf_counts = {
-            f: int(row[f"{c}__sf{i}"] or 0) for i, f in enumerate(strfs)}
+            r: int(row[f"{k}re{i}"] or 0) for i, r in enumerate(regexes)}
+        sf_counts = {f: hits.get(k, {}).get(f, 0) for f in strfs}
         # exact ratio when nonnull rows exist: the reference's
         # n / (nn + eps) form only survives float rounding at nn == 1,
         # where a 100%-matching format lands at 1 - 2e-16 and can never
@@ -401,3 +520,38 @@ def infer_formats(
         }
     return out
 
+
+def infer_formats(
+    df: DataFrame,
+    columns: list[str] | None = None,
+    candidate_regexes: list[str] | None = None,
+    candidate_strings: list[str] | None = None,
+    threshold: float = 1.0,
+) -> dict[str, dict]:
+    """Evaluate every candidate regex / strftime format against every
+    string column; per column returns
+
+        {"nonnull": int,
+         "regex": {"best": str|None, "ratio": float, "ratios": {...},
+                   "counts": {...}},
+         "strftime": {"best": str|None, "ratio": float, "ratios": {...},
+                      "counts": {...}}}
+
+    with success_ratio = matching / (nonnull + eps) and ``best`` the
+    highest ratio >= threshold (reference
+    ParameterBuilder._get_best_candidate_above_threshold,
+    parameter_builder.py:696-714).
+
+    ONE JVM-only scan counts the non-null values, every regex's matches
+    and the values each strftime candidate's ``strptime_prefilter``
+    admits; a candidate that admits none matches none. Only when some
+    candidate admits values does a second scan of ``df`` count the exact
+    strptime matches among the admitted values in a pandas UDF — values
+    no prefilter admits never reach Python. ``df`` must yield the same
+    rows on both scans (persist a random sample first). Pass
+    ``candidate_strings=[]`` to skip strftime evaluation entirely."""
+    regexes = CANDIDATE_REGEXES if candidate_regexes is None else candidate_regexes
+    strfs = CANDIDATE_STRFTIME if candidate_strings is None else candidate_strings
+    cols = [c for c in df.columns if columns is None or c in columns]
+    return infer_formats_by_column(
+        df, {c: (regexes, strfs) for c in cols}, threshold)

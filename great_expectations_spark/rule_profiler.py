@@ -41,8 +41,10 @@ parameter as its own metric-resolution wave):
           through the same registry (``interactive.metric_aggs``), so a
           metric and its exact-vs-sketch choice under ``Options`` are the
           same whole-table and per batch
-  pass 2c ONE ``profiler.infer_formats`` scan per distinct candidate
-          list for all date-format/regex builders
+  pass 2c ONE ``profiler.infer_formats_by_column`` call per distinct
+          format sample for all date-format/regex builders (one JVM-only scan,
+          plus a strptime confirm scan only when a strftime prefilter
+          admits values)
   pass 3  expectation building: pure driver-side substitution +
           condition evaluation, zero jobs
 
@@ -70,6 +72,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -641,14 +644,14 @@ def _resolve_parameters(
     metrics fused into ONE get_metrics call, all per-batch metrics into
     ONE batch_metrics groupBy per distinct batching (real splitter spec or
     (n_chunks, chunk_by) pseudo-chunk fallback), and all format builders
-    into ONE infer_formats per candidate list."""
+    into ONE infer_formats_by_column call per format sample."""
     from great_expectations_spark.assistant import estimate_range
     from great_expectations_spark.interactive import get_metrics, metric_aggs
     from great_expectations_spark.profiler import (
         CANDIDATE_REGEXES,
         CANDIDATE_STRFTIME,
         best_candidate,
-        infer_formats,
+        infer_formats_by_column,
     )
 
     out: dict[tuple[str, _Domain], dict[str, dict]] = {
@@ -664,9 +667,13 @@ def _resolve_parameters(
     # per distinct batching regardless of builder or batch count
     chunk_plans: dict[tuple, dict[str, Any]] = {}
     chunk_sinks: list[tuple[tuple[str, _Domain], str, tuple, str, dict]] = []
-    # candidate-list signature -> (kind, columns, candidates, threshold-per-sink)
-    fmt_plans: dict[tuple[str, tuple], set[str]] = {}
-    fmt_sinks: list[tuple[tuple[str, _Domain], str, str, tuple, str, float]] = []
+    # sample_mod -> {column: ({regex: None}, {strftime format: None})}:
+    # ONE infer_formats_by_column call per sample serves every format
+    # builder, each column checked against only the candidates its
+    # builders name
+    fmt_plans: dict[int | None, dict[str, tuple[dict, dict]]] = {}
+    fmt_sinks: list[
+        tuple[tuple[str, _Domain], str, str, tuple, int | None, str, float]] = []
 
     def domain_kwargs_for(pb: dict, domain: _Domain,
                           rule_vars: dict) -> dict:
@@ -787,15 +794,16 @@ def _resolve_parameters(
                     thr = float(pb.get("threshold", 1.0))
                     # optional 1/sample_mod per-row sample (seeded
                     # F.rand, the reference random sampler's shape):
-                    # candidate-format evaluation is the one builder
-                    # whose cost is per-row PYTHON work (the strftime
-                    # mask is a pandas UDF), so at 10^12 rows it must run
-                    # on a sample — format detection needs unbiased
+                    # candidate evaluation is a regex per candidate per
+                    # row, plus Python strptime on the values some
+                    # strftime prefilter admits, so at 10^12 rows it
+                    # runs on a sample — format detection needs unbiased
                     # ratios, not exact counts
                     smod = pb.get("sample_mod")
                     smod = int(smod) if smod else None
-                    fmt_plans.setdefault((fkind, cands, smod), set()).add(
-                        dk["column"])
+                    lists = fmt_plans.setdefault(smod, {}).setdefault(
+                        dk["column"], ({}, {}))
+                    lists[fkind == "strftime"].update(dict.fromkeys(cands))
                     fmt_sinks.append(
                         (key, name, fkind, cands, smod, dk["column"], thr))
                 elif cls == "ValueSetMultiBatchParameterBuilder":
@@ -905,27 +913,33 @@ def _resolve_parameters(
                 lo, hi = int(lo), int(hi)
         out[key][name] = {"value": [lo, hi], "details": details}
 
-    # pass 2c: one infer_formats per distinct (candidate list, sample)
-    fmt_results: dict[tuple, dict] = {}
-    for (kind, cands, smod), cols in fmt_plans.items():
-        cols = sorted(cols)
+    # pass 2c: one infer_formats_by_column per distinct sample
+    fmt_results: dict[int | None, dict] = {}
+    for smod, plan in fmt_plans.items():
         src = df
         if smod and smod > 1:
             # PER-ROW 1/smod sample (the reference random sampler's
             # F.rand(seed) < p shape, sparkdf_data_sampler.py) — row-wise
             # so match RATIOS stay unbiased; value-keyed hashing would
             # include/exclude whole value groups and skew the ratio on
-            # low-cardinality or skewed columns
-            src = df.where(F.rand(seed=smod) < 1.0 / smod)
-        fmt_results[(kind, cands, smod)] = infer_formats(
-            src, cols,
-            candidate_regexes=list(cands) if kind == "regex" else [],
-            candidate_strings=list(cands) if kind == "strftime" else [],
-            threshold=0.0)  # thresholds applied per sink below
+            # low-cardinality or skewed columns. Persisted: the strptime
+            # confirm scan reads the sample again, and F.rand over rows
+            # whose order differs between reads (a shuffle's output)
+            # would draw a different sample
+            src = (df.where(F.rand(seed=smod) < 1.0 / smod)
+                   .select(*[F.col(c) for c in plan if c in df.columns])
+                   .persist(StorageLevel.MEMORY_AND_DISK))
+        try:
+            fmt_results[smod] = infer_formats_by_column(
+                src, {c: (list(r), list(s)) for c, (r, s) in plan.items()},
+                threshold=0.0)  # thresholds applied per sink below
+        finally:
+            if src is not df:
+                src.unpersist()
     for key, name, kind, cands, smod, col, thr in fmt_sinks:
-        info = fmt_results[(kind, cands, smod)].get(col)
+        info = fmt_results[smod].get(col)
         section = (info or {}).get(kind, {})
-        ratios = section.get("ratios", {})
+        ratios = {c: section["ratios"][c] for c in cands} if section else {}
         best, best_ratio = best_candidate(ratios, thr)
         detail_key = ("candidate_strings" if kind == "strftime"
                       else "evaluated_regexes")

@@ -160,8 +160,8 @@ def test_onboarding_numeric_rule_shares_one_chunk_plan(spark):
 
 
 def test_format_sample_mod_matches_exact_inference(spark, pages):
-    """format_sample_mod evaluates candidate formats on a deterministic
-    1/mod hash sample — the inferred format must agree with the exact
+    """format_sample_mod evaluates candidate formats on a seeded per-row
+    1/mod ``F.rand`` sample — the inferred format must agree with the exact
     full-scan inference on homogeneous data, with the sample recorded in
     the parameter details."""
     df = pages.select("url", "lang")
@@ -175,6 +175,40 @@ def test_format_sample_mod_matches_exact_inference(spark, pages):
         assert "sample_mod" not in e["details"]
     vr = validate(df, sampled.suite, result_format="BOOLEAN_ONLY")
     assert vr.success
+
+
+def test_format_sample_mod_confirm_scan_sees_the_same_sample(spark):
+    """Under format_sample_mod the strftime counts come from two scans —
+    the JVM prefilter scan (non-null count) and the strptime confirm scan
+    (matches among the admitted values). Both read the same seeded
+    ``F.rand`` sample: every candidate's ratio equals a Python strptime
+    recount over that sampled frame, Feb-30 values (admitted by the
+    prefilter, refused by strptime) included."""
+    from datetime import datetime
+
+    from great_expectations_spark.profiler import CANDIDATE_STRFTIME
+
+    def parses(v, fmt):
+        try:
+            datetime.strptime(v, fmt)
+            return True
+        except ValueError:
+            return False
+
+    kinds = [lambda i: f"2021-{i % 12 + 1:02d}-{i % 28 + 1:02d}",
+             lambda i: f"2021-02-{29 + i % 2}",
+             lambda i: f"garbage-{i}"]
+    df = spark.createDataFrame(
+        [(kinds[i % 3](i),) for i in range(3000)], "s string")
+    res = run_onboarding_assistant(df, format_sample_mod=7)
+    ratios = res.parameters["text_columns_rule"]["s"]["date_format"][
+        "details"]["candidate_strings"]
+    sample = [r.s for r in df.where(F.rand(seed=7) < 1.0 / 7).collect()]
+    assert 300 < len(sample) < 560
+    want = {f: sum(parses(v, f) for v in sample) / len(sample)
+            for f in CANDIDATE_STRFTIME}
+    assert ratios == want
+    assert 0.2 < ratios["%Y-%m-%d"] < 0.5
 
 
 def test_onboarding_all_null_columns_stay_green(spark):

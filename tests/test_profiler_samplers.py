@@ -530,6 +530,163 @@ def test_infer_formats_single_row_full_match(spark):
     assert inf["d"]["strftime"]["ratio"] == 1.0
 
 
+# values where a Java regex and Python strptime can disagree: Unicode
+# digits and whitespace, trailing/leading junk, range-check failures,
+# %z spellings, case, padding, and the locale name directives
+_STRPTIME_EDGE_VALUES = [
+    "2024-01-05", "٢٠٢٤-01-05", "٢٠٢٤-٠١-٠٥", "1٢:30:00",
+    "2024-01-05\x1c12:00:00", "2024-01-05　12:00:00",
+    "2024-01-05  12:00:00", "2024-01-05\t12:00:00", "2024-01-05 12:00:00",
+    "2024-01-05\n", " 2024-01-05", "2024-01-05 ",
+    "2024-02-30", "2024-13-01", "2024-02-30 10:00:00",
+    "2024-01-05 23:59:60", "2024-01-05 23:59:61", "2024-01-05 23:59:62",
+    "2024-01-05T12:00:00Z", "2024-01-05t12:00:00", "2024-01-05T12:00:00+01:00",
+    "2024-01-05T12:00:00+0100", "2024-01-05T12:00:00.123456z",
+    "2024-01-05 12:00:00.5+01:00", "2024-01-05 12:00:00,123",
+    "2024-01-05 12:00:00,1234567", "20240105 12:00:00", "2024/01/05 12:00:00",
+    "01/05/2024 12:00:00", "05/jAn/2024:12:00:00", "Jan 05 12:00:00 2024",
+    "JAN  5 2024 12:00:00", "05 Jan 2024 12:00:00", "01/05/24", "05-01-2024",
+    "24-01-05", "12:00:00.5", "DECEMBER", "december", "DeCeMbEr", "Mon 05 Jan",
+    "mon  5 JAN", "Tue\x1c5　feb", " 5", "5", "001", "366", "367",
+    "%Y-01", "%Y-1", "%y-01", "Sat Jan  5 12:00:00 2024",
+    "\U0001d7d0\U0001d7ce\U0001d7d0\U0001d7d2-01-05", "2024-01-0\ue000",
+    "2024\u066001", "\u0662\u0660\u0662\u0664\u066001", "2024001",
+    "https://example.com/2024-01-05", "hello world", "", None,
+]
+_CUSTOM_STRFTIME = ["%B", "%a %d %b", "%c", "%j", "%%Y-%m", "%d", "%Y\u0660%m"]
+
+
+def test_infer_formats_strftime_counts_match_strptime(spark):
+    """The JVM prefilter only narrows which values reach Python strptime:
+    every strftime count equals a strptime recount, on values where a
+    Java regex can disagree with Python (Unicode digits, \\x1c / U+3000
+    whitespace, Feb 30, second 62, %z spellings, case, " 5" for %d,
+    digit-free %B, untranslatable %c, supplementary-plane digits, the
+    prefilters' own sentinel character, a non-ASCII digit in a format)."""
+    from datetime import datetime
+
+    from great_expectations_spark.profiler import (
+        CANDIDATE_STRFTIME,
+        infer_formats,
+        prefilter_text,
+        strptime_prefilter,
+    )
+
+    def parses(v, fmt):
+        try:
+            datetime.strptime(v, fmt)
+            return True
+        except ValueError:
+            return False
+
+    assert strptime_prefilter("%c") is None
+    assert strptime_prefilter("%Y-%") is None
+    cands = CANDIDATE_STRFTIME + _CUSTOM_STRFTIME
+    df = spark.createDataFrame([(v,) for v in _STRPTIME_EDGE_VALUES], "s string")
+    got = infer_formats(df, candidate_regexes=[], candidate_strings=cands)["s"]
+    values = [v for v in _STRPTIME_EDGE_VALUES if v is not None]
+    want = {f: sum(parses(v, f) for v in values) for f in cands}
+    assert got["nonnull"] == len(values)
+    mismatches = {f: (got["strftime"]["counts"][f], want[f])
+                  for f in cands if got["strftime"]["counts"][f] != want[f]}
+    # each prefilter on its own admits every value strptime accepts (the
+    # counts above cannot see a per-candidate slip while another
+    # candidate, like the any-text %B, admits the same value)
+    pre = {f: strptime_prefilter(f) for f in cands}
+    admitted = df.select("s", *[
+        prefilter_text(F.col("s")).rlike(p).alias(f"p{i}")
+        for i, p in enumerate(pre.values()) if p is not None]).collect()
+    for r in (r for r in admitted if r.s is not None):
+        flags = iter(r[1:])
+        for f, p in pre.items():
+            if p is not None and not next(flags) and parses(r.s, f):
+                mismatches[(f, r.s)] = "rejected by the prefilter"
+    assert mismatches == {}
+    # the recount itself has teeth: Python accepts the Unicode digit and
+    # whitespace spellings and the digit-free month name
+    assert parses("2024-01-05\x1c12:00:00", "%Y-%m-%d %H:%M:%S")
+    assert parses("٢٠٢٤-01-05", "%Y-%m-%d")
+    assert want["%B"] == 3 and want["%d"] == 2 and want["%c"] == 1
+    assert want["%Y\u0660%m"] == 2 and want["%Y-%m-%d"] == 3
+    # every prefilter stays short: \d and \s are classes of a few
+    # characters, the rest of Python's classes is folded by prefilter_text
+    assert all(len(p) < 600 for p in pre.values() if p is not None)
+
+
+def test_infer_formats_more_than_62_strftime_candidates(spark):
+    """One mask UDF holds 62 candidate bits; a longer list (the rule
+    profiler merges the lists of every builder on a column) is split over
+    several UDFs and every count still equals a strptime recount."""
+    from datetime import datetime
+
+    from great_expectations_spark.profiler import (
+        CANDIDATE_STRFTIME,
+        infer_formats,
+    )
+
+    cands = CANDIDATE_STRFTIME + [f"%Y-%m-%d run{i}" for i in range(50)]
+    values = ["2024-01-05", "2024-02-30", "2024-01-05 12:00:00"] + [
+        f"2024-01-{1 + i % 28:02d} run{i}" for i in range(0, 50, 3)]
+    df = spark.createDataFrame([(v,) for v in values], "s string")
+    got = infer_formats(df, candidate_regexes=[], candidate_strings=cands)
+
+    def parses(v, fmt):
+        try:
+            datetime.strptime(v, fmt)
+            return True
+        except ValueError:
+            return False
+
+    assert len(cands) > 62
+    assert got["s"]["strftime"]["counts"] == {
+        f: sum(parses(v, f) for v in values) for f in cands}
+    assert got["s"]["strftime"]["counts"]["%Y-%m-%d run48"] == 1
+
+
+def _sql_plans_during(spark, fn):
+    """(fn(), physical plans of the SQL executions fn started)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    seen = {e.executionId() for e in _scala_list(store.executionsList())}
+    out = fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, [e.physicalPlanDescription()
+                 for e in _scala_list(store.executionsList())
+                 if e.executionId() not in seen]
+
+
+def _scala_list(seq):
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def test_infer_formats_runs_no_python_without_date_like_values(
+        spark, new_job_ids):
+    """Default candidates over URL-like and prose values: no strftime
+    prefilter admits a value, so inference is one JVM-only scan; a date
+    among them adds the strptime confirm scan."""
+    from great_expectations_spark.profiler import infer_formats
+
+    rows = [(f"https://example.com/p/{i}?q={i * 7}",
+             f"plain prose line {i}, nothing to parse here.") for i in range(200)]
+    df = spark.createDataFrame(rows, "url string, text string")
+    (inf, plans), jobs = new_job_ids(
+        lambda: _sql_plans_during(spark, lambda: infer_formats(df)))
+    assert len(plans) == 1
+    assert not any("EvalPython" in p for p in plans), plans
+    assert all(n == 0 for c in inf.values()
+               for n in c["strftime"]["counts"].values())
+    assert inf["url"]["regex"]["best"] is not None
+
+    dated = df.union(spark.createDataFrame(
+        [("2024-01-05", "2024-02-30 10:00:00")], "url string, text string"))
+    (inf2, plans2), jobs2 = new_job_ids(
+        lambda: _sql_plans_during(spark, lambda: infer_formats(dated)))
+    assert len(plans2) == 2 and len(jobs2) > len(jobs)
+    assert ["EvalPython" in p for p in plans2] == [False, True]
+    assert inf2["url"]["strftime"]["counts"]["%Y-%m-%d"] == 1
+    assert inf2["text"]["strftime"]["counts"]["%Y-%m-%d %H:%M:%S"] == 0
+
+
 def test_seen_chunks_seeds_once_then_memory(spark, docs, tmp_path):
     """ADVICE r4: the idempotence gate reads the results table ONCE at
     stream (re)start to seed a driver-side chunk_id set; every later

@@ -224,6 +224,101 @@ def test_date_format_builder(spark):
     assert validate(df, res.suite).results[0].success
 
 
+def test_format_builders_share_one_inference_call(spark, monkeypatch):
+    """Every date-format and regex builder on the same format sample rides
+    ONE infer_formats_by_column call; each column is checked against only
+    the candidates its own builders name (a regex-only column gets no
+    strftime candidate), and each builder reports only its own
+    candidates' ratios. A builder on a different sample gets its own
+    call."""
+    from great_expectations_spark import profiler
+
+    calls = []
+    real = profiler.infer_formats_by_column
+
+    def counting(df, plan, threshold=1.0):
+        calls.append(plan)
+        return real(df, plan, threshold)
+
+    monkeypatch.setattr(profiler, "infer_formats_by_column", counting)
+    df = spark.createDataFrame(
+        [(f"2024-01-{10 + i % 9}", str(i)) for i in range(40)],
+        "day string, code string")
+
+    def builder(name, cls, col, **kw):
+        return {"name": name, "class_name": cls,
+                "metric_domain_kwargs": {"column": col}, **kw}
+
+    config = {"name": "fmts", "config_version": 1.0, "rules": {"r": {
+        "domain_builder": {"class_name": "TableDomainBuilder"},
+        "parameter_builders": [
+            builder("day_fmt", "SimpleDateFormatStringParameterBuilder",
+                    "day", candidate_strings=["%d/%m/%Y", "%Y-%m-%d"]),
+            builder("code_fmt", "SimpleDateFormatStringParameterBuilder",
+                    "code", candidate_strings=["%H"]),
+            builder("code_re", "RegexPatternStringParameterBuilder",
+                    "code", candidate_regexes=[r"^\d+$"]),
+            builder("day_re", "RegexPatternStringParameterBuilder", "day",
+                    candidate_regexes=[r"^\d+$"], sample_mod=3)],
+        "expectation_configuration_builders": []}}}
+    res = run_rule_based_profiler(df, config)
+    assert calls == [
+        {"day": ([], ["%d/%m/%Y", "%Y-%m-%d"]),
+         "code": ([r"^\d+$"], ["%H"])},
+        {"day": ([r"^\d+$"], [])}]
+    params = res.parameters["r"]["table"]
+    assert params["day_fmt"]["value"] == "%Y-%m-%d"
+    assert params["day_fmt"]["details"]["candidate_strings"] == {
+        "%d/%m/%Y": 0.0, "%Y-%m-%d": 1.0}
+    assert params["code_fmt"]["details"]["candidate_strings"] == {
+        "%H": 24 / 40}
+    assert params["code_re"]["details"]["evaluated_regexes"] == {
+        r"^\d+$": 1.0}
+    assert params["day_re"]["details"]["sample_mod"] == 3
+
+
+def test_format_sample_over_a_reordering_shuffle(spark):
+    """A format sample is read twice when the strptime confirm scan runs:
+    regex matches and the non-null count come from the prefilter scan,
+    strptime matches from the confirm scan. Over a shuffle whose output
+    order differs between reads (an orderBy on a nondeterministic key), a
+    seeded ``F.rand`` draws other rows on each read, so pass 2c persists
+    the sample. Half the values are ``2020-01-dd``, half ``2020/01/dd``:
+    on one sample the full-match regex and ``%Y-%m-%d`` count the same
+    rows."""
+    import random
+
+    # OS entropy: forked Python workers share the random module's state
+    key = F.udf(lambda: random.SystemRandom().random(),
+                "double").asNondeterministic()
+    df = spark.range(20000).select(F.format_string(
+        "2020%s01%s%02d", F.when(F.col("id") % 2 == 0, "-").otherwise("/"),
+        F.when(F.col("id") % 2 == 0, "-").otherwise("/"),
+        (F.col("id") % 28 + 1).cast("int")).alias("d")).orderBy(key())
+    # the premise: two reads (two queries), two samples
+    reads = [sorted(r.d for r in df.where(F.rand(seed=7) < 1.0 / 7).collect())
+             for _ in range(2)]
+    assert reads[0] != reads[1]
+
+    config = {"name": "fmts", "config_version": 1.0, "rules": {"r": {
+        "domain_builder": {"class_name": "TableDomainBuilder"},
+        "parameter_builders": [
+            {"name": "fmt", "class_name":
+                "SimpleDateFormatStringParameterBuilder",
+             "metric_domain_kwargs": {"column": "d"}, "sample_mod": 7,
+             "candidate_strings": ["%Y-%m-%d", "%Y/%m/%d"]},
+            {"name": "re", "class_name": "RegexPatternStringParameterBuilder",
+             "metric_domain_kwargs": {"column": "d"}, "sample_mod": 7,
+             "candidate_regexes": [r"^\d{4}-\d{2}-\d{2}$"]}],
+        "expectation_configuration_builders": []}}}
+    params = run_rule_based_profiler(df, config).parameters["r"]["table"]
+    fmt = params["fmt"]["details"]["candidate_strings"]
+    assert fmt["%Y-%m-%d"] == params["re"]["details"]["evaluated_regexes"][
+        r"^\d{4}-\d{2}-\d{2}$"]
+    assert fmt["%Y-%m-%d"] + fmt["%Y/%m/%d"] == 1.0
+    assert 0.4 < fmt["%Y-%m-%d"] < 0.6
+
+
 def test_map_metric_domain_and_table_builder(spark):
     df = spark.createDataFrame(
         [(1, "a", None), (2, "b", None), (3, None, None)],
