@@ -273,13 +273,14 @@ class Splitter:
 
 def _kll_quantiles(spark: SparkSession, b64: str,
                    fractions: list[float]) -> list[float]:
-    """Query quantile values out of a merged KLL sketch — one driver-local
-    1-row select on literal data (no table scan)."""
-    row = spark.range(1).select(*[
+    """Query quantile values out of a merged KLL sketch: a projection of
+    literals over a one-row driver-local frame, which the optimizer folds
+    on the driver — no Spark job."""
+    row = local_frame(spark, [(0,)], "x int").select(*[
         F.kll_sketch_get_quantile_double(F.unbase64(F.lit(b64)), F.lit(float(f)))
         .alias(f"q{i}")
         for i, f in enumerate(fractions)
-    ]).head()
+    ]).collect()[0]
     return [row[i] for i in range(len(fractions))]
 
 
@@ -308,116 +309,165 @@ def _chan_merge_stdev(welford: list) -> tuple[int, float]:
     return n, m2
 
 
+# the expectation identity every rollup groups by: a run whose suite was
+# edited mid-resume keeps its definitions apart
+_EXPECTATION_KEY = ("expectation_index", "expectation_type", "kwargs_json")
+
+# chunk-RELATIVE map conditions (uniqueness: cross-chunk dups are invisible
+# per chunk; ordering: chunk boundaries hide inversions) stay AND-of-chunks.
+# Anchored so select_column_values_to_be_unique_WITHIN_RECORD (row-scoped —
+# the condition only reads its own row) merges like any map condition.
+_CHUNK_RELATIVE = (
+    "(column_values_to_be_unique$)|compound_columns_to_be_unique"
+    "|multicolumn_values_to_be_unique|unique_value_count"
+    "|to_be_increasing|to_be_decreasing|in_other_table"
+)
+
+
+def _expectation_groups(r: DataFrame, extra_keys: tuple[str, ...] = ()) -> list:
+    """ONE aggregate over results-table rows: per (*extra_keys, expectation)
+    the chunk count, the AND of chunk verdicts, the summed map counts, the
+    whole-table map verdict against ``mostly``, and the merged monoid
+    partials — sums/min/max JVM-side, ``hll_union_agg`` for distinct
+    sketches, ``kll_merge_agg_double`` for quantile sketches. One row per
+    group, bounded by the suite (times runs, for ``extra_keys=("run_id",)``)."""
+
+    def gjo(f: str) -> Column:
+        return F.get_json_object(F.col("monoid_json"), f"$.{f}")
+
+    agg = r.groupBy(*extra_keys, *_EXPECTATION_KEY).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.min(F.col("success").cast("int")).cast("boolean").alias("all_chunks_success"),
+        *[F.sum(k).alias(k) for k in _COUNT_KEYS],
+        F.max(F.col("raised_exception").cast("int")).cast("boolean").alias(
+            "raised_exception"),
+        F.max(F.when(F.col("observed_value_json").isNotNull(), 1).otherwise(0))
+        .cast("boolean").alias("chunk_scoped"),
+        F.count(F.col("monoid_json")).alias("n_monoid"),
+        F.max(gjo("kind")).alias("kind"),
+        F.sum(gjo("count").cast("long")).alias("m_count"),
+        F.sum(gjo("sum").cast("double")).alias("m_sum"),
+        F.min(gjo("min").cast("double")).alias("m_min"),
+        F.max(gjo("max").cast("double")).alias("m_max"),
+        F.sum(gjo("nonnull").cast("long")).alias("m_nonnull"),
+        # per-chunk (count, mean, M2) for Chan's stable stdev merge
+        F.collect_list(
+            F.when(
+                gjo("kind") == "stdev",
+                F.array(gjo("count").cast("double"),
+                        gjo("mean").cast("double"),
+                        gjo("m2").cast("double")),
+            )
+        ).alias("m_welford"),
+        F.hll_sketch_estimate(F.hll_union_agg(F.unbase64(gjo("hll"))))
+        .alias("m_hll"),
+        F.base64(F.kll_merge_agg_double(F.unbase64(gjo("kll")))).alias("m_kll"),
+    )
+    mostly = F.coalesce(
+        F.get_json_object(F.col("kwargs_json"), "$.mostly").cast("double"),
+        F.lit(1.0),
+    )
+    nonmissing = F.col("element_count") - F.col("missing_count")
+    return agg.select(
+        "*",
+        # map counts are commutative monoids: the whole-table verdict
+        # applies unless a chunk recorded an observed value or the
+        # condition is chunk-relative
+        (F.col("unexpected_count").isNotNull() & ~F.col("chunk_scoped")
+         & ~F.col("expectation_type").rlike(_CHUNK_RELATIVE)).alias("map_merges"),
+        F.when(nonmissing <= 0, F.lit(True)).otherwise(
+            (nonmissing - F.col("unexpected_count")).cast("double") / nonmissing
+            >= mostly).alias("map_success"),
+    ).collect()
+
+
+def _merged_verdict(spark: SparkSession, row) -> tuple[str, bool] | None:
+    """``(merged_observed_json, merged_success)`` from one group's merged
+    monoid partials, or None when the group cannot merge: some chunk lacks
+    a monoid (mixed options, raised exceptions, non-numeric columns) or the
+    kwargs do not parse — the caller falls back to AND-of-chunks."""
+    from great_expectations_spark.plans.compiler import _between_success
+
+    if row.kind is None or row.n_monoid != row.n_rows:
+        return None
+    try:
+        kwargs = json.loads(row.kwargs_json)
+        n = int(row.m_count or 0)
+        if row.kind == "kll_median":
+            obs: Any = _kll_quantiles(spark, row.m_kll, [0.5])[0] if n else None
+        elif row.kind == "kll_quantiles":
+            # merged values carry the sketch's rank error (~2.3/k^0.937
+            # of a rank, k = Options.kll_k) — approximate, like the
+            # reference's allow_relative_error quantile path
+            qr = kwargs["quantile_ranges"]
+            qs = [float(q) for q in qr["quantiles"]]
+            vals = (_kll_quantiles(spark, row.m_kll, qs)
+                    if n else [None] * len(qs))
+            obs = {"quantiles": qr["quantiles"], "values": vals}
+            ok = True
+            for v, (lo, hi) in zip(vals, qr["value_ranges"]):
+                if v is None or (lo is not None and v < lo) or (
+                        hi is not None and v > hi):
+                    ok = False
+            return json.dumps(obs, default=str), bool(ok)
+        elif row.kind == "count":
+            obs = n
+        elif row.kind == "sum":
+            obs = row.m_sum if n else None
+        elif row.kind == "mean":
+            obs = (row.m_sum / n) if n else None
+        elif row.kind == "min":
+            obs = row.m_min
+        elif row.kind == "max":
+            obs = row.m_max
+        elif row.kind == "stdev":
+            wn, m2 = _chan_merge_stdev(row.m_welford)
+            obs = (m2 / (wn - 1)) ** 0.5 if wn >= 2 else None
+        elif row.kind == "hll":
+            obs = int(row.m_hll or 0)
+        elif row.kind == "hll_prop":
+            nn = int(row.m_nonnull or 0)
+            obs = (int(row.m_hll or 0) / nn) if nn else None
+        else:
+            return None
+        if row.expectation_type == "expect_table_row_count_to_equal":
+            success = obs == int(kwargs["value"])
+        else:
+            success = _between_success(obs, kwargs)
+        return json.dumps(obs, default=str), bool(success)
+    except Exception:
+        # unbindable kwargs ($PARAMETER recorded raw), malformed JSON
+        return None
+
+
 def _merge_monoids(r: DataFrame, extra_keys: tuple[str, ...] = ()) -> list[tuple]:
     """Merge per-chunk aggregate monoids into whole-table verdicts.
 
     Returns ``(*extra_key_values, expectation_index, expectation_type,
     kwargs_json, merged_observed_json, merged_success)`` rows for every
     (*extra_keys, index, type, kwargs) group whose chunks ALL carry a
-    monoid_json payload — one bounded agg over the results table
-    (sums/min/max JVM-side, ``hll_union_agg`` for distinct sketches,
-    ``kll_merge_agg_double`` for quantile sketches), then driver math on
-    one row per aggregate expectation. Grouping by the same
-    (index, type, kwargs) key the rollup uses keeps a run whose suite was
-    edited mid-resume from mixing monoids across expectation definitions;
-    ``extra_keys=("run_id",)`` turns the whole-RUN merge into the per-run
-    metric series that ``history.metric_series`` tracks across runs.
-    Anything incomplete (mixed options, raised exceptions, non-numeric
-    columns) is left out so rollup falls back to AND-of-chunks.
+    monoid_json payload: one aggregate over the results table
+    (``_expectation_groups``), then driver math on one row per aggregate
+    expectation (``_merged_verdict``). ``extra_keys=("run_id",)`` turns
+    the whole-RUN merge into the per-run metric series that
+    ``history.metric_series`` tracks across runs.
     """
-    from great_expectations_spark.plans.compiler import _between_success
-
-    def gjo(f: str) -> Column:
-        return F.get_json_object(F.col("monoid_json"), f"$.{f}")
-
-    rows = (
-        r.groupBy(*extra_keys, "expectation_index", "expectation_type", "kwargs_json")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count(F.col("monoid_json")).alias("n_monoid"),
-            F.max(gjo("kind")).alias("kind"),
-            F.sum(gjo("count").cast("long")).alias("m_count"),
-            F.sum(gjo("sum").cast("double")).alias("m_sum"),
-            F.min(gjo("min").cast("double")).alias("m_min"),
-            F.max(gjo("max").cast("double")).alias("m_max"),
-            F.sum(gjo("nonnull").cast("long")).alias("m_nonnull"),
-            # per-chunk (count, mean, M2) for Chan's stable stdev merge
-            F.collect_list(
-                F.when(
-                    gjo("kind") == "stdev",
-                    F.array(gjo("count").cast("double"),
-                            gjo("mean").cast("double"),
-                            gjo("m2").cast("double")),
-                )
-            ).alias("m_welford"),
-            F.hll_sketch_estimate(F.hll_union_agg(F.unbase64(gjo("hll"))))
-            .alias("m_hll"),
-            F.base64(F.kll_merge_agg_double(F.unbase64(gjo("kll"))))
-            .alias("m_kll"),
-        )
-        .where(F.col("kind").isNotNull() & (F.col("n_monoid") == F.col("n_rows")))
-        .collect()
-    )
-
-    spark = r.sparkSession
     merged: list[tuple] = []
-    for row in rows:
-        extras = tuple(row[k] for k in extra_keys)
-        try:
-            kwargs = json.loads(row.kwargs_json)
-            n = int(row.m_count or 0)
-            if row.kind == "kll_median":
-                obs = _kll_quantiles(spark, row.m_kll, [0.5])[0] if n else None
-            elif row.kind == "kll_quantiles":
-                # merged values carry the sketch's rank error (~2.3/k^0.937
-                # of a rank, k = Options.kll_k) — approximate, like the
-                # reference's allow_relative_error quantile path
-                qr = kwargs["quantile_ranges"]
-                qs = [float(q) for q in qr["quantiles"]]
-                vals = (_kll_quantiles(spark, row.m_kll, qs)
-                        if n else [None] * len(qs))
-                obs = {"quantiles": qr["quantiles"], "values": vals}
-                ok = True
-                for v, (lo, hi) in zip(vals, qr["value_ranges"]):
-                    if v is None or (lo is not None and v < lo) or (
-                            hi is not None and v > hi):
-                        ok = False
-                merged.append(extras + (int(row.expectation_index),
-                               row.expectation_type, row.kwargs_json,
-                               json.dumps(obs, default=str), bool(ok)))
-                continue
-            elif row.kind == "count":
-                obs: Any = n
-            elif row.kind == "sum":
-                obs = row.m_sum if n else None
-            elif row.kind == "mean":
-                obs = (row.m_sum / n) if n else None
-            elif row.kind == "min":
-                obs = row.m_min
-            elif row.kind == "max":
-                obs = row.m_max
-            elif row.kind == "stdev":
-                wn, m2 = _chan_merge_stdev(row.m_welford)
-                obs = (m2 / (wn - 1)) ** 0.5 if wn >= 2 else None
-            elif row.kind == "hll":
-                obs = int(row.m_hll or 0)
-            elif row.kind == "hll_prop":
-                nn = int(row.m_nonnull or 0)
-                obs = (int(row.m_hll or 0) / nn) if nn else None
-            else:
-                continue
-            if row.expectation_type == "expect_table_row_count_to_equal":
-                success = obs == int(kwargs["value"])
-            else:
-                success = _between_success(obs, kwargs)
-            merged.append(extras + (int(row.expectation_index), row.expectation_type,
-                           row.kwargs_json, json.dumps(obs, default=str),
-                           bool(success)))
-        except Exception:
-            # unbindable kwargs ($PARAMETER recorded raw), malformed JSON —
-            # fall back to AND-of-chunks for this expectation
-            continue
+    for row in _expectation_groups(r, extra_keys):
+        m = _merged_verdict(r.sparkSession, row)
+        if m is not None:
+            merged.append(tuple(row[k] for k in extra_keys) + (
+                int(row.expectation_index), row.expectation_type,
+                row.kwargs_json, *m))
     return merged
+
+
+ROLLUP_SCHEMA = (
+    "expectation_index int, expectation_type string, kwargs_json string, "
+    "n_chunks long, element_count long, missing_count long, "
+    "unexpected_count long, raised_exception boolean, chunk_scoped boolean, "
+    "merged_observed_json string, success boolean"
+)
 
 
 @dataclass
@@ -487,76 +537,37 @@ class CheckpointResult:
         whose chunks do not ALL carry a monoid (mixed engine options, a
         non-numeric column, a raised exception) keeps the conservative
         AND-of-chunks verdict with ``chunk_scoped`` true.
+
+        Plan: one aggregate query over the results table computes every
+        sum and sketch merge (one row per expectation); merged KLL
+        quantiles are read on the driver, and the verdicts are judged
+        there. The result is a driver-local frame, ordered by
+        ``expectation_index``, that collects without a Spark job.
         """
         r = self.results_df.where(F.col("run_id") == self.run_id)
-        merged: list[tuple] = []
-        if "monoid_json" in r.columns:
-            merged = _merge_monoids(r)
-        else:  # pre-monoid results table: the merge is provably empty
+        if "monoid_json" not in r.columns:
+            # pre-monoid results table: the merge is provably empty
             r = r.withColumn("monoid_json", F.lit(None).cast("string"))
-        mostly = F.coalesce(
-            F.get_json_object(F.col("kwargs_json"), "$.mostly").cast("double"),
-            F.lit(1.0),
-        )
-        agg = (
-            r.groupBy("expectation_index", "expectation_type", "kwargs_json")
-            .agg(
-                F.count(F.lit(1)).alias("n_chunks"),
-                F.min(F.col("success").cast("int")).cast("boolean").alias("all_chunks_success"),
-                *[F.sum(k).alias(k) for k in _COUNT_KEYS],
-                F.max(F.col("raised_exception").cast("int")).cast("boolean").alias(
-                    "raised_exception"
-                ),
-                F.max(F.when(F.col("observed_value_json").isNotNull(), 1).otherwise(0))
-                .cast("boolean")
-                .alias("chunk_scoped"),
-            )
-        )
-        nonmissing = F.col("element_count") - F.col("missing_count")
-        map_success = F.when(nonmissing <= 0, F.lit(True)).otherwise(
-            (nonmissing - F.col("unexpected_count")).cast("double") / nonmissing
-            >= mostly
-        )
-        is_map = F.col("unexpected_count").isNotNull()
-        # row-scoped conditions merge exactly; chunk-RELATIVE conditions
-        # (uniqueness: cross-chunk dups are invisible per chunk; ordering:
-        # chunk boundaries hide inversions) stay AND-of-chunks. Anchored so
-        # select_column_values_to_be_unique_WITHIN_RECORD (row-scoped — the
-        # condition only reads its own row) merges like any map condition.
-        chunk_relative = F.col("expectation_type").rlike(
-            "(column_values_to_be_unique$)|compound_columns_to_be_unique"
-            "|multicolumn_values_to_be_unique|unique_value_count"
-            "|to_be_increasing|to_be_decreasing|in_other_table")
-        if merged:
-            mdf = local_frame(
-                self.results_df.sparkSession, merged,
-                "expectation_index int, expectation_type string, "
-                "kwargs_json string, merged_observed_json string, "
-                "merged_success boolean",
-            )
-            agg = agg.join(
-                F.broadcast(mdf),
-                ["expectation_index", "expectation_type", "kwargs_json"],
-                "left")
-        else:
-            agg = agg.withColumn(
-                "merged_observed_json", F.lit(None).cast("string")
-            ).withColumn("merged_success", F.lit(None).cast("boolean"))
-        return (
-            agg.withColumn(
-                "success",
-                F.when(F.col("raised_exception"), F.lit(False))
-                .when(is_map & ~F.col("chunk_scoped") & ~chunk_relative, map_success)
-                .when(F.col("merged_success").isNotNull(), F.col("merged_success"))
-                .otherwise(F.col("all_chunks_success")),
-            )
-            .withColumn(
-                "chunk_scoped",
-                F.col("chunk_scoped") & F.col("merged_success").isNull(),
-            )
-            .drop("all_chunks_success", "merged_success")
-            .orderBy("expectation_index")
-        )
+        rows = []
+        for g in _expectation_groups(r):
+            merged = _merged_verdict(r.sparkSession, g)
+            if g.raised_exception:
+                success = False
+            elif g.map_merges:
+                success = g.map_success
+            elif merged is not None:
+                success = merged[1]
+            else:
+                success = g.all_chunks_success
+            rows.append((
+                g.expectation_index, g.expectation_type, g.kwargs_json,
+                g.n_rows, g.element_count, g.missing_count,
+                g.unexpected_count, g.raised_exception,
+                g.chunk_scoped and merged is None,
+                merged[0] if merged else None, success,
+            ))
+        rows.sort(key=lambda t: (t[0], t[1] or "", t[2] or ""))
+        return local_frame(self.results_df.sparkSession, rows, ROLLUP_SCHEMA)
 
 
 def run_checkpoint(

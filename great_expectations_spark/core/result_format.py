@@ -37,6 +37,13 @@ class ResultFormat:
     def at_least(self, tier: str) -> bool:
         return self.level >= TIERS.index(tier)
 
+    @property
+    def needs_source_rows(self) -> bool:
+        """Violation detail that only the violating source rows can give:
+        unexpected rows, or index columns at COMPLETE."""
+        return self.include_unexpected_rows or (
+            self.at_least("COMPLETE") and bool(self.unexpected_index_column_names))
+
     @classmethod
     def parse(cls, rf: Any) -> "ResultFormat":
         if rf is None:

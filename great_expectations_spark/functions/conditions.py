@@ -47,6 +47,10 @@ class MapKernel:
     # shape of each reported unexpected value (reference _format_map_output):
     # "scalar" (column), "pair" (list [a, b]), "record" (dict col->value)
     value_format: str = "scalar"
+    # every unexpected row's value is NULL (not-null checks, under any
+    # row_condition too): the violation lists follow from the unexpected
+    # count, so pass 2 reads rows only for index columns or unexpected rows
+    null_unexpected: bool = False
 
 
 KernelBuilder = Callable[[dict[str, Any]], MapKernel]
@@ -80,7 +84,8 @@ def _not_null(kwargs: dict[str, Any]) -> MapKernel:
     col = F.col(kwargs["column"])
     # element_count is ALL rows; null rows are the unexpected ones
     # (reference: column_values_non_null.py:36-38, filter_column_isnull=False)
-    return MapKernel(include=F.lit(True), ok=col.isNotNull(), value=col, columns=[kwargs["column"]])
+    return MapKernel(include=F.lit(True), ok=col.isNotNull(), value=col,
+                     columns=[kwargs["column"]], null_unexpected=True)
 
 
 @register("expect_column_values_to_be_null")

@@ -18,7 +18,9 @@ mirroring plans/compiler._compile_map), and the mostly-success expression
 is the same whole-table formula ``checkpoint.rollup`` applies to merged
 counts. Aggregate observations come from the metric registry
 (``interactive.metric_aggs``), so medians, quantiles and distinct counts
-take the same exact-or-sketch form under ``Options`` as in ``validate``;
+take the same exact-or-sketch form under ``Options`` as in ``validate``
+(exact quantile ranges through ``validate``'s own rank-based aggregate,
+``compiler._exact_quantiles_agg``, not the registry's interpolated one);
 their between-bounds evaluate as Column predicates per group.
 
 Out of scope (raise, or ``on_unsupported="skip"``): expectations needing
@@ -47,6 +49,7 @@ from great_expectations_spark.plans.compiler import (
     _STRING_ONLY_MAP_TYPES,
     CompileError,
     Options,
+    _exact_quantiles_agg,
     _row_condition,
 )
 
@@ -208,11 +211,15 @@ def validate_by(
                         if b is not None and not isinstance(b, (int, float)):
                             raise CompileError(
                                 f"grouped validation supports numeric bounds only, got {b!r}")
-                qo = (dataclasses.replace(o, exact_quantiles=False)
-                      if kw.get("allow_relative_error") else o)
-                exprs, _ = metric_aggs("column.quantile_values", {
-                    "column": kw["column"], "quantiles": qs}, qo)
-                entry["qalias"] = alias(exprs["v"])
+                if o.exact_quantiles and not kw.get("allow_relative_error"):
+                    # validate()'s rank-based exact quantiles, not the
+                    # registry's interpolated profiler metric
+                    qexpr = _exact_quantiles_agg(F.col(kw["column"]), qs)
+                else:
+                    qexpr = metric_aggs("column.quantile_values", {
+                        "column": kw["column"], "quantiles": qs},
+                        dataclasses.replace(o, exact_quantiles=False))[0]["v"]
+                entry["qalias"] = alias(qexpr)
                 entry["ranges"] = ranges
             else:
                 raise CompileError(

@@ -30,17 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from great_expectations_spark.checkpoint import _COUNT_KEYS, _merge_monoids
-from great_expectations_spark.sources.session import local_frame
-
-# chunk-RELATIVE map conditions (cross-chunk dups / boundary inversions are
-# invisible per chunk) — same exclusion list rollup() applies; their summed
-# counts would understate violations, so their series carries success only
-_CHUNK_RELATIVE = (
-    "(column_values_to_be_unique$)|compound_columns_to_be_unique"
-    "|multicolumn_values_to_be_unique|unique_value_count"
-    "|to_be_increasing|to_be_decreasing|in_other_table"
+from great_expectations_spark.checkpoint import (
+    _CHUNK_RELATIVE,
+    _COUNT_KEYS,
+    _merge_monoids,
 )
+from great_expectations_spark.sources.session import local_frame
 
 
 def metric_series(results_df: DataFrame, runs: list[str] | None = None) -> DataFrame:

@@ -22,7 +22,8 @@ Each expectation compiles to a ``Compiled`` record declaring:
 Unlike the reference (each eager metric = its own Spark action; dozens of
 jobs per suite), a suite of N expectations here costs: 1 fused agg + 1
 optional wave-2 agg + one job per uniqueness/referential/distribution-eager
-expectation + one bounded job per violated map expectation.
+expectation + one bounded job per violated map expectation whose violation
+samples are not already in hand.
 """
 
 from __future__ import annotations
@@ -53,8 +54,9 @@ class Options:
 
     approx_distinct: bool = False
     percentile_accuracy: int = 10000
-    # exact rank-based quantiles via approxQuantile(..., 0) — own Spark job;
-    # False folds a GK sketch into the fused pass (10^12-row mode)
+    # exact rank-based quantiles (approxQuantile(..., 0)'s values) folded
+    # into the fused pass-1 aggregate; False uses a GK sketch at
+    # percentile_accuracy instead (10^12-row mode)
     exact_quantiles: bool = True
     complete_list_cap: int = 100_000
     distinct_set_cap: int = 100_000
@@ -114,6 +116,15 @@ class Compiled:
     schema_only: bool = False
     # wave-2 kernel builder (z-score violation pass needs wave-1 values)
     kernel2: Callable[[Metrics], MapKernel] | None = None
+    # pass-1 aggregates whose expression depends on a column's type (an
+    # expression that cannot analyze over the input would fail the whole
+    # fused aggregate): built from the frame's schema, merged into ``aggs``
+    typed_aggs: Callable[[T.StructType], dict[str, Column]] | None = None
+
+    def pass1_aggs(self, schema: T.StructType) -> dict[str, Column]:
+        if self.typed_aggs is None:
+            return self.aggs
+        return {**self.aggs, **self.typed_aggs(schema)}
 
 
 COMPILERS: dict[str, Callable[[ExpectationConfiguration, Options], Compiled]] = {}
@@ -427,10 +438,11 @@ def _with_counts(result: dict, metrics: Metrics, k_total: str, k_nn: str) -> dic
 # ---- chunk-monoid partials (Options.chunk_monoids) --------------------------
 # Commutative partial state fused into the SAME single agg pass so that
 # CheckpointResult.rollup can merge chunk results into an exact whole-table
-# aggregate verdict. Numeric partials go through try_cast(double): finalize
-# only attaches the monoid when the column's schema type is numeric (a merged
-# double min over strings/timestamps would silently change comparison
-# semantics), so non-numeric aggregate expectations keep AND-of-chunks.
+# aggregate verdict. Numeric partials go through try_cast(double), so they
+# are built (``_numeric_aggs``) and attached only when the column's schema
+# type is numeric (a merged double min over strings/timestamps would
+# silently change comparison semantics): non-numeric aggregate expectations
+# keep AND-of-chunks.
 
 _MONOID_FIELDS: dict[str, tuple[str, ...]] = {
     "mean": ("count", "sum"),
@@ -469,6 +481,16 @@ def _monoid_aggs(kind: str, guarded: Column, key: str,
     return {f: (f"monoid.{kind}.{f}|{key}", exprs[f]) for f in _MONOID_FIELDS[kind]}
 
 
+def _numeric_aggs(c: str, aggs: dict[str, Column]):
+    """``Compiled.typed_aggs`` that adds ``aggs`` only over a numeric column
+    ``c``: their double casts do not analyze over dates or binaries, and a
+    non-numeric column attaches no monoid anyway."""
+    def build(schema: T.StructType) -> dict[str, Column]:
+        return aggs if isinstance(schema[c].dataType, T.NumericType) else {}
+
+    return build
+
+
 def _attach_numeric_monoid(result: dict, metrics: Metrics, kind: str,
                            mkeys: dict, c: str) -> dict:
     schema = metrics.get("__schema__")
@@ -504,9 +526,10 @@ def _agg_between(
         (k_total, k_nn), count_aggs = _count_keys_aggs(c, kwargs, rc)
         aggs = {key: agg_builder(kwargs, _guard(col, rc), options), **count_aggs}
         mkeys: dict = {}
+        typed_aggs = None
         if options.chunk_monoids and monoid_kind is not None:
             mkeys = _monoid_aggs(monoid_kind, _guard(col, rc), key, options)
-            aggs.update({k: expr for k, expr in mkeys.values()})
+            typed_aggs = _numeric_aggs(c, dict(mkeys.values()))
 
         def finalize(metrics: Metrics) -> EVR:
             if require_numeric:
@@ -531,7 +554,8 @@ def _agg_between(
                 result=result,
             )
 
-        return Compiled(config=config, finalize=finalize, aggs=aggs)
+        return Compiled(config=config, finalize=finalize, aggs=aggs,
+                        typed_aggs=typed_aggs)
 
     return _c
 
@@ -600,6 +624,20 @@ def _quantiles_agg(col: Column, qs: float | list[float], o: Options) -> Column:
     if o.exact_quantiles:
         return F.percentile(col, p)
     return F.percentile_approx(col, p, o.percentile_accuracy)
+
+
+def _exact_quantiles_agg(col: Column, qs: list[float]) -> Column:
+    """Exact rank-based quantiles of a numeric ``col`` at ``qs`` — the
+    values ``approxQuantile(c, qs, 0.0)`` returns (reference Spark
+    quantiles, column_quantile_values.py:177-209) — as one aggregate that
+    folds into a fused pass: ``percentile_approx`` at accuracy Int.MaxValue
+    over the column's double image, NaN and NULL skipped."""
+    if not all(0.0 <= q <= 1.0 for q in qs):
+        raise CompileError(f"quantiles must be in [0, 1], got {qs}")
+    x = col.cast("double")
+    return F.percentile_approx(
+        F.when(~F.isnan(x), x), F.array(*[F.lit(float(q)) for q in qs]),
+        F.lit(2147483647))
 
 
 def _distinct_count_agg(col: Column, o: Options) -> Column:
@@ -701,21 +739,25 @@ def _quantiles(config: ExpectationConfiguration, options: Options) -> Compiled:
     mkeys: dict = {}
     if options.chunk_monoids:
         mkeys = _monoid_aggs("kll_quantiles", col, key, options)
-        aggs.update({mk: expr for mk, expr in mkeys.values()})
-    eager = None
     if exact:
-        # reference Spark quantiles: df.approxQuantile(col, q, 0) = exact
-        # rank-based values (column_quantile_values.py:177-209); own job
-        def eager(df: DataFrame, metrics: Metrics) -> dict[str, Any]:
-            d = df.where(F.col(c).isNotNull())
-            if rc is not None:
-                d = d.where(rc)
-            return {key: d.stat.approxQuantile(c, [float(q) for q in quantiles], 0.0)}
+        # finalize raises the reference's error for a non-numeric column
+        typed_aggs = _numeric_aggs(c, {
+            key: _exact_quantiles_agg(col, [float(q) for q in quantiles]),
+            **dict(mkeys.values())})
     else:
         aggs[key] = _quantiles_agg(col, quantiles, dataclasses.replace(
             options, exact_quantiles=False, percentile_accuracy=accuracy))
+        typed_aggs = _numeric_aggs(c, dict(mkeys.values()))
 
     def finalize(metrics: Metrics) -> EVR:
+        schema = metrics.get("__schema__")
+        if exact and schema is not None and c in schema.fieldNames():
+            dt = schema[c].dataType
+            if not isinstance(dt, T.NumericType):
+                # df.stat.approxQuantile's own message
+                raise ValueError(
+                    f"requirement failed: Quantile calculation for column {c} "
+                    f"with data type {repr(dt).replace('()', '')} is not supported.")
         values = _py(metrics.get(key)) or [None] * len(quantiles)
         ok = True
         for v, (lo, hi) in zip(values, ranges):
@@ -732,7 +774,8 @@ def _quantiles(config: ExpectationConfiguration, options: Options) -> Compiled:
             result=result,
         )
 
-    return Compiled(config=config, finalize=finalize, aggs=aggs, eager=eager)
+    return Compiled(config=config, finalize=finalize, aggs=aggs,
+                    typed_aggs=typed_aggs)
 
 
 def _collect_distinct_aggs(c: str, rc: Column | None, cap: int) -> tuple[str, str, dict[str, Column]]:
@@ -1102,36 +1145,65 @@ def _uniqueness_compiler(name: str, cols_fn: Callable[[dict[str, Any]], list[str
             if rc is not None:
                 d = d.filter(rc)
             d = d.filter(base_include)
-            counts = d.groupBy(*cols).agg(F.count(F.lit(1)).alias("__n"))
-            dup_keys_df = counts.where(F.col("__n") > 1)
-            dup = dup_keys_df.agg(
-                F.coalesce(F.sum("__n"), F.lit(0)).alias("dup_rows"),
-                F.count(F.lit(1)).alias("dup_keys"),
-            ).first()
-            # violation frame for pass 2: LEFT SEMI join of the rows against
-            # the duplicated keys — reuses the dup-key frame the count path
-            # already built; unlike a Window.partitionBy(key) sample, a
-            # skewed dup key never funnels through one task. NULL-SAFE join
-            # keys (groupBy treats NULL as a value, so the list must too)
-            # and full source rows kept so index columns /
-            # include_unexpected_rows still resolve downstream.
-            key_struct = F.struct(*[F.col(c).alias(c) for c in cols])
-            dk = dup_keys_df.select(
-                *[F.col(c).alias(f"__dk_{c}") for c in cols])
-            join_cond = None
-            for c in cols:
-                p = F.col(c).eqNullSafe(F.col(f"__dk_{c}"))
-                join_cond = p if join_cond is None else (join_cond & p)
-            vdf = (
-                d.join(dk, on=join_cond, how="left_semi")
-                .withColumn(
-                    "__value", F.col(cols[0]) if single else key_struct)
-            )
-            return {
-                k_unexp: int(dup["dup_rows"]),
-                f"dup_keys|{config.id}": int(dup["dup_keys"]),
-                f"__violations_df__|{config.id}": vdf,
+            value = F.col(cols[0]) if single else F.struct(
+                *[F.col(c).alias(c) for c in cols])
+            dup_keys = (d.groupBy(*cols).agg(F.count(F.lit(1)).alias("__n"))
+                        .where(F.col("__n") > 1))
+            dups = dup_keys.select(value.alias("__v"), "__n")
+            rf = metrics["__rf__"]
+            # Unless pass 2 must read source rows, the samples come from the
+            # same query as the counts: the ``need`` smallest duplicate keys
+            # (each stands for __n rows) and, at SUMMARY, the k most
+            # frequent — bounded top-k branches over the one counts exchange.
+            k = rf.partial_unexpected_count
+            need = options.complete_list_cap if rf.at_least("COMPLETE") else k
+            branches = [dups.agg(
+                F.coalesce(F.sum("__n"), F.lit(0)).alias("__rows"),
+                F.count(F.lit(1)).alias("__keys"),
+            ).withColumn("__b", F.lit(0))]
+            if rf.at_least("BASIC") and not rf.needs_source_rows:
+                branches.append(
+                    dups.withColumn("__b", F.lit(1)).orderBy("__v").limit(need))
+                if rf.at_least("SUMMARY"):
+                    branches.append(dups.withColumn("__b", F.lit(2))
+                                    .orderBy(F.desc("__n"), "__v").limit(k))
+            q = branches[0]
+            for b in branches[1:]:
+                q = q.unionByName(b, allowMissingColumns=True)
+            got: dict[int, list] = {0: [], 1: [], 2: []}
+            for r in q.collect():
+                got[r["__b"]].append(r)
+            sums = got[0][0]
+            out: dict[str, Any] = {
+                k_unexp: int(sums["__rows"]),
+                f"dup_keys|{config.id}": int(sums["__keys"]),
             }
+            if rf.needs_source_rows:
+                # index columns and unexpected rows: pass 2 reads them from a
+                # LEFT SEMI join of the rows against the duplicated keys (a
+                # skewed key never funnels through one task). NULL-SAFE join
+                # keys: groupBy treats NULL as a value, so the list must too.
+                dk = dup_keys.select(*[F.col(c).alias(f"__dk_{c}") for c in cols])
+                join_cond = None
+                for c in cols:
+                    p = F.col(c).eqNullSafe(F.col(f"__dk_{c}"))
+                    join_cond = p if join_cond is None else (join_cond & p)
+                out[f"__violations_df__|{config.id}"] = (
+                    d.join(dk, on=join_cond, how="left_semi")
+                    .withColumn("__value", value))
+            elif rf.at_least("BASIC"):
+                vals: list = []
+                for r in got[1]:
+                    vals.extend(_py(r["__v"])
+                                for _ in range(min(int(r["__n"]), need - len(vals))))
+                out[f"partial_unexpected_list|{config.id}"] = vals[:k]
+                if rf.at_least("SUMMARY"):
+                    out[f"partial_unexpected_counts|{config.id}"] = [
+                        {"value": _py(r["__v"]), "count": int(r["__n"])}
+                        for r in got[2]]
+                if rf.at_least("COMPLETE"):
+                    out[f"unexpected_list|{config.id}"] = vals[:need]
+            return out
 
         def finalize(metrics: Metrics) -> EVR:
             return _map_finalize(config, metrics, k_elem, k_missing, k_unexp)

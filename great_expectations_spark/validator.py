@@ -6,16 +6,21 @@ validator/validation_graph.py:209-347):
   pass 0  schema-only expectations + column-existence pruning (no scan;
           mirrors fail-fast exception capture, validator/validator.py:1229-1263)
   pass 1  ONE fused ``df.agg(...)`` containing every counted/aggregated
-          metric of every expectation, deduped by metric key (generalizes the
-          reference's per-domain bundling, sparkdf_execution_engine.py:727-805,
-          to the whole suite; row_conditions are folded into conditional
-          aggregates so differing domains still share the scan)
+          metric of every expectation (exact quantiles included), deduped
+          by metric key (generalizes the reference's per-domain bundling,
+          sparkdf_execution_engine.py:727-805, to the whole suite;
+          row_conditions are folded into conditional aggregates so
+          differing domains still share the scan)
   pass 1b optional second fused agg for value-dependent expressions (z-scores)
   eager   one shaped job per uniqueness / referential / distribution
-          expectation (groupBy or anti-join)
-  pass 2  violation extraction: one BOUNDED job per *violated* map
-          expectation (limit k; skipped entirely when counts are clean or
-          result_format is BOOLEAN_ONLY)
+          expectation (groupBy or anti-join); the uniqueness query also
+          returns its violation samples
+  pass 2  violation extraction: one BOUNDED job per violated map
+          expectation whose samples are not already in hand (limit k).
+          No job when the counts are clean, when the eager query took the
+          samples, for not-null checks (every unexpected value is NULL, so
+          the count is the sample) unless index columns or unexpected rows
+          are asked for, or when result_format is BOOLEAN_ONLY
 """
 
 from __future__ import annotations
@@ -337,7 +342,7 @@ class SparkValidator:
         agg_requests: dict[str, Any] = {}
         for _, comp, _err in compiled:
             if comp is not None:
-                agg_requests.update(comp.aggs)
+                agg_requests.update(comp.pass1_aggs(schema))
         self._run_agg(agg_requests, metrics, compiled, wave=1)
 
         # ---- pass 1b: wave-2 agg (value-dependent expressions) ----------
@@ -395,18 +400,14 @@ class SparkValidator:
                 if comp is None or err is not None:
                     continue
                 k_unexp = f"unexpected_count|{config.id}"
-                if k_unexp not in metrics:
-                    continue  # not a map-style expectation
-                if not metrics.get(k_unexp):
+                if (k_unexp not in metrics  # not a map-style expectation
+                        or f"partial_unexpected_list|{config.id}" in metrics):
+                    continue  # or an eager job already took the samples
+                n = int(metrics.get(k_unexp) or 0)
+                if not n:
                     # clean result: the reference still emits EMPTY lists at
                     # each tier (expectation.py:3411-3555) — no Spark job
-                    metrics[f"partial_unexpected_list|{config.id}"] = []
-                    if self.rf.at_least("SUMMARY"):
-                        metrics[f"partial_unexpected_counts|{config.id}"] = []
-                    if self.rf.at_least("COMPLETE"):
-                        metrics[f"unexpected_list|{config.id}"] = []
-                        if self.rf.unexpected_index_column_names:
-                            metrics[f"unexpected_index_list|{config.id}"] = []
+                    metrics.update(self._lists_from_count(config, 0))
                     continue
                 kernel = comp.kernel
                 if kernel is None and comp.kernel2 is not None:
@@ -414,6 +415,14 @@ class SparkValidator:
                         kernel = comp.kernel2(metrics)
                     except Exception:
                         kernel = None
+                if (kernel is not None and kernel.null_unexpected
+                        and not self.rf.needs_source_rows):
+                    # every unexpected value is NULL: the count is the sample
+                    metrics.update(self._lists_from_count(config, n))
+                    if self.rf.at_least("COMPLETE") and self.rf.return_unexpected_index_query:
+                        metrics[f"unexpected_index_query|{config.id}"] = _render_index_query(
+                            kernel.include & F.coalesce(~kernel.ok, F.lit(False)))
+                    continue
                 vtype = (
                     self._fused_value_type(kernel)
                     if (
@@ -492,7 +501,8 @@ class SparkValidator:
             for idx, (config, comp, err) in enumerate(compiled):
                 if comp is None or err is not None:
                     continue
-                own = comp.aggs if wave == 1 else (comp.aggs2(metrics) if comp.aggs2 else {})
+                own = (comp.pass1_aggs(self.df.schema) if wave == 1
+                       else (comp.aggs2(metrics) if comp.aggs2 else {}))
                 own = {k: v for k, v in own.items() if k in requests and k not in metrics}
                 if not own:
                     continue
@@ -505,6 +515,21 @@ class SparkValidator:
                     compiled[idx] = (
                         config, comp, EVR.exception(config, str(e), traceback.format_exc())
                     )
+
+    def _lists_from_count(self, config: ExpectationConfiguration, n: int) -> dict[str, Any]:
+        """The violation lists of ``n`` unexpected rows whose values are all
+        NULL (``n`` = 0: a clean result's empty lists), at each tier."""
+        rf, cid = self.rf, config.id
+        out: dict[str, Any] = {
+            f"partial_unexpected_list|{cid}": [None] * min(n, rf.partial_unexpected_count)}
+        if rf.at_least("SUMMARY"):
+            out[f"partial_unexpected_counts|{cid}"] = (
+                [{"value": None, "count": n}] if n else [])
+        if rf.at_least("COMPLETE"):
+            out[f"unexpected_list|{cid}"] = [None] * min(n, self.options.complete_list_cap)
+            if rf.unexpected_index_column_names:  # n > 0 reads the rows instead
+                out[f"unexpected_index_list|{cid}"] = []
+        return out
 
     def _should_fuse(self, fusable: list, metrics: dict[str, Any]) -> bool:
         """Adaptive plan choice (AQE-style, from pass-1 statistics already

@@ -206,19 +206,21 @@ def test_adaptive_policy(spark, frame, monkeypatch):
 
     monkeypatch.setattr(vmod.SparkValidator, "_collect_violations_fused", spy)
 
-    # 200 rows, 5 violated < count threshold -> per-expectation path
+    # 200 rows, 5 violated; the not-null one needs no rows (its values are
+    # all NULL), so 4 enter the plan choice < count threshold ->
+    # per-expectation path
     validate(frame, _suite(), result_format="SUMMARY", options=Options())
     assert calls == []
 
     # rows threshold forced down -> fused path engages
     validate(frame, _suite(), result_format="SUMMARY",
              options=Options(fuse_rows_threshold=100))
-    assert calls == [5]
+    assert calls == [4]
 
     # count threshold alone can trigger it
     validate(frame, _suite(), result_format="SUMMARY",
-             options=Options(fuse_count_threshold=5))
-    assert calls == [5, 5]
+             options=Options(fuse_count_threshold=4))
+    assert calls == [4, 4]
 
 
 def _forbid_solo_fallback(monkeypatch):

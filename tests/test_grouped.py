@@ -118,6 +118,17 @@ def test_quantile_ranges_per_group(spark, df):
             assert rows[(g, 2)].success == ref.results[2].success
             assert rows[(g, 2)].observed_value == pytest.approx(
                 float(ref.results[2].result["observed_value"]))
+    # exact quantiles are rank-based in both: validate() observes 2.0 for
+    # the median of [1, 2, 3, 4], not the interpolated 2.5
+    four = spark.createDataFrame([("a", float(x)) for x in (1, 2, 3, 4)],
+                                 "g string, v double")
+    qsuite = ExpectationSuite("q4").add(
+        "expect_column_quantile_values_to_be_between", column="v",
+        quantile_ranges={"quantiles": [0.5], "value_ranges": [[2.0, 2.2]]})
+    ref = validate(four, qsuite).results[0]
+    assert ref.result["observed_value"]["values"] == [2.0]
+    assert ref.success is True
+    assert [r.success for r in validate_by(four, qsuite, ["g"]).collect()] == [True]
 
 
 def test_string_only_map_type_needs_string_column(spark, df):

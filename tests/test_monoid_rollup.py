@@ -8,6 +8,7 @@ all — each batch revalidates from scratch (checkpoint/checkpoint.py run
 loop); this engine's results table carries the partial state.
 """
 
+import datetime
 import json
 import math
 import random
@@ -401,3 +402,209 @@ def test_plain_validate_has_no_monoid_payload(spark, skewed_df):
     kinds = [evr.result.get("monoid", {}).get("kind")
              for evr in with_monoids.results]
     assert kinds == ["mean", "sum", "min", "max", "stdev", "count"]
+
+
+def test_monoid_partials_skip_non_numeric_columns(spark, new_job_ids):
+    """A min over a DATE column under chunk_monoids: its double partials do
+    not analyze over dates, so none are built — the verdicts and the job
+    count equal a run without monoids (no pass-1 isolation fallback)."""
+    df = spark.createDataFrame(
+        [(datetime.date(2024, 1, 1 + i % 28), float(i)) for i in range(300)],
+        "d date, v double")
+    suite = (
+        ExpectationSuite("dates")
+        .add("expect_column_min_to_be_between", column="d", min_value="2023-01-01")
+        .add("expect_column_max_to_be_between", column="v", min_value=0)
+    )
+    plain, plain_jobs = new_job_ids(lambda: validate(df, suite))
+    mono, mono_jobs = new_job_ids(
+        lambda: validate(df, suite, options=Options(chunk_monoids=True)))
+    assert len(mono_jobs) == len(plain_jobs)
+    assert [r.success for r in mono.results] == [r.success for r in plain.results]
+    assert [r.success for r in mono.results] == [True, True]
+    assert "monoid" not in mono.results[0].result
+    assert mono.results[1].result["monoid"]["kind"] == "max"
+
+
+# --------------------------------------------- rollup: one aggregate query
+
+WIDE_SUITE = (
+    ExpectationSuite("wide", expectations=list(AGG_SUITE.expectations))
+    .add("expect_table_row_count_to_equal", value=3000)
+    .add("expect_column_median_to_be_between", column="v", min_value=40, max_value=60)
+    .add("expect_column_quantile_values_to_be_between", column="v",
+         quantile_ranges={"quantiles": [0.25, 0.5, 0.75],
+                          "value_ranges": [[30, 60], [40, 60], [45, 70]]})
+    .add("expect_column_unique_value_count_to_be_between", column="g",
+         min_value=5, max_value=5)
+    .add("expect_column_proportion_of_unique_values_to_be_between",
+         column="id", min_value=0.9)
+    .add("expect_column_values_to_not_be_null", column="v", mostly=0.9)
+    .add("expect_column_values_to_be_between", column="v", min_value=20,
+         max_value=100, mostly=0.99)
+    .add("expect_column_values_to_be_unique", column="g")
+    .add("expect_column_min_to_be_between", column="g", min_value="a")
+    .add("expect_column_mean_to_be_between", column="nope", min_value=0)
+    .add("expect_column_values_to_be_increasing", column="id")
+)
+
+ROLLUP_DTYPES = [
+    ("expectation_index", "int"), ("expectation_type", "string"),
+    ("kwargs_json", "string"), ("n_chunks", "bigint"),
+    ("element_count", "bigint"), ("missing_count", "bigint"),
+    ("unexpected_count", "bigint"), ("raised_exception", "boolean"),
+    ("chunk_scoped", "boolean"), ("merged_observed_json", "string"),
+    ("success", "boolean"),
+]
+
+# The rollup rows of WIDE_SUITE over skewed_df, by column_value(g), as the
+# groupBy + broadcast-join plan this aggregate replaced computed them:
+# (n_chunks, element, missing, unexpected, raised, chunk_scoped,
+# merged_observed, success) per expectation index. KLL values (7, 8) vary
+# with the sketch's randomized compaction; they are compared within its
+# rank error.
+MONOID_ROWS = [
+    (5, 3000, 0, None, False, False, 55.810669123334, True),
+    (5, 3000, 0, None, False, False, 167432.00737000201, True),
+    (5, 3000, 0, None, False, False, 19.543958913585996, True),
+    (5, 3000, 0, None, False, False, 135.00506792013053, True),
+    (5, 3000, 0, None, False, False, 19.862915632917424, True),
+    (5, None, None, None, False, False, 3000, True),
+    (5, None, None, None, False, False, 3000, True),
+    (5, 3000, 0, None, False, False, 51.33303292986423, True),
+    (5, 3000, 0, None, False, False,
+     {"quantiles": [0.25, 0.5, 0.75],
+      "values": [44.54530892921541, 51.33303292986423, 59.270615103179786]}, True),
+    (5, None, None, None, False, False, 5, True),
+    (5, None, None, None, False, False, 0.999, True),
+    (5, 3000, 0, 0, False, False, None, True),
+    (5, 3000, 0, 236, False, False, None, False),
+    (5, 3000, 0, 3000, False, False, None, False),
+    (5, 3000, 0, None, False, True, None, True),
+    (5, None, None, None, True, False, None, False),
+    (5, 3000, 0, 0, False, False, None, True),
+]
+# the same results table without its monoid_json column: AND-of-chunks
+PRE_MONOID_SUCCESS = [True, True, True, True, True, False, False, True, True,
+                      False, True, True, False, False, True, False, True]
+
+
+def _assert_rollup(roll, rows):
+    assert roll.dtypes == ROLLUP_DTYPES
+    got = roll.collect()
+    assert [r.expectation_index for r in got] == list(range(len(WIDE_SUITE.expectations)))
+    for r, cfg, want in zip(got, WIDE_SUITE.expectations, rows):
+        assert r.expectation_type == cfg.expectation_type
+        assert r.kwargs_json == json.dumps(cfg.kwargs, sort_keys=True, default=str)
+        *exact, merged, success = want
+        assert (r.n_chunks, r.element_count, r.missing_count, r.unexpected_count,
+                r.raised_exception, r.chunk_scoped) == tuple(exact), r
+        assert r.success is success, r
+        if merged is None:
+            assert r.merged_observed_json is None, r
+            continue
+        obs = json.loads(r.merged_observed_json)
+        kll = cfg.expectation_type in ("expect_column_median_to_be_between",
+                                       "expect_column_quantile_values_to_be_between")
+        approx = (lambda v: pytest.approx(v, abs=1.0)) if kll else (
+            lambda v: pytest.approx(v, rel=1e-12))
+        if isinstance(merged, dict):
+            assert obs["quantiles"] == merged["quantiles"]
+            assert obs["values"] == approx(merged["values"])
+        else:
+            assert obs == approx(merged), r
+
+
+@pytest.fixture(scope="module")
+def wide_run(spark, skewed_df):
+    """Run r1 (monoids on) and, into the same results table, run r2 over a
+    third of the rows without monoids; the result views run r1."""
+    with tempfile.TemporaryDirectory() as d:
+        run_checkpoint(skewed_df, WIDE_SUITE, Splitter.column_value(skewed_df, "g"),
+                       d + "/res", run_id="r1")
+        res = run_checkpoint(skewed_df.where("id % 3 = 0"), WIDE_SUITE,
+                             Splitter.hashed_column("id", 3), d + "/res",
+                             run_id="r2", options=Options())
+        yield CheckpointResult(run_id="r1", completed_chunks=[], skipped_chunks=[],
+                               results_df=res.results_df)
+
+
+def test_rollup_rows_unchanged_by_one_aggregate_plan(wide_run):
+    _assert_rollup(wide_run.rollup(), MONOID_ROWS)
+    legacy = CheckpointResult(
+        run_id="r1", completed_chunks=[], skipped_chunks=[],
+        results_df=wide_run.results_df.drop("monoid_json"))
+    _assert_rollup(legacy.rollup(), [
+        (n, e, m, u, raised, not raised and u is None, None, ok)
+        for (n, e, m, u, raised, _cs, _obs, _ok), ok
+        in zip(MONOID_ROWS, PRE_MONOID_SUCCESS)])
+
+
+def test_rollup_runs_one_aggregate_and_collects_without_jobs(spark, wide_run, new_job_ids):
+    from great_expectations_spark.checkpoint import _EXPECTATION_KEY, _kll_quantiles
+
+    r = wide_run.results_df.where(F.col("run_id") == "r1")
+    _, agg_jobs = new_job_ids(lambda: r.groupBy(*_EXPECTATION_KEY).count().collect())
+    roll, jobs = new_job_ids(wide_run.rollup)
+    assert len(jobs) == len(agg_jobs)
+    _, collect_jobs = new_job_ids(roll.collect)
+    assert collect_jobs == set()
+    sketch = r.where(F.col("expectation_index") == 7).select(
+        F.get_json_object("monoid_json", "$.kll")).first()[0]
+    values, kll_jobs = new_job_ids(lambda: _kll_quantiles(spark, sketch, [0.1, 0.5]))
+    assert kll_jobs == set()
+    assert values[0] < values[1]
+
+
+# history.metric_series over both runs, as the plan before the one-aggregate
+# merge computed it: (metric_name, value, success) per expectation index.
+SERIES_R1 = [
+    ("observed_value", 55.810669123334, True),
+    ("observed_value", 167432.00737000201, True),
+    ("observed_value", 19.543958913585996, True),
+    ("observed_value", 135.00506792013053, True),
+    ("observed_value", 19.862915632917424, True),
+    ("observed_value", 3000.0, True),
+    ("observed_value", 3000.0, True),
+    ("observed_value", 51.33303292986423, True),  # KLL
+    ("observed_value", None, True),  # merged quantiles: not one number
+    ("observed_value", 5.0, True),
+    ("observed_value", 0.999, True),
+    ("unexpected_percent", 0.0, True),
+    ("unexpected_percent", 7.866666666666666, False),
+    (None, None, False),
+    (None, None, True),
+    (None, None, False),
+    (None, None, True),
+]
+SERIES_R2 = [
+    (None, None, ok) for ok in (True, True, True, True, True, False, False,
+                                True, True, True, True)
+] + [
+    ("unexpected_percent", 0.0, True),
+    ("unexpected_percent", 7.9, False),
+    (None, None, False),
+    (None, None, True),
+    (None, None, False),
+    (None, None, True),
+]
+
+
+def test_metric_series_unchanged_by_one_aggregate_merge(wide_run):
+    from great_expectations_spark.history import metric_series
+
+    series = metric_series(wide_run.results_df)
+    assert series.dtypes == [
+        ("run_id", "string"), ("expectation_index", "int"),
+        ("expectation_type", "string"), ("kwargs_json", "string"),
+        ("run_ts", "double"), ("metric_name", "string"), ("value", "double"),
+        ("success", "boolean")]
+    got = sorted(series.collect(), key=lambda r: (r.run_id, r.expectation_index))
+    want = [("r1", i, w) for i, w in enumerate(SERIES_R1)] + [
+        ("r2", i, w) for i, w in enumerate(SERIES_R2)]
+    assert len(got) == len(want)
+    for r, (run, i, (name, value, ok)) in zip(got, want):
+        assert (r.run_id, r.expectation_index, r.metric_name, r.success) == (
+            run, i, name, ok), r
+        tol = dict(abs=1.0) if (run, i) == ("r1", 7) else dict(rel=1e-12)
+        assert r.value == (None if value is None else pytest.approx(value, **tol)), r

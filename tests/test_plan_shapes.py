@@ -371,3 +371,80 @@ def test_profile_details_top_values_single_scan(spark, fresh_docs):
     plan = _plan(frame)
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
     assert len(frame.collect()) <= 3 * 3
+
+
+def _captured_collects(monkeypatch):
+    """Frames collected while the returned list is live."""
+    import pyspark.sql.classic.dataframe as cdf
+
+    frames = []
+    orig = cdf.DataFrame.collect
+
+    def spy(self):
+        frames.append(self)
+        return orig(self)
+
+    monkeypatch.setattr(cdf.DataFrame, "collect", spy)
+    return frames
+
+
+def test_uniqueness_samples_share_the_counts_exchange(spark, fresh_docs, monkeypatch):
+    """The uniqueness eager query (duplicate sums, smallest keys, top keys)
+    scans once and shuffles once: the sample branches reuse the counts'
+    hash exchange."""
+    from great_expectations_spark import ExpectationSuite, validate
+
+    frames = _captured_collects(monkeypatch)
+    suite = ExpectationSuite("u").add(
+        "expect_column_values_to_be_unique", column="lang")
+    res = validate(fresh_docs, suite, result_format="SUMMARY").results[0]
+    assert res.result["partial_unexpected_counts"]
+    eager = [f for f in frames if "Union" in f._jdf.queryExecution().optimizedPlan().toString()]
+    assert len(eager) == 1
+    plan = eager[0]._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") == 1, plan
+    # a ReusedExchange line names the exchange it reuses
+    reused = final.count("ReusedExchange")
+    assert reused == 2, plan
+    assert final.count("Exchange hashpartitioning") - reused == 1, plan
+    assert final.count("TakeOrderedAndProject") == 2, plan
+
+
+def test_basic_validate_job_count_pinned(spark, tmp_path, new_job_ids):
+    """A BASIC validate of one checkpoint-chunk-sized frame under a
+    crawl-style suite (violated uniqueness, not-null and in-set; exact
+    quantiles; KL) runs a pinned number of Spark jobs: pass 1, the KL and
+    uniqueness eager queries, and one bounded in-set sample."""
+    import random
+
+    from great_expectations_spark import ExpectationSuite, validate
+
+    rng = random.Random(3)
+    langs = ["en", "de", "fr", "xx"]
+    rows = [(f"https://d{rng.randint(0, 7000)}.example/p", rng.choice(langs),
+             None if i % 60 == 0 else "w" * rng.randint(1, 90))
+            for i in range(8000)]
+    path = str(tmp_path / "chunk.parquet")
+    spark.createDataFrame(rows, "url string, lang string, text string") \
+        .withColumn("text_len", F.length("text")).write.parquet(path)
+    chunk = spark.read.parquet(path)
+    suite = (
+        ExpectationSuite("crawl")
+        .add("expect_column_values_to_not_be_null", column="url")
+        .add("expect_column_values_to_be_in_set", column="lang",
+             value_set=["en", "de", "fr"], mostly=0.5)
+        .add("expect_column_values_to_not_be_null", column="text", mostly=0.95)
+        .add("expect_column_quantile_values_to_be_between", column="text_len",
+             quantile_ranges={"quantiles": [0.25, 0.5, 0.75],
+                              "value_ranges": [[0, 1000]] * 3})
+        .add("expect_column_values_to_be_unique", column="url", mostly=0.5)
+        .add("expect_column_kl_divergence_to_be_less_than", column="lang",
+             partition_object={"values": ["en", "de", "fr", "xx"],
+                               "weights": [0.25, 0.25, 0.25, 0.25]},
+             threshold=0.1)
+    )
+    res, jobs = new_job_ids(lambda: validate(chunk, suite, result_format="BASIC"))
+    counts = [r.result.get("unexpected_count") for r in res.results]
+    assert counts[1] > 0 and counts[2] > 0 and counts[4] > 0  # violated
+    assert len(jobs) == 8
