@@ -329,8 +329,9 @@ def _expectation_groups(r: DataFrame, extra_keys: tuple[str, ...] = ()) -> list:
     the chunk count, the AND of chunk verdicts, the summed map counts, the
     whole-table map verdict against ``mostly``, and the merged monoid
     partials — sums/min/max JVM-side, ``hll_union_agg`` for distinct
-    sketches, ``kll_merge_agg_double`` for quantile sketches. One row per
-    group, bounded by the suite (times runs, for ``extra_keys=("run_id",)``)."""
+    sketches, ``kll_merge_agg_double`` for quantile sketches, and the
+    latest ``finished_at`` (``run_ts``). One row per group, bounded by the
+    suite (times runs, for ``extra_keys=("run_id",)``)."""
 
     def gjo(f: str) -> Column:
         return F.get_json_object(F.col("monoid_json"), f"$.{f}")
@@ -341,6 +342,7 @@ def _expectation_groups(r: DataFrame, extra_keys: tuple[str, ...] = ()) -> list:
         *[F.sum(k).alias(k) for k in _COUNT_KEYS],
         F.max(F.col("raised_exception").cast("int")).cast("boolean").alias(
             "raised_exception"),
+        F.max("finished_at").alias("run_ts"),
         F.max(F.when(F.col("observed_value_json").isNotNull(), 1).otherwise(0))
         .cast("boolean").alias("chunk_scoped"),
         F.count(F.col("monoid_json")).alias("n_monoid"),
@@ -438,28 +440,6 @@ def _merged_verdict(spark: SparkSession, row) -> tuple[str, bool] | None:
     except Exception:
         # unbindable kwargs ($PARAMETER recorded raw), malformed JSON
         return None
-
-
-def _merge_monoids(r: DataFrame, extra_keys: tuple[str, ...] = ()) -> list[tuple]:
-    """Merge per-chunk aggregate monoids into whole-table verdicts.
-
-    Returns ``(*extra_key_values, expectation_index, expectation_type,
-    kwargs_json, merged_observed_json, merged_success)`` rows for every
-    (*extra_keys, index, type, kwargs) group whose chunks ALL carry a
-    monoid_json payload: one aggregate over the results table
-    (``_expectation_groups``), then driver math on one row per aggregate
-    expectation (``_merged_verdict``). ``extra_keys=("run_id",)`` turns
-    the whole-RUN merge into the per-run metric series that
-    ``history.metric_series`` tracks across runs.
-    """
-    merged: list[tuple] = []
-    for row in _expectation_groups(r, extra_keys):
-        m = _merged_verdict(r.sparkSession, row)
-        if m is not None:
-            merged.append(tuple(row[k] for k in extra_keys) + (
-                int(row.expectation_index), row.expectation_type,
-                row.kwargs_json, *m))
-    return merged
 
 
 ROLLUP_SCHEMA = (

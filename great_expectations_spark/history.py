@@ -27,15 +27,24 @@ are bounded by construction; nothing here rescans the validated data.
 
 from __future__ import annotations
 
+import json
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from great_expectations_spark.checkpoint import (
     _CHUNK_RELATIVE,
-    _COUNT_KEYS,
-    _merge_monoids,
+    _expectation_groups,
+    _merged_verdict,
 )
 from great_expectations_spark.sources.session import local_frame
+
+SERIES_SCHEMA = (
+    "run_id string, expectation_index int, expectation_type string, "
+    "kwargs_json string, run_ts double, metric_name string, value double, "
+    "success boolean"
+)
 
 
 def metric_series(results_df: DataFrame, runs: list[str] | None = None) -> DataFrame:
@@ -55,70 +64,51 @@ def metric_series(results_df: DataFrame, runs: list[str] | None = None) -> DataF
     ``runs`` optionally restricts (and is not reordered by) the series;
     ordering across runs is by each run's ``finished_at`` watermark — see
     ``flag_drift``.
+
+    Plan: the rollup's one aggregate over the results table, grouped by
+    run too (``checkpoint._expectation_groups``); the merged verdicts and
+    the metric values are derived on the driver, one row per group. The
+    result is a driver-local frame, ordered by run and expectation, that
+    collects without a Spark job.
     """
-    spark = results_df.sparkSession
     r = results_df
     if runs is not None:
         r = r.where(F.col("run_id").isin(list(runs)))
     if "monoid_json" not in r.columns:
         r = r.withColumn("monoid_json", F.lit(None).cast("string"))
 
-    key = ["run_id", "expectation_index", "expectation_type", "kwargs_json"]
-    base = r.groupBy(*key).agg(
-        F.min(F.col("success").cast("int")).cast("boolean").alias("and_success"),
-        *[F.sum(k).alias(k) for k in _COUNT_KEYS],
-        F.max(F.col("raised_exception").cast("int")).cast("boolean").alias("raised"),
-        F.max("finished_at").alias("run_ts"),
-    )
+    rows = []
+    for g in _expectation_groups(r, extra_keys=("run_id",)):
+        merged = _merged_verdict(r.sparkSession, g)
+        if g.raised_exception:
+            name, value, success = None, None, False
+        elif (g.unexpected_count is not None and g.expectation_type is not None
+              and not re.search(_CHUNK_RELATIVE, g.expectation_type)):
+            name, success = "unexpected_percent", g.map_success
+            nonmissing = (None if g.element_count is None
+                          or g.missing_count is None
+                          else g.element_count - g.missing_count)
+            value = (None if nonmissing is None else 0.0 if nonmissing <= 0
+                     else float(g.unexpected_count) * 100.0 / nonmissing)
+        elif merged is not None:
+            # non-numeric merged observed values (quantile dicts, value
+            # sets) stay NULL
+            name, value, success = "observed_value", _number(merged[0]), merged[1]
+        else:
+            name, value, success = None, None, g.all_chunks_success
+        rows.append((g.run_id, g.expectation_index, g.expectation_type,
+                     g.kwargs_json, g.run_ts, name, value, success))
+    rows.sort(key=lambda t: (t[0] or "", t[1], t[2] or "", t[3] or ""))
+    return local_frame(r.sparkSession, rows, SERIES_SCHEMA)
 
-    mostly = F.coalesce(
-        F.get_json_object(F.col("kwargs_json"), "$.mostly").cast("double"),
-        F.lit(1.0),
-    )
-    nonmissing = F.col("element_count") - F.col("missing_count")
-    ratio = F.when(nonmissing <= 0, F.lit(0.0)).otherwise(
-        F.col("unexpected_count").cast("double") * 100.0 / nonmissing
-    )
-    map_success = F.when(nonmissing <= 0, F.lit(True)).otherwise(
-        (nonmissing - F.col("unexpected_count")).cast("double") / nonmissing >= mostly
-    )
-    is_map = (
-        F.col("unexpected_count").isNotNull()
-        & ~F.col("expectation_type").rlike(_CHUNK_RELATIVE)
-    )
 
-    merged = _merge_monoids(r, extra_keys=("run_id",))
-    mdf = local_frame(
-        spark, merged,
-        "run_id string, expectation_index int, expectation_type string, "
-        "kwargs_json string, merged_observed_json string, merged_success boolean",
-    )
-    out = (
-        base.join(F.broadcast(mdf), key, "left")
-        .select(
-            *key,
-            F.col("run_ts"),
-            F.when(F.col("raised"), F.lit(None).cast("string"))
-            .when(is_map, F.lit("unexpected_percent"))
-            .when(F.col("merged_success").isNotNull(), F.lit("observed_value"))
-            .alias("metric_name"),
-            F.when(F.col("raised"), F.lit(None).cast("double"))
-            .when(is_map, ratio)
-            .when(
-                F.col("merged_success").isNotNull(),
-                # non-numeric merged observed values (quantile dicts, value
-                # sets) stay NULL — try_cast, not cast, so they don't error
-                F.col("merged_observed_json").try_cast("double"),
-            )
-            .alias("value"),
-            F.when(F.col("raised"), F.lit(False))
-            .when(is_map, map_success)
-            .when(F.col("merged_success").isNotNull(), F.col("merged_success"))
-            .otherwise(F.col("and_success"))
-            .alias("success"),
-        )
-    )
-    return out
+def _number(observed_json: str) -> float | None:
+    """A merged observed value as a double, or None when it is not one
+    number."""
+    v = json.loads(observed_json)
+    if isinstance(v, bool) or not isinstance(v, (int, float)):
+        return None
+    return float(v)
 
 
 def flag_drift(

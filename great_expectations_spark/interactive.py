@@ -164,6 +164,13 @@ def plan_metrics(requests: dict[str, tuple[str, dict[str, Any]]],
     return aggs, finish, eager
 
 
+def _distinct_set_overflow(column: str, o: Options) -> ValueError:
+    """The error of a ``column.distinct_values`` request over a column
+    with more than ``o.distinct_set_cap`` distinct non-null values."""
+    return ValueError(f"column {column!r} has more than distinct_set_cap="
+                      f"{o.distinct_set_cap} distinct values")
+
+
 def _eager(df: DataFrame, name: str, kw: dict, o: Options):
     c = kw.get("column")
     if name == "table.columns":
@@ -180,9 +187,7 @@ def _eager(df: DataFrame, name: str, kw: dict, o: Options):
         rows = (df.select(c).where(F.col(c).isNotNull()).distinct()
                 .limit(o.distinct_set_cap + 1).collect())
         if len(rows) > o.distinct_set_cap:
-            raise ValueError(
-                f"column {c!r} has more than distinct_set_cap="
-                f"{o.distinct_set_cap} distinct values")
+            raise _distinct_set_overflow(c, o)
         return set(r[0] for r in rows)
     if name == "column.partition":
         # reference column_partition.py:59-113: bin edges from min/max

@@ -12,7 +12,10 @@ exact-vs-sketch choice is written once.
 ``profile_details`` adds the per-column drill-down of the profiling docs
 page, and ``infer_formats`` / ``infer_formats_by_column`` the regex /
 strftime candidate evaluation of the rule profiler's format builders.
-Suites are bootstrapped by ``data_assistant.run_onboarding_assistant``.
+``format_count_plan`` hands out that evaluation's first scan as
+aggregates plus a finish, so the rule profiler fuses the unsampled
+format counts into the whole-table aggregate it runs anyway. Suites are
+bootstrapped by ``data_assistant.run_onboarding_assistant``.
 """
 
 from __future__ import annotations
@@ -222,7 +225,7 @@ def profile_details(
 # lists are ordered most-specific-first and ties keep the earlier (more
 # informative) candidate, deterministically; (b) the reference issues one
 # metric computation per candidate — here every regex is a JVM-codegen
-# conditional sum, and so is every strftime candidate's PREFILTER (a Java
+# ``count_if``, and so is every strftime candidate's PREFILTER (a Java
 # regex that every value strptime accepts must fully match, read through
 # ``prefilter_text``, see ``strptime_prefilter``), so the first scan runs
 # no Python at all. Only when some prefilter admits rows does a second
@@ -419,37 +422,113 @@ def best_candidate(ratios: dict[str, float],
 
 
 def _confirm_strftime(
-    src: DataFrame, live: dict[int, list[tuple[str, str | None]]],
-) -> dict[int, dict[str, int]]:
-    """Exact strptime hit counts for ``live`` = {k: [(format, prefilter),
-    ...]}, the candidates whose prefilter admitted some value of column
-    ``c{k}`` of ``src`` (``t{k}`` is its ``prefilter_text``). ONE scan of
-    ``src`` keeps the rows some prefilter admits and feeds each column's
-    admitted values (NULL otherwise) to one mask UDF per ``_MASK_BITS``
-    candidates; Python strptime decides every admitted value."""
+    src: DataFrame, live: dict[str, tuple[str, list[tuple[str, str | None]]]],
+) -> dict[str, dict[str, int]]:
+    """Exact strptime hit counts for ``live`` = {column: (text column,
+    [(format, prefilter), ...])}, the candidates whose prefilter admitted
+    some value of the column of ``src`` (the text column is its
+    ``prefilter_text``). ONE scan of ``src`` keeps the rows some prefilter
+    admits and feeds each column's admitted values (NULL otherwise) to one
+    mask UDF per ``_MASK_BITS`` candidates; Python strptime decides every
+    admitted value."""
     gates, masks, slots = [], [], []
-    for k, cands in live.items():
-        col = F.col(f"c{k}")
+    for c, (text, cands) in live.items():
+        col = F.col(c)
         gate = (col.isNotNull() if any(p is None for _, p in cands)
                 else functools.reduce(
-                    operator.or_, [F.col(f"t{k}").rlike(p) for _, p in cands]))
+                    operator.or_, [F.col(text).rlike(p) for _, p in cands]))
         gates.append(gate)
         fmts = [f for f, _ in cands]
         for j in range(0, len(fmts), _MASK_BITS):
             part = fmts[j:j + _MASK_BITS]
             masks.append(_strftime_mask_udf(part)(F.when(gate, col))
                          .alias(f"m{len(masks)}"))
-            slots.append((k, part))
+            slots.append((c, part))
     admitted = src.where(functools.reduce(operator.or_, gates)).select(*masks)
     row = admitted.agg(*[
         F.sum(F.shiftrightunsigned(F.col(f"m{m}"), i).bitwiseAND(F.lit(1)))
         for m, (_, part) in enumerate(slots) for i in range(len(part))]).first()
-    hits: dict[int, dict[str, int]] = {k: {} for k in live}
+    hits: dict[str, dict[str, int]] = {c: {} for c in live}
     values = iter(row)
-    for k, part in slots:
+    for c, part in slots:
         for f in part:
-            hits[k][f] = int(next(values) or 0)
+            hits[c][f] = int(next(values) or 0)
     return hits
+
+
+def format_count_plan(
+    df: DataFrame,
+    plan: dict[str, tuple[list[str], list[str]]],
+    threshold: float = 1.0,
+):
+    """The first scan of ``infer_formats_by_column``, split so that a
+    caller can fuse it into an aggregate of its own:
+    ``(projections, aggregates, finish)``.
+
+    ``aggregates`` count the non-null values, every regex's matches and
+    the values each strftime prefilter admits, over
+    ``df.select("*", *projections)`` (the projections are each column's
+    ``prefilter_text``, one per column that has strftime candidates).
+    ``finish(row)``, given a row carrying those aggregates, applies
+    ``threshold`` and returns ``infer_formats_by_column``'s answer; when
+    some prefilter admitted values it first runs the strptime confirm
+    scan over ``df``."""
+    strings = {f.name for f in df.schema.fields
+               if isinstance(f.dataType, StringType)}
+    cols = [c for c in plan if c in strings]
+    prefilters = {f: strptime_prefilter(f) for c in cols for f in plan[c][1]}
+    projections, aggs = [], []
+    for k, c in enumerate(cols):
+        regexes, strfs = plan[c]
+        col = F.col(c)
+        aggs.append(F.count(col).alias(f"f{k}nn"))
+        aggs += [F.count_if(col.rlike(r)).alias(f"f{k}re{i}")
+                 for i, r in enumerate(regexes)]
+        if strfs:
+            projections.append(prefilter_text(col).alias(f"__fmt_t{k}"))
+            text = F.col(f"__fmt_t{k}")
+            aggs += [F.count_if(text.rlike(prefilters[f])).alias(f"f{k}pf{i}")
+                     for i, f in enumerate(strfs) if prefilters[f] is not None]
+
+    def finish(row) -> dict[str, dict]:
+        # a candidate without a prefilter admits every non-null value
+        live = {}
+        for k, c in enumerate(cols):
+            cands = [(f, prefilters[f]) for i, f in enumerate(plan[c][1])
+                     if row[f"f{k}nn" if prefilters[f] is None
+                            else f"f{k}pf{i}"]]
+            if cands:
+                live[c] = (f"__fmt_t{k}", cands)
+        hits = (_confirm_strftime(df.select("*", *projections), live)
+                if live else {})
+
+        out: dict[str, dict] = {}
+        for k, c in enumerate(cols):
+            regexes, strfs = plan[c]
+            nn = row[f"f{k}nn"]
+            re_counts = {
+                r: int(row[f"f{k}re{i}"] or 0) for i, r in enumerate(regexes)}
+            sf_counts = {f: hits.get(c, {}).get(f, 0) for f in strfs}
+            # exact ratio when nonnull rows exist: the reference's
+            # n / (nn + eps) form only survives float rounding at nn == 1,
+            # where a 100%-matching format lands at 1 - 2e-16 and can never
+            # clear the default threshold of exactly 1.0
+            re_ratios = {r: (n / nn if nn else 0.0)
+                         for r, n in re_counts.items()}
+            sf_ratios = {f: (n / nn if nn else 0.0)
+                         for f, n in sf_counts.items()}
+            rb, rr = best_candidate(re_ratios, threshold)
+            sb, sr = best_candidate(sf_ratios, threshold)
+            out[c] = {
+                "nonnull": int(nn),
+                "regex": {"best": rb, "ratio": rr, "ratios": re_ratios,
+                          "counts": re_counts},
+                "strftime": {"best": sb, "ratio": sr, "ratios": sf_ratios,
+                             "counts": sf_counts},
+            }
+        return out
+
+    return projections, aggs, finish
 
 
 def infer_formats_by_column(
@@ -459,66 +538,16 @@ def infer_formats_by_column(
 ) -> dict[str, dict]:
     """``infer_formats`` with candidate lists per column: ``plan`` =
     {column: (regexes, strftime formats)}; columns that are not strings
-    are left out. The rule profiler resolves every format builder of one
-    sample in one call, each column against only its builders'
-    candidates.
+    are left out. ONE aggregate of ``format_count_plan``'s counts, then its
+    ``finish``. The rule profiler fuses the unsampled plan's counts into
+    its whole-table aggregate and calls this only for sampled plans.
 
     ``df`` is read twice when the confirm scan runs, so it must yield the
     same rows both times: persist a random sample before passing it."""
-    strings = {f.name for f in df.schema.fields
-               if isinstance(f.dataType, StringType)}
-    cols = [c for c in plan if c in strings]
-    if not cols:
+    projections, aggs, finish = format_count_plan(df, plan, threshold)
+    if not aggs:
         return {}
-    src = df.select(
-        *[F.col(c).alias(f"c{k}") for k, c in enumerate(cols)],
-        *[prefilter_text(F.col(c)).alias(f"t{k}")
-          for k, c in enumerate(cols) if plan[c][1]])
-    prefilters = {f: strptime_prefilter(f) for c in cols for f in plan[c][1]}
-    aggs = []
-    for k, c in enumerate(cols):
-        regexes, strfs = plan[c]
-        col = F.col(f"c{k}")
-        aggs.append(F.count(col).alias(f"{k}nn"))
-        aggs += [F.sum(F.when(col.rlike(r), 1).otherwise(0)).alias(f"{k}re{i}")
-                 for i, r in enumerate(regexes)]
-        aggs += [F.count(F.when(F.col(f"t{k}").rlike(prefilters[f]), 1))
-                 .alias(f"{k}pf{i}")
-                 for i, f in enumerate(strfs) if prefilters[f] is not None]
-    row = src.agg(*aggs).first()
-
-    # a candidate without a prefilter admits every non-null value
-    live = {}
-    for k, c in enumerate(cols):
-        cands = [(f, prefilters[f]) for i, f in enumerate(plan[c][1])
-                 if row[f"{k}nn" if prefilters[f] is None else f"{k}pf{i}"]]
-        if cands:
-            live[k] = cands
-    hits = _confirm_strftime(src, live) if live else {}
-
-    out: dict[str, dict] = {}
-    for k, c in enumerate(cols):
-        regexes, strfs = plan[c]
-        nn = row[f"{k}nn"]
-        re_counts = {
-            r: int(row[f"{k}re{i}"] or 0) for i, r in enumerate(regexes)}
-        sf_counts = {f: hits.get(k, {}).get(f, 0) for f in strfs}
-        # exact ratio when nonnull rows exist: the reference's
-        # n / (nn + eps) form only survives float rounding at nn == 1,
-        # where a 100%-matching format lands at 1 - 2e-16 and can never
-        # clear the default threshold of exactly 1.0
-        re_ratios = {r: (n / nn if nn else 0.0) for r, n in re_counts.items()}
-        sf_ratios = {f: (n / nn if nn else 0.0) for f, n in sf_counts.items()}
-        rb, rr = best_candidate(re_ratios, threshold)
-        sb, sr = best_candidate(sf_ratios, threshold)
-        out[c] = {
-            "nonnull": int(nn),
-            "regex": {"best": rb, "ratio": rr, "ratios": re_ratios,
-                      "counts": re_counts},
-            "strftime": {"best": sb, "ratio": sr, "ratios": sf_ratios,
-                         "counts": sf_counts},
-        }
-    return out
+    return finish(df.select("*", *projections).agg(*aggs).first())
 
 
 def infer_formats(

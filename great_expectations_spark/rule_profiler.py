@@ -29,22 +29,30 @@ parameter as its own metric-resolution wave):
   pass 1  ONE fused ``df.agg`` for every Categorical / MapMetric domain
           builder across ALL rules (row count + exact distinct counts +
           non-null counts, registry metrics under default ``Options``)
-  pass 2  ONE ``interactive.get_metrics`` call carrying every
-          Metric/ValueSet/ValueCounts/Histogram parameter request of
-          every (rule × domain) — agg-expressible metrics fuse into one
-          scan there; eager ones stay bounded
-  pass 2b ONE ``batch_metrics`` call — one ``groupBy(batch).agg`` — per
-          distinct batching (real splitter spec or (n_chunks, chunk_by)
-          pseudo-chunks, see below) for all NumericMetricRange builders
-          and per-batch MetricMultiBatch builders, then driver-side
-          ``assistant.estimate_range``. Passes 2 and 2b resolve metrics
-          through the same registry (``interactive.metric_aggs``), so a
-          metric and its exact-vs-sketch choice under ``Options`` are the
-          same whole-table and per batch
-  pass 2c ONE ``profiler.infer_formats_by_column`` call per distinct
-          format sample for all date-format/regex builders (one JVM-only scan,
-          plus a strptime confirm scan only when a strftime prefilter
-          admits values)
+  pass 2  ONE whole-table ``df.agg`` carrying every single-batch
+          Metric/ValueSet/ValueCounts/Histogram parameter request of every
+          (rule × domain) that has an aggregate form: registry metrics
+          (``interactive.plan_metrics``), value sets over columns whose
+          exact distinct count pass 1 already holds (``collect_set``,
+          bounded by that count; over ``distinct_set_cap`` it fails with no
+          query), and the counts of the unsampled format plan (pass 2c).
+          Other eager requests (value_counts, value sets of uncounted
+          columns, ...) run their own bounded query
+  pass 2b ONE ``batch_metrics`` call — one ``groupBy(batch).agg``, its
+          rows sorted on the driver — per distinct batching (real splitter
+          spec or (n_chunks, chunk_by) pseudo-chunks, see below) for all
+          NumericMetricRange builders and per-batch MetricMultiBatch
+          builders, then driver-side ``assistant.estimate_range``. Passes 2
+          and 2b resolve metrics through the same registry
+          (``interactive.metric_aggs``), so a metric and its
+          exact-vs-sketch choice under ``Options`` are the same whole-table
+          and per batch
+  pass 2c format builders, one plan per distinct format sample: the
+          unsampled plan's JVM-only counts ride pass 2's aggregate
+          (``profiler.format_count_plan``), a sampled plan runs ONE
+          ``profiler.infer_formats_by_column`` call over its persisted
+          sample; either adds a strptime confirm scan only when a strftime
+          prefilter admits values
   pass 3  expectation building: pure driver-side substitution +
           condition evaluation, zero jobs
 
@@ -178,8 +186,10 @@ def _name_filtered_columns(df: DataFrame, cfg: dict[str, Any]) -> list[str]:
 
 def _resolve_domains(
     df: DataFrame, rules: dict[str, dict]
-) -> dict[str, list[_Domain]]:
-    """All rules' domains. Schema-only builders cost zero jobs; every
+) -> tuple[dict[str, list[_Domain]], dict[str, int]]:
+    """All rules' domains, plus the exact distinct count of the non-null
+    values of every column that a Categorical/MapMetric builder counted
+    (``{column: count}``). Schema-only builders cost zero jobs; every
     Categorical/MapMetric builder's statistics ride ONE fused df.agg."""
     from great_expectations_spark.interactive import plan_metrics
     from great_expectations_spark.plans.compiler import Options
@@ -312,12 +322,16 @@ def _resolve_domains(
                 "CategoricalColumnDomainBuilder, ColumnPairDomainBuilder, "
                 "MultiColumnDomainBuilder, MapMetricColumnDomainBuilder)")
 
+    distinct: dict[str, int] = {}
     if deferred:
         aggs, finish, _ = plan_metrics(requests, Options())
         counts = finish(df.agg(*aggs).first())
         for rname, decide in deferred:
             out[rname] = [_domain(rname, column=c) for c in decide(counts)]
-    return out
+        distinct = {kw["column"]: counts[key]
+                    for key, (metric, kw) in requests.items()
+                    if metric == "column.distinct_values.count"}
+    return out, distinct
 
 
 # ------------------------------------------------------------- $ references
@@ -593,7 +607,8 @@ def chunk_aggregate_frame(
     the batch key carrying every request's registry aggregates
     (``interactive.metric_aggs``) — its exchange count is 1 regardless of
     how many batches the splitter resolves (plan shape pinned by
-    tests/test_plan_shapes.py). Returns ``(frame, finish)``;
+    tests/test_plan_shapes.py). Returns ``(frame, finish)``: the frame's
+    rows (one per batch, key ``__chunk``) come in no particular order, and
     ``finish(row)`` maps one batch row to ``{request key: value}``."""
     from great_expectations_spark.interactive import plan_metrics
     from great_expectations_spark.plans.compiler import Options
@@ -603,10 +618,21 @@ def chunk_aggregate_frame(
         raise ValueError(
             "metrics with no per-batch aggregate form: "
             f"{sorted({requests[k][0] for k in eager})}")
-    frame = (df.groupBy(key.alias("__chunk"))
-             .agg(*aggs)
-             .orderBy(F.col("__chunk").asc_nulls_first()))
-    return frame, finish
+    return df.groupBy(key.alias("__chunk")).agg(*aggs), finish
+
+
+def _ascending_nulls_first(v: Any) -> tuple:
+    """Sort key ordering batch ids as Spark's ``asc_nulls_first`` does:
+    NULL first, NaN above every other number, arrays and structs element
+    by element. Strings compare by code point, which is the order of
+    their UTF-8 bytes; binary values by unsigned byte."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and v != v:
+        return (2,)
+    if isinstance(v, (list, tuple)):
+        return (1, tuple(_ascending_nulls_first(x) for x in v))
+    return (1, v)
 
 
 def batch_metrics(
@@ -617,12 +643,39 @@ def batch_metrics(
 ) -> list[tuple[Any, dict[str, Any]]]:
     """``requests`` (caller key -> (metric_name, kwargs), the
     ``get_metrics`` shape) resolved per batch of ``key``:
-    ``[(batch_id, {request key: value})]`` in batch-id order, all from ONE
-    ``groupBy(key).agg`` — the driver holds one row per batch. Metrics,
-    and their exact-vs-sketch choices under ``options``, are the ones
-    ``get_metrics`` computes over the whole table."""
+    ``[(batch_id, {request key: value})]`` in batch-id order (NULL first),
+    all from ONE ``groupBy(key).agg`` — the driver holds one row per batch
+    and sorts those rows itself. Metrics, and their exact-vs-sketch
+    choices under ``options``, are the ones ``get_metrics`` computes over
+    the whole table."""
     frame, finish = chunk_aggregate_frame(df, key, requests, options)
-    return [(r["__chunk"], finish(r)) for r in frame.collect()]
+    rows = sorted(frame.collect(),
+                  key=lambda r: _ascending_nulls_first(r["__chunk"]))
+    return [(r["__chunk"], finish(r)) for r in rows]
+
+
+# column types whose value sets stay on the eager ``distinct()`` query:
+# Spark's distinct normalises floats nested in them, collect_set does not
+_NESTED = (T.ArrayType, T.MapType, T.StructType)
+
+
+def _collected_set(vals: list[Any]) -> set[Any]:
+    """A ``collect_set`` as the eager ``distinct()`` query returns it:
+    that query's grouping normalises floating-point keys (-0.0 reads 0.0,
+    every NaN is one NaN), collect_set keeps -0.0 and can hold a NaN per
+    partition."""
+    out: set[Any] = set()
+    nan = False
+    for v in vals:
+        if isinstance(v, float):
+            if v != v:
+                if nan:
+                    continue
+                nan = True
+            elif v == 0.0:
+                v = 0.0
+        out.add(v)
+    return out
 
 
 def _sorted_value_set(vals: list[Any]) -> list[Any]:
@@ -639,18 +692,28 @@ def _resolve_parameters(
     variables: dict,
     options: Any,
     batch_specs: dict[str, dict | None] | None = None,
+    distinct_counts: dict[str, int] | None = None,
 ) -> dict[tuple[str, _Domain], dict[str, dict]]:
-    """Every (rule × domain × parameter_builder), with all single-batch
-    metrics fused into ONE get_metrics call, all per-batch metrics into
-    ONE batch_metrics groupBy per distinct batching (real splitter spec or
-    (n_chunks, chunk_by) pseudo-chunk fallback), and all format builders
-    into ONE infer_formats_by_column call per format sample."""
+    """Every (rule × domain × parameter_builder). ONE whole-table aggregate
+    carries every single-batch registry metric, every value set over a
+    column whose exact distinct count ``distinct_counts`` holds (the
+    domain pass's ``{column: count}``), and the first scan of the
+    unsampled format plan; all per-batch metrics ride ONE batch_metrics
+    groupBy per distinct batching (real splitter spec or (n_chunks,
+    chunk_by) pseudo-chunk fallback), and every sampled format plan ONE
+    infer_formats_by_column call."""
     from great_expectations_spark.assistant import estimate_range
-    from great_expectations_spark.interactive import get_metrics, metric_aggs
+    from great_expectations_spark.interactive import (
+        _distinct_set_overflow,
+        _eager,
+        metric_aggs,
+        plan_metrics,
+    )
     from great_expectations_spark.profiler import (
         CANDIDATE_REGEXES,
         CANDIDATE_STRFTIME,
         best_candidate,
+        format_count_plan,
         infer_formats_by_column,
     )
 
@@ -658,6 +721,7 @@ def _resolve_parameters(
         (r, d): {} for r in rules for d in domains.get(r, [])}
 
     batch_specs = batch_specs or {}
+    distinct_counts = distinct_counts or {}
     metric_requests: dict[str, tuple[str, dict]] = {}
     metric_sinks: list[tuple[tuple[str, _Domain], str, str, str]] = []
     # plan_key -> {"key": batch-key Column, "requests": {alias: (metric,
@@ -668,9 +732,8 @@ def _resolve_parameters(
     chunk_plans: dict[tuple, dict[str, Any]] = {}
     chunk_sinks: list[tuple[tuple[str, _Domain], str, tuple, str, dict]] = []
     # sample_mod -> {column: ({regex: None}, {strftime format: None})}:
-    # ONE infer_formats_by_column call per sample serves every format
-    # builder, each column checked against only the candidates its
-    # builders name
+    # ONE format count plan per sample serves every format builder, each
+    # column checked against only the candidates its builders name
     fmt_plans: dict[int | None, dict[str, tuple[dict, dict]]] = {}
     fmt_sinks: list[
         tuple[tuple[str, _Domain], str, str, tuple, int | None, str, float]] = []
@@ -831,9 +894,39 @@ def _resolve_parameters(
                     raise ValueError(
                         f"unknown parameter_builder class_name {cls!r}")
 
-    # pass 2: one fused get_metrics call for everything single-batch
-    metric_values = get_metrics(df, metric_requests, options) \
-        if metric_requests else {}
+    # passes 2 and 2c share ONE whole-table aggregate: the registry
+    # metrics, the value sets whose size the domain pass proved (a
+    # collect_set buffer bounded by that exact count; a count over the cap
+    # fails without a query) and the unsampled format plan's first scan
+    aggs, finish_metrics, eager = plan_metrics(metric_requests, options)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    metric_values: dict[str, Any] = {}
+    value_sets: list[str] = []
+    for alias in eager:
+        metric, mkw = metric_requests[alias]
+        c = mkw.get("column")
+        n = distinct_counts.get(c)
+        if (metric != "column.distinct_values" or mkw != {"column": c}
+                or n is None or isinstance(types.get(c), _NESTED)):
+            metric_values[alias] = _eager(df, metric, mkw, options)
+        elif n > options.distinct_set_cap:
+            raise _distinct_set_overflow(c, options)
+        else:
+            aggs.append(F.collect_set(F.col(c)).alias(f"vs{alias}"))
+            value_sets.append(alias)
+    fmt_plan = {c: (list(r), list(f))
+                for c, (r, f) in fmt_plans.pop(None, {}).items()}
+    # thresholds are applied per sink below
+    projections, fmt_aggs, fmt_finish = format_count_plan(df, fmt_plan, 0.0)
+    row = None
+    if aggs or fmt_aggs:
+        src = df.select("*", *projections) if projections else df
+        row = src.agg(*aggs, *fmt_aggs).first()
+    if aggs:
+        metric_values.update(finish_metrics(row))
+        for alias in value_sets:
+            metric_values[alias] = _collected_set(row[f"vs{alias}"])
+    fmt_results: dict[int | None, dict] = {None: fmt_finish(row)}
     for key, name, alias, cls in metric_sinks:
         v = metric_values[alias]
         metric, dk = metric_requests[alias]
@@ -913,8 +1006,7 @@ def _resolve_parameters(
                 lo, hi = int(lo), int(hi)
         out[key][name] = {"value": [lo, hi], "details": details}
 
-    # pass 2c: one infer_formats_by_column per distinct sample
-    fmt_results: dict[int | None, dict] = {}
+    # pass 2c: one infer_formats_by_column per sampled format plan
     for smod, plan in fmt_plans.items():
         src = df
         if smod and smod > 1:
@@ -1026,9 +1118,9 @@ def run_rule_based_profiler(
     batch_specs = {rname: rule.get("batch_spec") or run_spec
                    for rname, rule in rules.items()}
 
-    domains = _resolve_domains(df, rules)
+    domains, distinct_counts = _resolve_domains(df, rules)
     params = _resolve_parameters(df, rules, domains, merged_vars, options,
-                                 batch_specs)
+                                 batch_specs, distinct_counts)
 
     suite = ExpectationSuite(str(config.get("name", "rule_based_profiler")))
     parameters: dict[str, dict[str, dict[str, dict]]] = {}

@@ -556,6 +556,23 @@ def test_rollup_runs_one_aggregate_and_collects_without_jobs(spark, wide_run, ne
     assert values[0] < values[1]
 
 
+def test_metric_series_runs_one_aggregate_and_collects_without_jobs(
+        spark, wide_run, new_job_ids):
+    """metric_series is the rollup's one aggregate grouped by run too (the
+    plan with its own groupBy, the merge aggregate and a join ran 5 jobs
+    on this table); its frame collects without a job."""
+    from great_expectations_spark.checkpoint import _EXPECTATION_KEY
+    from great_expectations_spark.history import metric_series
+
+    r = wide_run.results_df
+    _, agg_jobs = new_job_ids(
+        lambda: r.groupBy("run_id", *_EXPECTATION_KEY).count().collect())
+    series, jobs = new_job_ids(lambda: metric_series(r))
+    assert len(jobs) == len(agg_jobs)
+    _, collect_jobs = new_job_ids(series.collect)
+    assert collect_jobs == set()
+
+
 # history.metric_series over both runs, as the plan before the one-aggregate
 # merge computed it: (metric_name, value, success) per expectation index.
 SERIES_R1 = [

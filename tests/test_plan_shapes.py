@@ -351,10 +351,10 @@ def test_rule_profiler_real_batches_single_exchange(spark, tmp_path):
             events, key, {"c0": ("column.mean", {"column": "value"}),
                           "c1": ("table.row_count", {})})
         plan = _plan(frame)
-        # one aggregate exchange (+ the orderBy's range exchange), never
-        # one per batch
+        # one aggregate exchange, never one per batch (the rows are sorted
+        # on the driver, so no range exchange either)
         n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
-        assert n_exchanges == 2, plan
+        assert n_exchanges == 1, plan
         assert plan.count("hashpartitioning") == 1, plan
         assert _partial_agg_before_exchange(plan), plan
 
@@ -448,3 +448,23 @@ def test_basic_validate_job_count_pinned(spark, tmp_path, new_job_ids):
     counts = [r.result.get("unexpected_count") for r in res.results]
     assert counts[1] > 0 and counts[2] > 0 and counts[4] > 0  # violated
     assert len(jobs) == 8
+
+
+def test_onboarding_assistant_job_count_pinned(spark, tmp_path, new_job_ids):
+    """``run_onboarding_assistant`` over one month of a crawl-style parquet
+    table runs a pinned number of Spark jobs: the domain pass's aggregate,
+    ONE whole-table aggregate for every single-batch metric, both value
+    sets and the format counts, and the pseudo-chunk groupBy, whose rows
+    are sorted on the driver. The plan with a query per value set, its own
+    format scan and a sorted groupBy ran 15 jobs here."""
+    from great_expectations_spark import run_onboarding_assistant
+    from great_expectations_spark.sources.webpages import webpages
+
+    path = str(tmp_path / "pages.parquet")
+    webpages(spark, 6000, seed=3, partitions=4, max_tokens=60) \
+        .withColumn("warc_month", F.month("warc_ts")) \
+        .write.parquet(path)
+    month = spark.read.parquet(path).where(F.col("warc_month") == 1)
+    res, jobs = new_job_ids(lambda: run_onboarding_assistant(month))
+    assert len(res.suite.expectations) >= 10
+    assert len(jobs) == 7

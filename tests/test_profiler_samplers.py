@@ -613,6 +613,54 @@ def test_infer_formats_strftime_counts_match_strptime(spark):
     assert all(len(p) < 600 for p in pre.values() if p is not None)
 
 
+def test_fused_format_counts_equal_infer_formats_by_column(spark):
+    """The format counts fused into another aggregate (as the rule
+    profiler fuses the unsampled format plan into its whole-table
+    aggregate) give ``infer_formats_by_column``'s answer on the strptime
+    edge values, date-bearing ones included, so the confirm scan runs; so
+    do the rule profiler's builder details."""
+    from great_expectations_spark.profiler import (
+        CANDIDATE_REGEXES,
+        CANDIDATE_STRFTIME,
+        format_count_plan,
+        infer_formats_by_column,
+    )
+    from great_expectations_spark.rule_profiler import run_rule_based_profiler
+
+    cands = CANDIDATE_STRFTIME + _CUSTOM_STRFTIME
+    df = spark.createDataFrame(
+        [(v, i) for i, v in enumerate(_STRPTIME_EDGE_VALUES)], "s string, n int")
+    plan = {"s": (CANDIDATE_REGEXES, cands), "n": (["x"], ["%Y"])}
+    want = infer_formats_by_column(df, plan, 0.5)
+    assert want["s"]["strftime"]["counts"]["%Y-%m-%d"] == 3
+    projections, aggs, finish = format_count_plan(df, plan, 0.5)
+    row = df.select("*", *projections).agg(
+        F.max("n").alias("m0"), F.count("s").alias("m1"), *aggs).first()
+    assert finish(row) == want
+    assert row["m0"] == len(_STRPTIME_EDGE_VALUES) - 1
+
+    def builder(name, cls, **kw):
+        return {"name": name, "class_name": cls,
+                "metric_domain_kwargs": {"column": "s"}, **kw}
+
+    res = run_rule_based_profiler(df, {"name": "f", "rules": {"r": {
+        "domain_builder": {"class_name": "TableDomainBuilder"},
+        "parameter_builders": [
+            builder("fmt", "SimpleDateFormatStringParameterBuilder",
+                    candidate_strings=cands, threshold=0.0),
+            builder("re", "RegexPatternStringParameterBuilder",
+                    candidate_regexes=CANDIDATE_REGEXES, threshold=0.0),
+            builder("mx", "MetricSingleBatchParameterBuilder",
+                    metric_name="column.max")],
+        "expectation_configuration_builders": []}}})
+    params = res.parameters["r"]["table"]
+    got = infer_formats_by_column(df, {"s": plan["s"]}, 0.0)["s"]
+    assert params["fmt"]["details"]["candidate_strings"] == got["strftime"]["ratios"]
+    assert params["fmt"]["value"] == got["strftime"]["best"]
+    assert params["re"]["details"]["evaluated_regexes"] == got["regex"]["ratios"]
+    assert params["mx"]["value"] == max(v for v in _STRPTIME_EDGE_VALUES if v)
+
+
 def test_infer_formats_more_than_62_strftime_candidates(spark):
     """One mask UDF holds 62 candidate bits; a longer list (the rule
     profiler merges the lists of every builder on a column) is split over

@@ -224,23 +224,26 @@ def test_date_format_builder(spark):
     assert validate(df, res.suite).results[0].success
 
 
-def test_format_builders_share_one_inference_call(spark, monkeypatch):
+def test_format_builders_share_one_inference_call(spark, monkeypatch,
+                                                  new_job_ids):
     """Every date-format and regex builder on the same format sample rides
-    ONE infer_formats_by_column call; each column is checked against only
-    the candidates its own builders name (a regex-only column gets no
+    ONE format count plan; each column is checked against only the
+    candidates its own builders name (a regex-only column gets no
     strftime candidate), and each builder reports only its own
-    candidates' ratios. A builder on a different sample gets its own
-    call."""
+    candidates' ratios. The unsampled plan's counts ride the whole-table
+    aggregate of the single-batch metrics; a builder on a different sample
+    gets its own call: 7 jobs, where a query of its own for the unsampled
+    counts made 9."""
     from great_expectations_spark import profiler
 
     calls = []
-    real = profiler.infer_formats_by_column
+    real = profiler.format_count_plan
 
     def counting(df, plan, threshold=1.0):
         calls.append(plan)
         return real(df, plan, threshold)
 
-    monkeypatch.setattr(profiler, "infer_formats_by_column", counting)
+    monkeypatch.setattr(profiler, "format_count_plan", counting)
     df = spark.createDataFrame(
         [(f"2024-01-{10 + i % 9}", str(i)) for i in range(40)],
         "day string, code string")
@@ -259,13 +262,16 @@ def test_format_builders_share_one_inference_call(spark, monkeypatch):
             builder("code_re", "RegexPatternStringParameterBuilder",
                     "code", candidate_regexes=[r"^\d+$"]),
             builder("day_re", "RegexPatternStringParameterBuilder", "day",
-                    candidate_regexes=[r"^\d+$"], sample_mod=3)],
+                    candidate_regexes=[r"^\d+$"], sample_mod=3),
+            {"name": "n", "class_name": "MetricSingleBatchParameterBuilder",
+             "metric_name": "table.row_count"}],
         "expectation_configuration_builders": []}}}
-    res = run_rule_based_profiler(df, config)
+    res, jobs = new_job_ids(lambda: run_rule_based_profiler(df, config))
     assert calls == [
         {"day": ([], ["%d/%m/%Y", "%Y-%m-%d"]),
          "code": ([r"^\d+$"], ["%H"])},
         {"day": ([r"^\d+$"], [])}]
+    assert len(jobs) == 7
     params = res.parameters["r"]["table"]
     assert params["day_fmt"]["value"] == "%Y-%m-%d"
     assert params["day_fmt"]["details"]["candidate_strings"] == {
@@ -275,6 +281,7 @@ def test_format_builders_share_one_inference_call(spark, monkeypatch):
     assert params["code_re"]["details"]["evaluated_regexes"] == {
         r"^\d+$": 1.0}
     assert params["day_re"]["details"]["sample_mod"] == 3
+    assert params["n"]["value"] == 40
 
 
 def test_format_sample_over_a_reordering_shuffle(spark):
@@ -435,21 +442,22 @@ def test_nested_builder_configs_rejected(spark, events):
 
 
 def test_variables_override_and_multi_metric_fusion(spark, events,
-                                                   monkeypatch):
+                                                   monkeypatch, new_job_ids):
     """run(variables=...) overrides config variables; ALL single-batch
-    metric requests across rules and domains ride ONE df.agg job."""
+    metric requests across rules and domains ride ONE df.agg: the run
+    starts as many jobs as that one aggregate does on its own."""
     import great_expectations_spark.interactive as imod
 
-    agg_calls = []
-    orig = imod.get_metrics
+    plans = []
+    orig = imod.plan_metrics
 
-    def spy(df, requests, options=None):
-        agg_calls.append(len(requests))
-        return orig(df, requests, options)
+    def spy(requests, options):
+        plans.append(len(requests))
+        return orig(requests, options)
 
-    # _resolve_parameters does `from ...interactive import get_metrics` at
+    # _resolve_parameters does `from ...interactive import plan_metrics` at
     # call time, so patching the module attribute intercepts it
-    monkeypatch.setattr(imod, "get_metrics", spy)
+    monkeypatch.setattr(imod, "plan_metrics", spy)
 
     config = {
         "name": "v", "config_version": 1.0,
@@ -476,8 +484,15 @@ def test_variables_override_and_multi_metric_fusion(spark, events,
                        "max_value": "$parameter.mx.value",
                        "column": "$domain.domain_kwargs.column"}]},
         }}
-    res = run_rule_based_profiler(events, config, variables={"lo": -123})
-    assert agg_calls == [3]  # one get_metrics call carrying all 3 requests
+    def one_agg():
+        return events.agg(
+            F.min("value"), F.max("user_id"), F.max("event_id")).first()
+
+    one_agg()  # the first read of the cached frame builds the cache
+    res, jobs = new_job_ids(lambda: run_rule_based_profiler(
+        events, config, variables={"lo": -123}))
+    assert plans == [3]  # one metric plan carrying all 3 requests
+    assert len(jobs) == len(new_job_ids(one_agg)[1])
     assert res.suite.expectations[0].kwargs["min_value"] == -123
 
 
