@@ -1,18 +1,29 @@
 """Suite → fused-plan compiler.
 
 Each expectation compiles to a ``Compiled`` record declaring:
-  * ``aggs``   — keyed aggregate Columns folded into ONE suite-wide
-                 ``df.agg(...)`` (pass 1). Keys are metric ids; identical
+  * ``aggs``   — keyed aggregate Columns folded into ONE suite-wide scan
+                 aggregate (pass 1). Keys are metric ids; identical
                  keys across expectations are computed once (the metric-dedup
                  idea of the reference's ValidationGraph —
                  validator/validation_graph.py:96-100 — moved to plan time).
+                 No DISTINCT aggregate: pass 1 runs as observed metrics.
   * ``aggs2``  — second-wave aggregates whose expressions depend on wave-1
                  metric VALUES (z-scores need mean/std first; reference
                  resolves these as graph waves — validation_graph.py:325-347).
                  All wave-2 requests across the suite fuse into one more agg.
   * ``eager``  — metrics that need their own shaped job (groupBy uniqueness,
-                 value counts, anti-joins). One job per request, but only for
+                 anti-joins). One job per request, but only for
                  expectations that actually need them.
+  * ``value_counts`` / ``distinct_count`` / ``group_kernel`` — declarations
+                 on a ``ValueDomain`` (column, row_condition): the validator
+                 plans ONE bounded value-count query per domain that some
+                 expectation reads counts from (categorical KL,
+                 chi-square), or whose exact distinct count a violated
+                 single-column map expectation can share it with; the same
+                 rows give the domain's exact distinct counts (the number
+                 of groups) and the samples of its violated single-column
+                 map expectations. An exact distinct count with no such
+                 query runs a count-only one.
   * ``finalize`` — driver-side math turning metric values into an EVR
                  (mostly-ratio: expectation.py:3576-3586; min/max bounds:
                  expectation.py:2339-2433).
@@ -20,10 +31,17 @@ Each expectation compiles to a ``Compiled`` record declaring:
                  which runs per *violated* expectation only.
 
 Unlike the reference (each eager metric = its own Spark action; dozens of
-jobs per suite), a suite of N expectations here costs: 1 fused agg + 1
-optional wave-2 agg + one job per uniqueness/referential/distribution-eager
-expectation + one bounded job per violated map expectation whose violation
-samples are not already in hand.
+jobs per suite), a suite of N expectations here costs: 1 fused scan job +
+1 optional wave-2 scan job + one job per uniqueness/referential/
+distribution-eager expectation + one value-count query per declared
+domain + one count-only query per exact distinct count no value-count
+query serves + one bounded job per violated map expectation whose
+violation samples are not already in hand. Most of a small validation's
+cost is fixed work per query and per job (analysis, adaptive re-planning
+per stage, scheduling), not executor time, so the plan counts queries and
+jobs: a scan aggregate is one job where an exchanged ``df.agg`` is two,
+and an exact ``count(DISTINCT c)`` inside it would regroup every other
+aggregate buffer by ``c``.
 """
 
 from __future__ import annotations
@@ -61,7 +79,10 @@ class Options:
     complete_list_cap: int = 100_000
     distinct_set_cap: int = 100_000
     # exact interpolated median (F.percentile: buffers the column per
-    # partition — fine to ~10^8, switch off at 10^12 for the GK sketch)
+    # partition, and pass 1's observed metrics send those buffers to the
+    # driver — 324 s over 10^7 rows where an exchange took 115 s, and the
+    # default spark.driver.maxResultSize near 4×10^7; switch off above
+    # ~10^7 for the GK sketch; exact_quantiles alike)
     exact_median: bool = True
     # parameterized-KS sample bound (scipy runs on the driver)
     ks_sample_cap: int = 100_000
@@ -105,6 +126,25 @@ class Options:
 Metrics = Mapping[str, Any]
 
 
+@dataclass(frozen=True)
+class ValueDomain:
+    """The non-null values of ``column`` on the rows a row_condition keeps
+    (``rc_id`` its text, ``rc`` its predicate): the domain of ONE shared
+    value-count query per validation (``shared_value_counts``)."""
+
+    column: str
+    rc_id: str = ""
+    rc: Column | None = field(default=None, compare=False, hash=False)
+
+    @property
+    def counts_key(self) -> str:
+        return f"value_counts|{self.column}|{self.rc_id}"
+
+    @property
+    def distinct_key(self) -> str:
+        return f"column.distinct_count.exact|{self.column}|{self.rc_id}"
+
+
 @dataclass
 class Compiled:
     config: ExpectationConfiguration
@@ -120,6 +160,16 @@ class Compiled:
     # expression that cannot analyze over the input would fail the whole
     # fused aggregate): built from the frame's schema, merged into ``aggs``
     typed_aggs: Callable[[T.StructType], dict[str, Column]] | None = None
+    # shared value-count declarations (the validator plans one query per
+    # domain): finalize reads the domain's ``{value: count}`` under
+    # ``counts_key`` ...
+    value_counts: ValueDomain | None = None
+    # ... or its exact non-null distinct count under ``distinct_key``
+    distinct_count: ValueDomain | None = None
+    # a single-column scalar map kernel WITHOUT its row_condition, and the
+    # domain it was declared on: its violations can be counted per group of
+    # that domain's value-count query instead of re-read from rows
+    group_kernel: tuple[ValueDomain, MapKernel] | None = None
 
     def pass1_aggs(self, schema: T.StructType) -> dict[str, Column]:
         if self.typed_aggs is None:
@@ -288,6 +338,48 @@ def _between_success(value: Any, kwargs: dict[str, Any]) -> bool:
     return True
 
 
+def _ascending_nulls_first(v: Any) -> tuple:
+    """Sort key ordering values as Spark's ``asc_nulls_first`` does: NULL
+    first, NaN above every other number, arrays and structs element by
+    element. Strings compare by code point, which is the order of their
+    UTF-8 bytes; binary values by unsigned byte."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and v != v:
+        return (2,)
+    if isinstance(v, (list, tuple)):
+        return (1, tuple(_ascending_nulls_first(x) for x in v))
+    return (1, v)
+
+
+def unexpected_lists(cid: str, rf: Any, need: int, ascending: list[tuple[Any, int]],
+                     top: list[tuple[Any, int]] | None = None) -> dict[str, Any]:
+    """The violation lists of a map expectation from ``(value, count)``
+    pairs, each value standing for ``count`` unexpected rows. ``ascending``
+    is in ascending value order; ``need`` is how many values the lists
+    take (``complete_list_cap`` at COMPLETE, else the partial count k).
+    ``partial_unexpected_list``: the k smallest unexpected values, each
+    repeated by its count; SUMMARY's ``partial_unexpected_counts``: the k
+    pairs of ``top`` — by default ``ascending`` ordered by count
+    descending, then value; COMPLETE's ``unexpected_list``: the first
+    ``need`` values. Both definitions hold on any partition layout."""
+    k = rf.partial_unexpected_count
+    vals: list = []
+    for v, c in ascending:
+        if len(vals) >= need:
+            break
+        vals.extend([_py(v)] * min(c, need - len(vals)))
+    out: dict[str, Any] = {f"partial_unexpected_list|{cid}": vals[:k]}
+    if rf.at_least("SUMMARY"):
+        if top is None:
+            top = sorted(ascending, key=lambda t: -t[1])  # stable: ties keep value order
+        out[f"partial_unexpected_counts|{cid}"] = [
+            {"value": _py(v), "count": c} for v, c in top[:k]]
+    if rf.at_least("COMPLETE"):
+        out[f"unexpected_list|{cid}"] = vals
+    return out
+
+
 def _py(v: Any) -> Any:
     """Normalize JVM/numpy scalars to plain Python for JSON-able EVRs.
     Datetimes serialize to ISO strings (reference EVR JSON convention)."""
@@ -322,6 +414,10 @@ def _compile_map(config: ExpectationConfiguration, options: Options) -> Compiled
     kwargs = config.kwargs
     kernel = MAP_KERNELS[config.expectation_type](kwargs)
     rc = _row_condition(kwargs)
+    group_kernel = None
+    if (kernel.value_format == "scalar" and not kernel.null_unexpected
+            and kernel.columns == [kwargs.get("column")]):
+        group_kernel = (ValueDomain(kwargs["column"], _rc_id(kwargs), rc), kernel)
     if rc is not None:
         # dataclasses.replace keeps every other kernel field (value_format
         # etc.) — rebuilding field-by-field silently reset pair/record
@@ -355,7 +451,8 @@ def _compile_map(config: ExpectationConfiguration, options: Options) -> Compiled
                         "converting from string format.")
         return _map_finalize(config, metrics, k_elem, k_missing, k_unexp)
 
-    return Compiled(config=config, finalize=finalize, aggs=aggs, kernel=kernel)
+    return Compiled(config=config, finalize=finalize, aggs=aggs, kernel=kernel,
+                    group_kernel=group_kernel)
 
 
 def _map_finalize(
@@ -575,29 +672,93 @@ _agg_between("expect_column_median_to_be_between",
 
 
 def _bounded_group_counts(
-    df: DataFrame, group_cols: list[str], cap: int, where: Column | None = None
+    df: DataFrame, group_cols: list[str], cap: int, where: Column | None = None,
+    extra: list[Column] = (),
 ) -> list:
     """groupBy value-counts with a hard driver-transfer bound: collects at
     most ``cap + 1`` groups and raises (→ exception_info) when the column's
-    cardinality exceeds ``Options.distinct_set_cap``. Keeps the KL/chi-square/
-    Cramér eager paths from shipping an unbounded count table to the driver
-    (the reference shares this flaw — dataset.py value_counts collects all)."""
+    cardinality exceeds ``Options.distinct_set_cap``. Keeps the value-count
+    paths (Cramér's phi, ``column.value_counts``; KL and chi-square through
+    ``shared_value_counts``) from shipping an unbounded count table to the
+    driver (the reference shares this flaw — dataset.py value_counts
+    collects all)."""
     d = df
     if where is not None:
         d = d.where(where)
-    rows = (
-        d.groupBy(*group_cols)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .limit(cap + 1)
-        .collect()
-    )
+    groups = d.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("__n"))
+    if extra:  # per-group expressions over the grouping columns
+        groups = groups.select("*", *extra)
+    rows = groups.limit(cap + 1).collect()
     if len(rows) > cap:
-        raise ValueError(
-            f"column(s) {group_cols} have more than {cap} distinct groups; "
-            "categorical distribution tests are not meaningful at this "
-            "cardinality — raise Options.distinct_set_cap or bucket the column "
-            "first")
+        raise _group_overflow(group_cols, cap)
     return rows
+
+
+class GroupOverflow(ValueError):
+    """A value-count query found more than ``Options.distinct_set_cap``
+    groups."""
+
+
+def _group_overflow(group_cols: list[str], cap: int) -> GroupOverflow:
+    return GroupOverflow(
+        f"column(s) {group_cols} have more than {cap} distinct groups; "
+        "categorical distribution tests are not meaningful at this "
+        "cardinality — raise Options.distinct_set_cap or bucket the column "
+        "first")
+
+
+def shared_value_counts(
+    df: DataFrame, domain: ValueDomain, cap: int, kernels: list[MapKernel] = (),
+) -> tuple[list, bool]:
+    """The ONE value-count query of ``domain``: ``_bounded_group_counts``'
+    groupBy over the domain's non-null values (rows ``(value, __n)``, at
+    most ``cap``; more raises its error). It serves the categorical KL and
+    chi-square counts, the exact distinct count (the number of groups) and,
+    for each of ``kernels`` (scalar kernels over the domain's column, row
+    condition left out), the unexpected flag ``__u<i>`` and the reported
+    value ``__v<i>`` of every group — evaluated in the same query, so each
+    group stands for ``__n`` violating rows. Returns ``(rows, flagged)``;
+    ``flagged`` is False when a kernel does not analyze over the grouped
+    column, and the rows then carry the counts only."""
+    from pyspark.errors import AnalysisException
+
+    c = domain.column
+    where = F.col(c).isNotNull()
+    if domain.rc is not None:
+        where = domain.rc & where
+    flags = []
+    for i, k in enumerate(kernels):
+        flags += [(k.include & F.coalesce(~k.ok, F.lit(False))).alias(f"__u{i}"),
+                  k.value.alias(f"__v{i}")]
+    if flags:
+        try:
+            return _bounded_group_counts(df, [c], cap, where, flags), True
+        except AnalysisException:
+            pass  # the counts alone; pass 2 reads these samples from rows
+    return _bounded_group_counts(df, [c], cap, where), False
+
+
+def _shared_counts(metrics: Metrics, domain: ValueDomain) -> dict[Any, int]:
+    """``{value: count}`` of the domain's shared query; the query's
+    overflow error, which the validator stores in its place, raises."""
+    counts = metrics.get(domain.counts_key)
+    if isinstance(counts, Exception):
+        raise counts
+    return counts or {}
+
+
+def exact_distinct_count(df: DataFrame, domain: ValueDomain) -> int:
+    """The count-only query: the exact number of distinct non-null values
+    of ``domain``, for a distinct count no value-count query serves. The
+    groups of ``domain`` are counted as an observed metric: one exchange
+    (the grouping's) and two jobs, where ``count(DISTINCT c)`` adds a
+    second exchange and a third job."""
+    from great_expectations_spark.sources.session import scan_aggregate
+
+    c = F.col(domain.column)
+    where = c.isNotNull() if domain.rc is None else domain.rc & c.isNotNull()
+    groups = df.where(where).groupBy(c).agg(F.count(F.lit(1)).alias("__n"))
+    return int(scan_aggregate(groups, [F.count(F.lit(1)).alias("n")])["n"])
 
 
 # The exact-vs-sketch choices, made once: the compiler, the metric registry
@@ -646,14 +807,28 @@ def _distinct_count_agg(col: Column, o: Options) -> Column:
     return F.count_distinct(col)
 
 
+def _distinct_count_plan(kwargs: dict[str, Any], rc: Column | None,
+                         guarded: Column, o: Options):
+    """``(metric key, pass-1 aggs, domain)`` of a column's distinct count.
+    Under ``approx_distinct`` the HLL++ estimate rides pass 1. The exact
+    count leaves it: a DISTINCT
+    aggregate makes Spark group the whole fused aggregate by the column
+    (every other buffer then multiplies by its cardinality) and cannot be
+    an observed metric, so the count is declared on its ``ValueDomain``
+    and read from the shared value-count query, or a count-only one."""
+    if o.approx_distinct:
+        key = f"column.distinct_count.approx|{kwargs['column']}|{_rc_id(kwargs)}"
+        return key, {key: _distinct_count_agg(guarded, o)}, None
+    domain = ValueDomain(kwargs["column"], _rc_id(kwargs), rc)
+    return domain.distinct_key, {}, domain
+
+
 @compiler("expect_column_unique_value_count_to_be_between")
 def _unique_count(config: ExpectationConfiguration, options: Options) -> Compiled:
     kwargs = config.kwargs
     rc = _row_condition(kwargs)
     col = _guard(F.col(kwargs["column"]), rc)
-    mode = "approx" if options.approx_distinct else "exact"
-    key = f"column.distinct_count.{mode}|{kwargs['column']}|{_rc_id(kwargs)}"
-    aggs = {key: _distinct_count_agg(col, options)}
+    key, aggs, domain = _distinct_count_plan(kwargs, rc, col, options)
     k_hll = None
     if options.chunk_monoids:
         k_hll = f"monoid.hll|{kwargs['column']}|{_rc_id(kwargs)}"
@@ -670,7 +845,8 @@ def _unique_count(config: ExpectationConfiguration, options: Options) -> Compile
             result=result,
         )
 
-    return Compiled(config=config, finalize=finalize, aggs=aggs)
+    return Compiled(config=config, finalize=finalize, aggs=aggs,
+                    distinct_count=domain)
 
 
 @compiler("expect_column_proportion_of_unique_values_to_be_between")
@@ -679,13 +855,9 @@ def _unique_proportion(config: ExpectationConfiguration, options: Options) -> Co
     rc = _row_condition(kwargs)
     c = kwargs["column"]
     col = _guard(F.col(c), rc)
-    mode = "approx" if options.approx_distinct else "exact"
-    k_distinct = f"column.distinct_count.{mode}|{c}|{_rc_id(kwargs)}"
+    k_distinct, aggs, domain = _distinct_count_plan(kwargs, rc, col, options)
     k_nonnull = f"column.nonnull|{c}|{_rc_id(kwargs)}"
-    aggs = {
-        k_distinct: _distinct_count_agg(col, options),
-        k_nonnull: F.count(col),
-    }
+    aggs[k_nonnull] = F.count(col)
     k_hll = None
     if options.chunk_monoids:
         k_hll = f"monoid.hll|{c}|{_rc_id(kwargs)}"
@@ -706,7 +878,8 @@ def _unique_proportion(config: ExpectationConfiguration, options: Options) -> Co
             result=result,
         )
 
-    return Compiled(config=config, finalize=finalize, aggs=aggs)
+    return Compiled(config=config, finalize=finalize, aggs=aggs,
+                    distinct_count=domain)
 
 
 @compiler("expect_column_quantile_values_to_be_between")
@@ -1192,17 +1365,10 @@ def _uniqueness_compiler(name: str, cols_fn: Callable[[dict[str, Any]], list[str
                     d.join(dk, on=join_cond, how="left_semi")
                     .withColumn("__value", value))
             elif rf.at_least("BASIC"):
-                vals: list = []
-                for r in got[1]:
-                    vals.extend(_py(r["__v"])
-                                for _ in range(min(int(r["__n"]), need - len(vals))))
-                out[f"partial_unexpected_list|{config.id}"] = vals[:k]
-                if rf.at_least("SUMMARY"):
-                    out[f"partial_unexpected_counts|{config.id}"] = [
-                        {"value": _py(r["__v"]), "count": int(r["__n"])}
-                        for r in got[2]]
-                if rf.at_least("COMPLETE"):
-                    out[f"unexpected_list|{config.id}"] = vals[:need]
+                out.update(unexpected_lists(
+                    config.id, rf, need,
+                    [(r["__v"], int(r["__n"])) for r in got[1]],
+                    [(r["__v"], int(r["__n"])) for r in got[2]]))
             return out
 
         def finalize(metrics: Metrics) -> EVR:
@@ -1469,7 +1635,8 @@ def _kl_divergence(config: ExpectationConfiguration, options: Options) -> Compil
     Continuous path (bins+weights): histogram bucket sums fused into pass 1
     + below/above-partition counts, tail/internal holdout math on the driver
     (reference expect_column_kl_divergence_to_be_less_than.py:359-516).
-    Categorical path (values+weights): eager value-counts groupBy.
+    Categorical path (values+weights): the column's shared value-count
+    query (``shared_value_counts``).
     """
     kwargs = config.kwargs
     c = kwargs["column"]
@@ -1480,7 +1647,7 @@ def _kl_divergence(config: ExpectationConfiguration, options: Options) -> Compil
     col = F.col(c)
     k_nonnull = f"column.nonnull|{c}|"
     aggs: dict[str, Column] = {k_nonnull: F.count(col)}
-    eager = None
+    value_counts = None
 
     # ---- auto-partition: no partition_object → profile the column
     # (reference two-phase plan, expect_column_kl_divergence...py:230-288:
@@ -1638,15 +1805,10 @@ def _kl_divergence(config: ExpectationConfiguration, options: Options) -> Compil
         weights = [float(w) for w in po["weights"]]
         if len(values) != len(weights) or not np.allclose(np.sum(weights), 1):
             raise CompileError("Invalid partition object.")
-        k_counts = f"value_counts|{config.id}"
-
-        def eager(df: DataFrame, metrics: Metrics) -> dict[str, Any]:
-            rows = _bounded_group_counts(
-                df, [c], options.distinct_set_cap, where=col.isNotNull())
-            return {k_counts: {r[c]: int(r["__n"]) for r in rows}}
+        value_counts = ValueDomain(c)
 
         def finalize(metrics: Metrics) -> EVR:
-            counts: dict[Any, int] = metrics.get(k_counts) or {}
+            counts = _shared_counts(metrics, value_counts)
             nonnull = int(metrics.get(k_nonnull) or 0)
             if nonnull == 0:
                 return EVR(success=True, expectation_config=config,
@@ -1689,7 +1851,8 @@ def _kl_divergence(config: ExpectationConfiguration, options: Options) -> Compil
     else:
         raise CompileError("Invalid partition object.")
 
-    return Compiled(config=config, finalize=finalize, aggs=aggs, eager=eager)
+    return Compiled(config=config, finalize=finalize, aggs=aggs,
+                    value_counts=value_counts)
 
 
 @compiler("expect_column_chisquare_test_p_value_to_be_greater_than")
@@ -1700,18 +1863,12 @@ def _chisquare(config: ExpectationConfiguration, options: Options) -> Compiled:
     p_threshold = float(kwargs.get("p", 0.05))
     col = F.col(c)
     k_nonnull = f"column.nonnull|{c}|"
-    k_counts = f"value_counts|{config.id}"
+    value_counts = ValueDomain(c)
     aggs = {k_nonnull: F.count(col)}
-
-    def eager(df: DataFrame, metrics: Metrics) -> dict[str, Any]:
-        rows = _bounded_group_counts(
-            df, [c], options.distinct_set_cap, where=col.isNotNull())
-        return {k_counts: {r[c]: int(r["__n"]) for r in rows}}
-
     tail_holdout = float(kwargs.get("tail_weight_holdout", 0.0))
 
     def finalize(metrics: Metrics) -> EVR:
-        counts: dict[Any, int] = metrics.get(k_counts) or {}
+        counts = _shared_counts(metrics, value_counts)
         nonnull = int(metrics.get(k_nonnull) or 0)
         values = list(po["values"])
         weights = [float(w) for w in po["weights"]]
@@ -1751,7 +1908,8 @@ def _chisquare(config: ExpectationConfiguration, options: Options) -> Compiled:
             },
         )
 
-    return Compiled(config=config, finalize=finalize, aggs=aggs, eager=eager)
+    return Compiled(config=config, finalize=finalize, aggs=aggs,
+                    value_counts=value_counts)
 
 
 @compiler("expect_column_bootstrapped_ks_test_p_value_to_be_greater_than")

@@ -29,15 +29,19 @@ parameter as its own metric-resolution wave):
   pass 1  ONE fused ``df.agg`` for every Categorical / MapMetric domain
           builder across ALL rules (row count + exact distinct counts +
           non-null counts, registry metrics under default ``Options``)
-  pass 2  ONE whole-table ``df.agg`` carrying every single-batch
-          Metric/ValueSet/ValueCounts/Histogram parameter request of every
-          (rule × domain) that has an aggregate form: registry metrics
-          (``interactive.plan_metrics``), value sets over columns whose
-          exact distinct count pass 1 already holds (``collect_set``,
-          bounded by that count; over ``distinct_set_cap`` it fails with no
-          query), and the counts of the unsampled format plan (pass 2c).
-          Other eager requests (value_counts, value sets of uncounted
-          columns, ...) run their own bounded query
+  pass 2  ONE whole-table scan aggregate (one job, no exchange:
+          ``sources.session.scan_aggregate``) carrying every single-batch
+          Metric/ValueSet/ValueCounts/Histogram parameter request of
+          every (rule × domain) that has an aggregate form:
+          registry metrics (``interactive.plan_metrics``), value sets over
+          columns whose exact distinct count pass 1 already holds
+          (``collect_set``, bounded by that count; over
+          ``distinct_set_cap`` it fails with no query), and the counts of
+          the unsampled format plan (pass 2c). Exact distinct counts and
+          unique proportions on a plain ``{column}`` domain read pass 1's
+          counts; all other DISTINCT requests share one query of their
+          own, and other eager requests (value_counts, value sets of
+          uncounted columns, ...) run their own bounded query
   pass 2b ONE ``batch_metrics`` call — one ``groupBy(batch).agg``, its
           rows sorted on the driver — per distinct batching (real splitter
           spec or (n_chunks, chunk_by) pseudo-chunks, see below) for all
@@ -89,6 +93,8 @@ from great_expectations_spark.core.suite import (
     ExpectationConfiguration,
     ExpectationSuite,
 )
+from great_expectations_spark.plans.compiler import _ascending_nulls_first
+from great_expectations_spark.sources.session import scan_aggregate
 
 __all__ = ["run_rule_based_profiler", "RuleBasedProfilerResult",
            "batch_key_expr", "batch_metrics"]
@@ -621,20 +627,6 @@ def chunk_aggregate_frame(
     return df.groupBy(key.alias("__chunk")).agg(*aggs), finish
 
 
-def _ascending_nulls_first(v: Any) -> tuple:
-    """Sort key ordering batch ids as Spark's ``asc_nulls_first`` does:
-    NULL first, NaN above every other number, arrays and structs element
-    by element. Strings compare by code point, which is the order of
-    their UTF-8 bytes; binary values by unsigned byte."""
-    if v is None:
-        return (0,)
-    if isinstance(v, float) and v != v:
-        return (2,)
-    if isinstance(v, (list, tuple)):
-        return (1, tuple(_ascending_nulls_first(x) for x in v))
-    return (1, v)
-
-
 def batch_metrics(
     df: DataFrame,
     requests: dict[str, tuple[str, dict[str, Any]]],
@@ -653,6 +645,9 @@ def batch_metrics(
                   key=lambda r: _ascending_nulls_first(r["__chunk"]))
     return [(r["__chunk"], finish(r)) for r in rows]
 
+
+# registry metrics whose exact form is a DISTINCT aggregate
+_DISTINCT_METRICS = ("column.distinct_values.count", "column.unique_proportion")
 
 # column types whose value sets stay on the eager ``distinct()`` query:
 # Spark's distinct normalises floats nested in them, collect_set does not
@@ -679,8 +674,11 @@ def _collected_set(vals: list[Any]) -> set[Any]:
 
 
 def _sorted_value_set(vals: list[Any]) -> list[Any]:
+    """A value set's emitted order: ascending, NaN last. Plain ``sorted``
+    leaves NaN wherever set iteration puts it (NaN compares false both
+    ways), so two equal sets could emit different lists."""
     try:
-        return sorted(vals)
+        return sorted(vals, key=_ascending_nulls_first)
     except TypeError:
         return sorted(vals, key=lambda v: (str(type(v).__name__), str(v)))
 
@@ -706,6 +704,7 @@ def _resolve_parameters(
     from great_expectations_spark.interactive import (
         _distinct_set_overflow,
         _eager,
+        get_metrics,
         metric_aggs,
         plan_metrics,
     )
@@ -894,13 +893,32 @@ def _resolve_parameters(
                     raise ValueError(
                         f"unknown parameter_builder class_name {cls!r}")
 
-    # passes 2 and 2c share ONE whole-table aggregate: the registry
+    # passes 2 and 2c share ONE whole-table scan aggregate: the registry
     # metrics, the value sets whose size the domain pass proved (a
     # collect_set buffer bounded by that exact count; a count over the cap
-    # fails without a query) and the unsampled format plan's first scan
-    aggs, finish_metrics, eager = plan_metrics(metric_requests, options)
-    types = {f.name: f.dataType for f in df.schema.fields}
+    # fails without a query) and the unsampled format plan's first scan.
+    # An exact distinct count cannot ride it (no DISTINCT in observed
+    # metrics): on a plain {column} domain the domain pass's count answers
+    # it, all others share one query of their own
     metric_values: dict[str, Any] = {}
+    aggregated = dict(metric_requests)
+    counted: dict[str, int] = {}
+    uncounted: dict[str, tuple[str, dict[str, Any]]] = {}
+    for alias, (metric, mkw) in metric_requests.items():
+        if metric not in _DISTINCT_METRICS or options.approx_distinct:
+            continue
+        c = mkw.get("column")
+        del aggregated[alias]
+        if mkw == {"column": c} and c in distinct_counts:
+            counted[alias] = distinct_counts[c]
+            if metric == "column.unique_proportion":
+                aggregated[alias] = ("column_values.nonnull.count", mkw)
+        else:
+            uncounted[alias] = (metric, mkw)
+    if uncounted:
+        metric_values.update(get_metrics(df, uncounted, options))
+    aggs, finish_metrics, eager = plan_metrics(aggregated, options)
+    types = {f.name: f.dataType for f in df.schema.fields}
     value_sets: list[str] = []
     for alias in eager:
         metric, mkw = metric_requests[alias]
@@ -921,11 +939,17 @@ def _resolve_parameters(
     row = None
     if aggs or fmt_aggs:
         src = df.select("*", *projections) if projections else df
-        row = src.agg(*aggs, *fmt_aggs).first()
+        row = scan_aggregate(src, [*aggs, *fmt_aggs])
     if aggs:
         metric_values.update(finish_metrics(row))
         for alias in value_sets:
             metric_values[alias] = _collected_set(row[f"vs{alias}"])
+    for alias, d in counted.items():
+        if metric_requests[alias][0] == "column.unique_proportion":
+            n = metric_values[alias]  # the non-null count
+            metric_values[alias] = d / n if n else None
+        else:
+            metric_values[alias] = d
     fmt_results: dict[int | None, dict] = {None: fmt_finish(row)}
     for key, name, alias, cls in metric_sinks:
         v = metric_values[alias]

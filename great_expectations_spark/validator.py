@@ -5,19 +5,28 @@ validator/validation_graph.py:209-347):
 
   pass 0  schema-only expectations + column-existence pruning (no scan;
           mirrors fail-fast exception capture, validator/validator.py:1229-1263)
-  pass 1  ONE fused ``df.agg(...)`` containing every counted/aggregated
-          metric of every expectation (exact quantiles included), deduped
-          by metric key (generalizes the reference's per-domain bundling,
-          sparkdf_execution_engine.py:727-805, to the whole suite;
-          row_conditions are folded into conditional aggregates so
-          differing domains still share the scan)
-  pass 1b optional second fused agg for value-dependent expressions (z-scores)
+  pass 1  ONE fused scan aggregate (``sources.session.scan_aggregate``:
+          observed metrics, one job, no exchange) containing every
+          counted/aggregated metric of every expectation (exact quantiles
+          included), deduped by metric key (generalizes the reference's
+          per-domain bundling, sparkdf_execution_engine.py:727-805, to the
+          whole suite; row_conditions are folded into conditional
+          aggregates so differing domains still share the scan). It holds
+          no DISTINCT aggregate
+  pass 1b optional second fused scan aggregate for value-dependent
+          expressions (z-scores)
   eager   one shaped job per uniqueness / referential / distribution
           expectation (groupBy or anti-join); the uniqueness query also
-          returns its violation samples
+          returns its violation samples. One value-count query per
+          (column, row_condition) domain a categorical KL / chi-square
+          declares, or that holds an exact distinct count and a violated
+          single-column map expectation: it also answers the exact
+          distinct counts of that domain and the violation samples of the
+          violated single-column map expectations over it. A count-only
+          query per other exact distinct count
   pass 2  violation extraction: one BOUNDED job per violated map
           expectation whose samples are not already in hand (limit k).
-          No job when the counts are clean, when the eager query took the
+          No job when the counts are clean, when an eager query took the
           samples, for not-null checks (every unexpected value is NULL, so
           the count is the sample) unless index columns or unexpected rows
           are asked for, or when result_format is BOOLEAN_ONLY
@@ -42,11 +51,17 @@ from great_expectations_spark.core.suite import ExpectationConfiguration, Expect
 from great_expectations_spark.plans.compiler import (
     Compiled,
     CompileError,
+    GroupOverflow,
     Options,
+    ValueDomain,
+    _ascending_nulls_first,
     compile_expectation,
+    exact_distinct_count,
+    shared_value_counts,
+    unexpected_lists,
     _py,
 )
-from great_expectations_spark.sources.session import local_frame
+from great_expectations_spark.sources.session import local_frame, scan_aggregate
 
 
 def _required_columns(config: ExpectationConfiguration) -> list[str]:
@@ -356,41 +371,49 @@ class SparkValidator:
         self._run_agg(agg2_requests, metrics, compiled, wave=2)
 
         # ---- eager jobs ---------------------------------------------------
-        # Each eager callback is an independent Spark action over disjoint,
-        # config-id-namespaced metric keys (uniqueness groupBy, referential
-        # anti-join, distribution value-counts, monotonic lag pass). They
-        # only READ metrics the agg waves already wrote, so they can be
+        # Each eager job is an independent Spark action over disjoint metric
+        # keys: the per-expectation callbacks (uniqueness groupBy,
+        # referential anti-join, monotonic lag pass, ...) and one shared
+        # value-count query per declared (column, row_condition) domain.
+        # They only READ metrics the agg waves already wrote, so they can be
         # submitted concurrently — the scheduler overlaps their stages and
         # the suite pays max() instead of sum() of the job walls. Metric
-        # updates (and exception marking) happen here on the driver thread
-        # in submission order, keeping results deterministic.
-        eager_items = [
-            (i, config, comp)
+        # updates (and exception marking of a job's owners) happen here on
+        # the driver thread in submission order, keeping results
+        # deterministic.
+        jobs = [
+            (comp.eager, [i])
             for i, (config, comp, err) in enumerate(compiled)
             if comp is not None and err is None and comp.eager is not None
         ]
-        if len(eager_items) > 1 and self.options.parallel_eager:
+        jobs += self._value_count_jobs(compiled, metrics)
+
+        def attempt(fn, snapshot):
+            try:
+                return fn(self.df, snapshot), None
+            except Exception as e:
+                return None, (e, traceback.format_exc())
+
+        if len(jobs) > 1 and self.options.parallel_eager:
             from concurrent.futures import ThreadPoolExecutor
 
             frozen = dict(metrics)  # consistent read snapshot per thread
             with ThreadPoolExecutor(
                 max_workers=min(self.options.parallel_eager_max_threads,
-                                len(eager_items))) as pool:
-                futs = [pool.submit(comp.eager, self.df, frozen)
-                        for _i, _config, comp in eager_items]
-            for (i, config, comp), fut in zip(eager_items, futs):
-                try:
-                    metrics.update(fut.result())
-                except Exception as e:
-                    compiled[i] = (config, comp, EVR.exception(
-                        config, str(e), traceback.format_exc()))
+                                len(jobs))) as pool:
+                futs = [pool.submit(attempt, fn, frozen) for fn, _owners in jobs]
+            outcomes = (fut.result() for fut in futs)
         else:
-            for i, config, comp in eager_items:
-                try:
-                    metrics.update(comp.eager(self.df, metrics))
-                except Exception as e:
+            outcomes = (attempt(fn, metrics) for fn, _owners in jobs)
+        for (_fn, owners), (out, failure) in zip(jobs, outcomes):
+            if failure is None:
+                metrics.update(out)
+                continue
+            for i in owners:
+                config, comp, err = compiled[i]
+                if err is None:
                     compiled[i] = (config, comp, EVR.exception(
-                        config, str(e), traceback.format_exc()))
+                        config, str(failure[0]), failure[1]))
 
         # ---- pass 2: bounded violation extraction ------------------------
         if self.rf.at_least("BASIC"):
@@ -491,7 +514,7 @@ class SparkValidator:
         keys = sorted(requests)
         aliased = [requests[k].alias(f"m{i}") for i, k in enumerate(keys)]
         try:
-            row = self.df.agg(*aliased).first()
+            row = scan_aggregate(self.df, aliased)
             for i, k in enumerate(keys):
                 metrics[k] = row[f"m{i}"]
         except Exception:
@@ -508,13 +531,106 @@ class SparkValidator:
                     continue
                 ks = sorted(own)
                 try:
-                    row = self.df.agg(*[own[k].alias(f"m{i}") for i, k in enumerate(ks)]).first()
+                    row = scan_aggregate(
+                        self.df, [own[k].alias(f"m{i}") for i, k in enumerate(ks)])
                     for i, k in enumerate(ks):
                         metrics[k] = row[f"m{i}"]
                 except Exception as e:
                     compiled[idx] = (
                         config, comp, EVR.exception(config, str(e), traceback.format_exc())
                     )
+
+    def _value_count_jobs(self, compiled, metrics: dict[str, Any]) -> list:
+        """The eager wave's shared jobs, ``[(fn(df, metrics) -> metrics,
+        owner indices)]``: ONE value-count query per domain that a
+        categorical KL / chi-square expectation declares, or whose exact
+        distinct count a violated map expectation over it can share the
+        query with; it answers the domain's exact distinct counts and the
+        violation samples of the violated map expectations over it. A
+        count-only query serves every other distinct-count domain: with no
+        samples to take, the groups need not reach the driver."""
+        readers: dict[ValueDomain, list[int]] = {}
+        counted: dict[ValueDomain, list[int]] = {}
+        for i, (_config, comp, err) in enumerate(compiled):
+            if comp is None or err is not None:
+                continue
+            if comp.value_counts is not None:
+                readers.setdefault(comp.value_counts, []).append(i)
+            if comp.distinct_count is not None:
+                counted.setdefault(comp.distinct_count, []).append(i)
+        samplers: dict[ValueDomain, list] = {}
+        if self.rf.at_least("BASIC") and not self.rf.needs_source_rows:
+            for config, comp, err in compiled:
+                if comp is None or err is not None or comp.group_kernel is None:
+                    continue
+                domain, kernel = comp.group_kernel
+                n = int(metrics.get(f"unexpected_count|{config.id}") or 0)
+                if n and (domain in readers or domain in counted):
+                    samplers.setdefault(domain, []).append((config, comp, kernel, n))
+        cap = self.options.distinct_set_cap
+
+        def count_only(domain: ValueDomain):
+            return lambda df, _m: {domain.distinct_key: exact_distinct_count(df, domain)}
+
+        def shared(domain: ValueDomain, wanted: list):
+            def run(df: DataFrame, _m) -> dict[str, Any]:
+                try:
+                    rows, flagged = shared_value_counts(
+                        df, domain, cap, [kernel for _c, _comp, kernel, _n in wanted])
+                except GroupOverflow as e:
+                    # over the cap: the readers raise this error, the
+                    # distinct counts take the count-only query and the
+                    # samples pass 2
+                    out: dict[str, Any] = {domain.counts_key: e}
+                    if domain in counted:
+                        out[domain.distinct_key] = exact_distinct_count(df, domain)
+                    return out
+                out = {domain.counts_key: {r[0]: int(r["__n"]) for r in rows},
+                       domain.distinct_key: len(rows)}
+                if flagged:
+                    for i, (config, comp, _kernel, n) in enumerate(wanted):
+                        out.update(self._lists_from_groups(config, comp, rows, i, n))
+                return out
+
+            return run
+
+        grouped = dict.fromkeys([*readers, *samplers])
+        jobs = [(shared(d, samplers.get(d, [])), readers.get(d, []) + counted.get(d, []))
+                for d in grouped]
+        jobs += [(count_only(d), owners) for d, owners in counted.items()
+                 if d not in grouped]
+        return jobs
+
+    def _lists_from_groups(self, config: ExpectationConfiguration, comp: Compiled,
+                           rows: list, i: int, n: int) -> dict[str, Any]:
+        """The violation lists of a map expectation from the groups of its
+        domain's value-count query, whose flag ``__u<i>`` marks a group as
+        ``__n`` violating rows of value ``__v<i>``, shaped by
+        ``compiler.unexpected_lists`` as the uniqueness query's samples
+        are. Empty when the groups do not hold all ``n`` violating rows
+        (violations on NULL rows, which the query does not group) or the
+        values do not order: pass 2 reads rows then."""
+        rf, cid = self.rf, config.id
+        hits = [(r[f"__v{i}"], int(r["__n"])) for r in rows if r[f"__u{i}"]]
+        if sum(c for _v, c in hits) != n:
+            return {}
+        try:
+            hits.sort(key=lambda t: _ascending_nulls_first(t[0]))
+        except TypeError:
+            return {}
+        merged: list[list] = []  # groups whose reported values are equal
+        for v, c in hits:
+            if merged and merged[-1][0] == v:
+                merged[-1][1] += c
+            else:
+                merged.append([v, c])
+        need = self.options.complete_list_cap if rf.at_least("COMPLETE") else rf.partial_unexpected_count
+        out = unexpected_lists(cid, rf, need, merged)
+        if rf.at_least("COMPLETE") and rf.return_unexpected_index_query:
+            kernel = comp.kernel
+            out[f"unexpected_index_query|{cid}"] = _render_index_query(
+                kernel.include & F.coalesce(~kernel.ok, F.lit(False)))
+        return out
 
     def _lists_from_count(self, config: ExpectationConfiguration, n: int) -> dict[str, Any]:
         """The violation lists of ``n`` unexpected rows whose values are all

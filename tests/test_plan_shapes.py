@@ -414,8 +414,10 @@ def test_uniqueness_samples_share_the_counts_exchange(spark, fresh_docs, monkeyp
 def test_basic_validate_job_count_pinned(spark, tmp_path, new_job_ids):
     """A BASIC validate of one checkpoint-chunk-sized frame under a
     crawl-style suite (violated uniqueness, not-null and in-set; exact
-    quantiles; KL) runs a pinned number of Spark jobs: pass 1, the KL and
-    uniqueness eager queries, and one bounded in-set sample."""
+    quantiles; KL) runs a pinned number of Spark jobs: pass 1 as one scan
+    job, and the KL value-count and uniqueness eager queries; the in-set
+    samples come from the KL groups. The plan with an exchanged pass 1
+    and a bounded in-set sample query ran 8 jobs here."""
     import random
 
     from great_expectations_spark import ExpectationSuite, validate
@@ -447,16 +449,17 @@ def test_basic_validate_job_count_pinned(spark, tmp_path, new_job_ids):
     res, jobs = new_job_ids(lambda: validate(chunk, suite, result_format="BASIC"))
     counts = [r.result.get("unexpected_count") for r in res.results]
     assert counts[1] > 0 and counts[2] > 0 and counts[4] > 0  # violated
-    assert len(jobs) == 8
+    assert len(jobs) == 6
 
 
 def test_onboarding_assistant_job_count_pinned(spark, tmp_path, new_job_ids):
     """``run_onboarding_assistant`` over one month of a crawl-style parquet
     table runs a pinned number of Spark jobs: the domain pass's aggregate,
-    ONE whole-table aggregate for every single-batch metric, both value
-    sets and the format counts, and the pseudo-chunk groupBy, whose rows
-    are sorted on the driver. The plan with a query per value set, its own
-    format scan and a sorted groupBy ran 15 jobs here."""
+    ONE whole-table scan aggregate (one job) for every single-batch
+    metric, both value sets and the format counts, and the pseudo-chunk
+    groupBy, whose rows are sorted on the driver. The plan with a query per
+    value set, its own format scan and a sorted groupBy ran 15 jobs here;
+    with an exchanged whole-table aggregate, 7."""
     from great_expectations_spark import run_onboarding_assistant
     from great_expectations_spark.sources.webpages import webpages
 
@@ -467,4 +470,52 @@ def test_onboarding_assistant_job_count_pinned(spark, tmp_path, new_job_ids):
     month = spark.read.parquet(path).where(F.col("warc_month") == 1)
     res, jobs = new_job_ids(lambda: run_onboarding_assistant(month))
     assert len(res.suite.expectations) >= 10
-    assert len(jobs) == 7
+    assert len(jobs) == 6
+
+
+def test_pass1_with_a_distinct_count_is_one_ungrouped_scan(spark, tmp_path, monkeypatch):
+    """An exact distinct count next to exact-quantile, KLL and HLL
+    aggregates (``chunk_monoids``) leaves pass 1 a single scan job: its
+    executed plan has no Exchange, no Expand and no aggregate grouped by a
+    validated column. With the count inside, Spark grouped the whole fused
+    aggregate by the counted column."""
+    from pyspark.sql import Observation
+
+    import great_expectations_spark.validator as vmod
+    from great_expectations_spark import ExpectationSuite, validate
+    from great_expectations_spark.plans.compiler import Options
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(3000).select(
+        F.concat(F.lit("https://d"), (F.col("id") % 997).cast("string")).alias("url"),
+        (F.col("id") % 5).cast("string").alias("lang"),
+        (F.col("id") % 311).alias("text_len")).write.parquet(path)
+    df = spark.read.parquet(path)
+    passes = []
+    real = vmod.scan_aggregate
+
+    def spy(frame, columns):
+        passes.append(columns)
+        return real(frame, columns)
+
+    monkeypatch.setattr(vmod, "scan_aggregate", spy)
+    suite = (
+        ExpectationSuite("p1")
+        .add("expect_column_unique_value_count_to_be_between", column="lang",
+             min_value=1, max_value=20)
+        .add("expect_column_proportion_of_unique_values_to_be_between",
+             column="url", min_value=0.0)
+        .add("expect_column_quantile_values_to_be_between", column="text_len",
+             quantile_ranges={"quantiles": [0.25, 0.5], "value_ranges": [[0, 999]] * 2})
+        .add("expect_column_median_to_be_between", column="text_len", min_value=0)
+    )
+    res = validate(df, suite, options=Options(chunk_monoids=True))
+    assert res.success
+    assert res.results[0].result["observed_value"] == 5
+    assert res.results[1].result["observed_value"] == 997 / 3000
+    assert len(passes) == 1
+    plan = (df.observe(Observation(), *passes[0]).select()
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "Exchange" not in plan and "Expand" not in plan, plan
+    assert "Aggregate" not in plan, plan
+    assert "kll_sketch_agg" in plan and "hll_sketch_agg" in plan, plan

@@ -68,6 +68,23 @@ def _canon(values):
     return sorted(repr(v) for v in values)
 
 
+def test_value_set_order_ignores_insertion_order():
+    """Two equal sets built in different insertion orders emit the same
+    list, NaN last: plain ``sorted`` left NaN where set iteration put it."""
+    nan = float("nan")
+    one = {3.0, nan, -1.0, 0.0, 2.5}
+    other: set = set()
+    for v in (2.5, 0.0, nan, -1.0, 3.0):
+        other.add(v)
+    a, b = _sorted_value_set(list(one)), _sorted_value_set(list(other))
+    assert repr(a) == repr(b) == repr([-1.0, 0.0, 2.5, 3.0, nan])
+    # and whichever position NaN comes in
+    for i in range(5):
+        vals = [1.0, 2.0, 3.0, 4.0]
+        vals.insert(i, nan)
+        assert repr(_sorted_value_set(vals)) == repr([1.0, 2.0, 3.0, 4.0, nan])
+
+
 def test_fused_value_sets_equal_the_eager_query(spark, monkeypatch):
     """Over every column type, with NULLs, -0.0 next to 0.0, two NaNs,
     non-ASCII and supplementary-plane strings, the fused ``collect_set``
@@ -90,8 +107,7 @@ def test_fused_value_sets_equal_the_eager_query(spark, monkeypatch):
         assert _canon(params[c]["dv"]["value"]) == _canon(eager), c
         want = _sorted_value_set([v for v in eager if v is not None])
         assert _canon(params[c]["vs"]["value"]) == _canon(want), c
-        if c != "d":  # a list holding NaN has no sorted order
-            assert repr(params[c]["vs"]["value"]) == repr(want), c
+        assert repr(params[c]["vs"]["value"]) == repr(want), c
     # the normalisation has teeth: collect_set keeps a NaN per partition
     raw = df.agg(F.collect_set("d")).first()[0]
     assert sum(v != v for v in raw) == 2

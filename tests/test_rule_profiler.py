@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from great_expectations_spark import validate
 from great_expectations_spark.rule_profiler import run_rule_based_profiler
+from great_expectations_spark.sources.session import scan_aggregate
 
 SF = "/root/testdata/sf0.001"
 
@@ -232,8 +233,8 @@ def test_format_builders_share_one_inference_call(spark, monkeypatch,
     strftime candidate), and each builder reports only its own
     candidates' ratios. The unsampled plan's counts ride the whole-table
     aggregate of the single-batch metrics; a builder on a different sample
-    gets its own call: 7 jobs, where a query of its own for the unsampled
-    counts made 9."""
+    gets its own call: 6 jobs, where a query of its own for the unsampled
+    counts made 9 and an exchanged whole-table aggregate 7."""
     from great_expectations_spark import profiler
 
     calls = []
@@ -271,7 +272,7 @@ def test_format_builders_share_one_inference_call(spark, monkeypatch,
         {"day": ([], ["%d/%m/%Y", "%Y-%m-%d"]),
          "code": ([r"^\d+$"], ["%H"])},
         {"day": ([r"^\d+$"], [])}]
-    assert len(jobs) == 7
+    assert len(jobs) == 6
     params = res.parameters["r"]["table"]
     assert params["day_fmt"]["value"] == "%Y-%m-%d"
     assert params["day_fmt"]["details"]["candidate_strings"] == {
@@ -444,8 +445,9 @@ def test_nested_builder_configs_rejected(spark, events):
 def test_variables_override_and_multi_metric_fusion(spark, events,
                                                    monkeypatch, new_job_ids):
     """run(variables=...) overrides config variables; ALL single-batch
-    metric requests across rules and domains ride ONE df.agg: the run
-    starts as many jobs as that one aggregate does on its own."""
+    metric requests across rules and domains ride ONE scan aggregate: the
+    run starts as many jobs as that one aggregate does on its own (one;
+    the exchanged ``df.agg`` it replaced ran two)."""
     import great_expectations_spark.interactive as imod
 
     plans = []
@@ -485,8 +487,9 @@ def test_variables_override_and_multi_metric_fusion(spark, events,
                        "column": "$domain.domain_kwargs.column"}]},
         }}
     def one_agg():
-        return events.agg(
-            F.min("value"), F.max("user_id"), F.max("event_id")).first()
+        return scan_aggregate(events, [
+            F.min("value").alias("a"), F.max("user_id").alias("b"),
+            F.max("event_id").alias("c")])
 
     one_agg()  # the first read of the cached frame builds the cache
     res, jobs = new_job_ids(lambda: run_rule_based_profiler(
@@ -494,6 +497,54 @@ def test_variables_override_and_multi_metric_fusion(spark, events,
     assert plans == [3]  # one metric plan carrying all 3 requests
     assert len(jobs) == len(new_job_ids(one_agg)[1])
     assert res.suite.expectations[0].kwargs["min_value"] == -123
+
+
+def test_uncounted_distinct_requests_share_one_query(spark, events,
+                                                     monkeypatch, new_job_ids):
+    """Exact distinct counts the domain pass did not count (a
+    ColumnDomainBuilder counts nothing) cannot ride the scan aggregate;
+    all of them share ONE ``get_metrics`` query, as many jobs as that
+    query on its own, whatever the number of columns."""
+    import great_expectations_spark.interactive as imod
+
+    calls = []
+    orig = imod.get_metrics
+
+    def spy(df, requests, options=None):
+        calls.append(sorted(requests.values(), key=repr))
+        return orig(df, requests, options)
+
+    monkeypatch.setattr(imod, "get_metrics", spy)
+    cols = ["user_id", "event_id"]
+    config = {
+        "name": "d", "config_version": 1.0,
+        "rules": {"r": {
+            "domain_builder": {"class_name": "ColumnDomainBuilder",
+                               "include_column_names": cols},
+            "parameter_builders": [
+                {"name": "n", "class_name": "MetricSingleBatchParameterBuilder",
+                 "metric_name": "column.distinct_values.count",
+                 "metric_domain_kwargs": "$domain.domain_kwargs"},
+                {"name": "p", "class_name": "MetricSingleBatchParameterBuilder",
+                 "metric_name": "column.unique_proportion",
+                 "metric_domain_kwargs": "$domain.domain_kwargs"}],
+            "expectation_configuration_builders": [
+                {"expectation_type": "expect_column_unique_value_count_to_be_between",
+                 "column": "$domain.domain_kwargs.column",
+                 "min_value": "$parameter.n.value",
+                 "max_value": "$parameter.n.value"}]}}}
+    requests = {f"{m}{c}": (m, {"column": c}) for c in cols
+                for m in ("column.distinct_values.count", "column.unique_proportion")}
+
+    def one_query():
+        return orig(events, requests)
+
+    want = one_query()  # the first read of the cached frame builds the cache
+    res, jobs = new_job_ids(lambda: run_rule_based_profiler(events, config))
+    assert calls == [sorted(requests.values(), key=repr)]
+    assert len(jobs) == len(new_job_ids(one_query)[1])
+    got = {e.kwargs["column"]: e.kwargs["min_value"] for e in res.suite.expectations}
+    assert got == {c: want[f"column.distinct_values.count{c}"] for c in cols}
 
 
 # ---------------------------------------------------- round-5 advice fixes
