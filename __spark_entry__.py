@@ -429,13 +429,11 @@ FROM documents WHERE source IS NOT NULL AND regexp_matches(source, '^src1')
 GROUP BY source
 """)
 def _q9b(spark, sf):
-    """Fused pass-2: BOTH violated expectations' SUMMARY value counts come
-    from ONE shared scan + one groupBy((eid, value)) shuffle
-    (validator.py _collect_violations_fused) instead of a full re-scan per
-    expectation. Violated value cardinality (4 + 11) < partial cap, so the
+    """Pass 2: BOTH violated expectations' SUMMARY value counts come from
+    the ONE violation query (validator.py ``_collect_violations``): its
+    groupBy((eid, typed value)) branch with a (count desc, value) window
+    cut. Violated value cardinality (4 + 11) < partial cap, so the
     reported counts are the complete per-value violation histogram."""
-    from great_expectations_spark.plans.compiler import Options
-
     suite = (
         ExpectationSuite(name="fused")
         .add("expect_column_values_to_be_in_set",
@@ -446,7 +444,6 @@ def _q9b(spark, sf):
     res = validate(
         _tbl(spark, sf, "documents"), suite,
         result_format={"result_format": "SUMMARY", "partial_unexpected_count": 30},
-        options=Options(fuse_violations=True),
     )
     names = ["lang_in_set", "source_not_regex"]
     rows = []
@@ -466,14 +463,12 @@ UNION ALL
 SELECT '__count__=' || CAST(count(*) AS VARCHAR) FROM v
 """)
 def _q9c(spark, sf):
-    """timestamp_ntz rides the FUSED violation pass (round-5 closing cell
-    of the typed-encoding matrix, validator.py _fuse_encode): events.ts
-    cast to ntz, a between expectation violated by the final hours of the
-    crawl, COMPLETE list through the shared fused scan — every wall-clock
-    value byte-compared against DuckDB's naive-timestamp rendering at
-    full microsecond precision."""
-    from great_expectations_spark.plans.compiler import Options
-
+    """timestamp_ntz through the ONE violation query (validator.py
+    ``_collect_violations``), which carries each value in a typed struct
+    field, no text encoding: events.ts cast to ntz, a between expectation
+    violated by the final hours of the crawl, its COMPLETE list — every
+    wall-clock value byte-compared against DuckDB's naive-timestamp
+    rendering at full microsecond precision."""
     df = _tbl(spark, sf, "events").withColumn(
         "ts", F.col("ts").cast("timestamp_ntz"))
     suite = (
@@ -483,8 +478,7 @@ def _q9c(spark, sf):
         .add("expect_column_values_to_be_between",
              column="value", max_value=-1.0, mostly=0.001)
     )
-    res = validate(df, suite, result_format="COMPLETE",
-                   options=Options(fuse_violations=True))
+    res = validate(df, suite, result_format="COMPLETE")
     vals = res.results[0].result["unexpected_list"]
     rows = [(v,) for v in vals] + [(f"__count__={len(vals)}",)]
     return spark.createDataFrame(rows, "value string")

@@ -86,18 +86,6 @@ class Options:
     exact_median: bool = True
     # parameterized-KS sample bound (scipy runs on the driver)
     ks_sample_cap: int = 100_000
-    # pass-2 fusion: extract violation detail for ALL violated map
-    # expectations in ONE early-stopping scan (+ one shuffle for SUMMARY
-    # counts) instead of up to three bounded jobs PER violated expectation.
-    # At 10^12 rows with several violated expectations the per-expectation
-    # plan re-scans the table E times; the fused plan scans once. Below a
-    # few million rows the per-expectation jobs are cheaper than the fused
-    # plan's fixed cost (Python workers + a window), so None = adaptive:
-    # fuse when the scanned row count or the violated-expectation count
-    # crosses the thresholds. True/False force either plan.
-    fuse_violations: bool | None = None
-    fuse_rows_threshold: int = 5_000_000
-    fuse_count_threshold: int = 6
     # eager shaped jobs (uniqueness / referential / distribution /
     # monotonic) are independent per-expectation Spark actions writing
     # config-id-namespaced metric keys; submitting them from worker

@@ -24,16 +24,23 @@ validator/validation_graph.py:209-347):
           distinct counts of that domain and the violation samples of the
           violated single-column map expectations over it. A count-only
           query per other exact distinct count
-  pass 2  violation extraction: one BOUNDED job per violated map
-          expectation whose samples are not already in hand (limit k).
-          No job when the counts are clean, when an eager query took the
-          samples, for not-null checks (every unexpected value is NULL, so
-          the count is the sample) unless index columns or unexpected rows
-          are asked for, or when result_format is BOOLEAN_ONLY
+  pass 2  violation extraction: ONE query for every violated map
+          expectation whose samples are not already in hand, the eager
+          violation frames (referential, monotonic, uniqueness with source
+          rows) included. A ``row_number`` window keeps each expectation's
+          k smallest unexpected values (``compiler.unexpected_lists``), in
+          the JVM on typed values. No query when the counts are clean,
+          when an eager query took the samples, for not-null checks (every
+          unexpected value is NULL, so the count is the sample) unless
+          index columns or unexpected rows are asked for, or when
+          result_format is BOOLEAN_ONLY. If the query fails, it runs once
+          per expectation; each failure left is reported under
+          ``meta["degradations"]``
 """
 
 from __future__ import annotations
 
+import functools
 import time
 import traceback
 from typing import Any
@@ -77,165 +84,48 @@ def _required_columns(config: ExpectationConfiguration) -> list[str]:
     return cols
 
 
-# ---------------------------------------------------- fused pass-2 helpers
+# ---------------------------------------------------------- pass-2 helpers
 
-# value types whose to_json rendering round-trips losslessly back to the
-# exact Python values the per-expectation path produces after _py().
-# Timestamps, float32, binary, and decimal are NOT json-safe as-is
-# (to_json truncates timestamps to milliseconds; float32's shortest repr
-# decodes to a different double than the float32-widened collect();
-# json.loads turns a bare decimal number into a lossy float; bytes have
-# no JSON form) but become fused-eligible through the typed encodings
-# below: timestamp → unix_micros int64, timestamp_ntz → wall-clock string
-# cast (session-timezone-independent, full microseconds), float32 →
-# exact cast("double") widening, binary → base64 string, decimal → exact
-# string cast (decoded back to decimal.Decimal). The atom matrix is
-# complete: no type falls back to per-expectation violation jobs.
-_JSON_SAFE_ATOMS = (
-    T.StringType, T.BooleanType, T.DateType,
-    T.ByteType, T.ShortType, T.IntegerType,
-    T.LongType, T.DoubleType, T.NullType,
-)
-
-# atoms that need a typed re-encoding before to_json to round-trip exactly
-_ENCODED_ATOMS = (T.TimestampType, T.TimestampNTZType, T.FloatType,
-                  T.BinaryType, T.DecimalType)
-
-
-def _json_safe(dt: T.DataType) -> bool:
-    """Fused-eligible: every atom either to_json-round-trips natively or
-    has a lossless typed encoding (``_fuse_encode``)."""
+def _types_in(dt: T.DataType):
+    """``dt`` and every type nested inside it."""
+    yield dt
     if isinstance(dt, T.ArrayType):
-        return _json_safe(dt.elementType)
-    if isinstance(dt, T.StructType):
-        return all(_json_safe(f.dataType) for f in dt.fields)
-    if isinstance(dt, T.MapType):
-        return isinstance(dt.keyType, T.StringType) and _json_safe(dt.valueType)
-    return isinstance(dt, _JSON_SAFE_ATOMS + _ENCODED_ATOMS)
+        yield from _types_in(dt.elementType)
+    elif isinstance(dt, T.MapType):
+        yield from _types_in(dt.keyType)
+        yield from _types_in(dt.valueType)
+    elif isinstance(dt, T.StructType):
+        for f in dt.fields:
+            yield from _types_in(f.dataType)
 
 
-def _needs_encode(dt: T.DataType) -> bool:
-    if isinstance(dt, T.ArrayType):
-        return _needs_encode(dt.elementType)
-    if isinstance(dt, T.StructType):
-        return any(_needs_encode(f.dataType) for f in dt.fields)
-    if isinstance(dt, T.MapType):
-        return _needs_encode(dt.valueType)
-    return isinstance(dt, _ENCODED_ATOMS)
+def _orderable(dt: T.DataType) -> bool:
+    """Spark can sort a value of ``dt``: it holds no map."""
+    return not any(isinstance(t, T.MapType) for t in _types_in(dt))
 
 
-def _fuse_encode(col: Column, dt: T.DataType) -> Column:
-    """Typed lossless pre-encoding so to_json round-trips exactly:
-    timestamp → epoch-micros int64 (full sub-ms precision — decoded with
-    TimestampType.fromInternal, the same conversion collect() applies),
-    float32 → cast(double) (the identical exact widening the JVM performs
-    on collect, after which to_json's double repr is round-trip — the
-    already-proven DoubleType path), binary → base64 (byte-exact), and
-    decimal → string cast (BigDecimal.toString: every digit at the
-    declared scale, decoded back with decimal.Decimal — numerically
-    identical to the java→python Decimal conversion collect() applies).
-    Containers encode recursively; anything else passes through
-    untouched."""
-    if not _needs_encode(dt):
+def _zero_signed(col: Column, dt: T.DataType) -> Column:
+    """``col`` with every -0.0 read as 0.0. A sort ranks the two equal, so
+    a cut among them would keep either, and grouping (the SUMMARY counts,
+    the value-count query) already reports 0.0."""
+    if not any(isinstance(t, (T.FloatType, T.DoubleType)) for t in _types_in(dt)):
         return col
-    if isinstance(dt, T.TimestampNTZType):
-        # wall-clock string cast: renders the NTZ's own micros digits with
-        # NO session-timezone conversion — the same wall clock
-        # TimestampNTZType.fromInternal reconstructs on collect()
-        return col.cast("string")
-    if isinstance(dt, T.TimestampType):
-        return F.unix_micros(col)
-    if isinstance(dt, T.FloatType):
-        return col.cast("double")
-    if isinstance(dt, T.BinaryType):
-        return F.base64(col)
-    if isinstance(dt, T.DecimalType):
-        return col.cast("string")
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return F.when(col == 0, F.lit(0).cast(dt)).otherwise(col)
     if isinstance(dt, T.ArrayType):
-        return F.transform(col, lambda x: _fuse_encode(x, dt.elementType))
+        return F.transform(col, lambda x: _zero_signed(x, dt.elementType))
     if isinstance(dt, T.StructType):
-        rebuilt = F.struct(*[
-            _fuse_encode(col[f.name], f.dataType).alias(f.name)
-            for f in dt.fields
-        ])
         # a NULL struct must stay NULL, not become a struct of NULLs
-        return F.when(col.isNotNull(), rebuilt)
-    if isinstance(dt, T.MapType):
-        return F.transform_values(
-            col, lambda _, v: _fuse_encode(v, dt.valueType))
+        return F.when(col.isNotNull(), F.struct(*[
+            _zero_signed(col[f.name], f.dataType).alias(f.name) for f in dt.fields]))
     return col
 
 
-def _from_json_value(v: Any, dt: T.DataType) -> Any:
-    """Decode one to_json-encoded value back to the plain-Python shape the
-    per-expectation path emits (post-``_py``: dates and timestamps as ISO
-    strings, Rows as dicts). Timestamps arrive as the epoch-micros int64
-    ``_fuse_encode`` produced."""
-    if v is None:
-        return None
-    if isinstance(dt, T.TimestampNTZType):
-        # parse the wall-clock string back to the naive datetime collect()
-        # yields (fromInternal), then _py's isoformat rendering
-        import datetime as _dt
-
-        return _dt.datetime.fromisoformat(v.replace(" ", "T")).isoformat()
-    if isinstance(dt, T.TimestampType):
-        # identical to collect()'s conversion (fromInternal: local-tz
-        # naive datetime with exact microseconds) followed by _py's
-        # isoformat rendering
-        return T.TimestampType().fromInternal(int(v)).isoformat()
-    if isinstance(dt, T.BinaryType):
-        # collect() yields bytes (PySpark 4); _py passes them through
-        import base64 as _b64
-
-        return _b64.b64decode(v)
-    if isinstance(dt, T.DecimalType):
-        import decimal as _dec
-
-        return _dec.Decimal(v)
-    if isinstance(dt, T.DateType):
-        return str(v)
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return int(v)
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return float(v)  # handles the "NaN"/"Infinity" strings to_json emits
-    if isinstance(dt, T.BooleanType):
-        return bool(v)
-    if isinstance(dt, T.ArrayType):
-        return [_from_json_value(x, dt.elementType) for x in v]
-    if isinstance(dt, T.StructType):
-        return {f.name: _from_json_value(v.get(f.name), f.dataType) for f in dt.fields}
-    if isinstance(dt, T.MapType):
-        return {k: _from_json_value(x, dt.valueType) for k, x in v.items()}
-    return v
-
-
-def _partition_capper(need: int, n_eids: int):
-    """mapInPandas kernel: per task, keep at most ``need`` violation rows
-    per expectation id and STOP CONSUMING the input iterator once every
-    expectation is full — Spark then stops the underlying scan for the
-    partition (the fused equivalent of the per-expectation LocalLimit
-    early exit). Per-task output is bounded by ``n_eids * need`` rows."""
-
-    def fn(batches):
-        counts: dict[int, int] = {}
-        full = 0
-        for pdf in batches:
-            if full >= n_eids:
-                break
-            keep: list[int] = []
-            for pos, eid in enumerate(pdf["eid"].tolist()):
-                c = counts.get(eid, 0)
-                if c < need:
-                    c += 1
-                    counts[eid] = c
-                    if c == need:
-                        full += 1
-                    keep.append(pos)
-            if keep:
-                yield pdf.iloc[keep]
-
-    return fn
+def _pass2_degradation(config: ExpectationConfiguration, e: Exception) -> dict[str, Any]:
+    """A ``meta["degradations"]`` entry: the expectation lost its lists."""
+    lines = str(e).strip().splitlines()
+    return {"expectation_id": config.id, "fallback": "pass2",
+            "exception": type(e).__name__, "message": lines[0] if lines else ""}
 
 
 def _render_index_query(unexpected: Any) -> str:
@@ -416,9 +306,9 @@ class SparkValidator:
                         config, str(failure[0]), failure[1]))
 
         # ---- pass 2: bounded violation extraction ------------------------
+        degradations: list[dict[str, Any]] = []
         if self.rf.at_least("BASIC"):
-            fusable: list[tuple[ExpectationConfiguration, Compiled, Any, Any]] = []
-            singles: list[tuple[ExpectationConfiguration, Compiled]] = []
+            sources: list[tuple[ExpectationConfiguration, Any]] = []
             for config, comp, err in compiled:
                 if comp is None or err is not None:
                     continue
@@ -432,48 +322,36 @@ class SparkValidator:
                     # each tier (expectation.py:3411-3555) — no Spark job
                     metrics.update(self._lists_from_count(config, 0))
                     continue
-                kernel = comp.kernel
-                if kernel is None and comp.kernel2 is not None:
-                    try:
-                        kernel = comp.kernel2(metrics)
-                    except Exception:
-                        kernel = None
-                if (kernel is not None and kernel.null_unexpected
-                        and not self.rf.needs_source_rows):
+                vdf = metrics.get(f"__violations_df__|{config.id}")
+                if vdf is not None:
+                    sources.append((config, vdf))
+                    continue
+                try:
+                    kernel = comp.kernel or (comp.kernel2 and comp.kernel2(metrics))
+                except Exception as e:
+                    degradations.append(_pass2_degradation(config, e))
+                    continue
+                if kernel is None:
+                    continue
+                if self.rf.at_least("COMPLETE") and self.rf.return_unexpected_index_query:
+                    metrics[f"unexpected_index_query|{config.id}"] = _render_index_query(
+                        kernel.include & F.coalesce(~kernel.ok, F.lit(False)))
+                if kernel.null_unexpected and not self.rf.needs_source_rows:
                     # every unexpected value is NULL: the count is the sample
                     metrics.update(self._lists_from_count(config, n))
-                    if self.rf.at_least("COMPLETE") and self.rf.return_unexpected_index_query:
-                        metrics[f"unexpected_index_query|{config.id}"] = _render_index_query(
-                            kernel.include & F.coalesce(~kernel.ok, F.lit(False)))
                     continue
-                vtype = (
-                    self._fused_value_type(kernel)
-                    if (
-                        self.options.fuse_violations is not False
-                        and f"__violations_df__|{config.id}" not in metrics
-                        and kernel is not None
-                    )
-                    else None
-                )
-                if vtype is not None:
-                    fusable.append((config, comp, kernel, vtype))
-                else:
-                    singles.append((config, comp))
-            if not self._should_fuse(fusable, metrics):
-                singles.extend((c, comp) for c, comp, _k, _t in fusable)
-                fusable = []
-            if fusable:
+                sources.append((config, kernel))
+            if sources:
                 try:
-                    metrics.update(self._collect_violations_fused(fusable, metrics))
+                    metrics.update(self._collect_violations(sources))
                 except Exception:
-                    # best-effort detail: fall back to the per-expectation
-                    # bounded jobs so a fused-plan failure can't drop lists
-                    singles.extend((c, comp) for c, comp, _k, _t in fusable)
-            for config, comp in singles:
-                try:
-                    metrics.update(self._collect_violations(config, comp, metrics))
-                except Exception:
-                    pass  # lists are best-effort detail; counts already exact
+                    # the same query per expectation: one bad kernel drops
+                    # only its own lists, and says so
+                    for source in sources:
+                        try:
+                            metrics.update(self._collect_violations([source]))
+                        except Exception as e:
+                            degradations.append(_pass2_degradation(source[0], e))
 
         # release any frames eager ops persisted for pass-2 consistency
         for key, v in list(metrics.items()):
@@ -499,6 +377,8 @@ class SparkValidator:
             "validation_time_s": round(time.time() - t0, 4),
             "result_format": self.rf.tier,
         }
+        if degradations:
+            meta["degradations"] = degradations
         return SuiteValidationResult.from_results(results, suite_name=self.suite.name, meta=meta)
 
     # ------------------------------------------------------------- helpers
@@ -647,297 +527,112 @@ class SparkValidator:
                 out[f"unexpected_index_list|{cid}"] = []
         return out
 
-    def _should_fuse(self, fusable: list, metrics: dict[str, Any]) -> bool:
-        """Adaptive plan choice (AQE-style, from pass-1 statistics already
-        in hand): the fused plan saves (E-1) re-scans but pays a fixed cost
-        (Python workers + a window), so it wins when scans are expensive —
-        large scanned row counts — or when E alone makes per-expectation
-        jobs add up. ``Options.fuse_violations`` True/False overrides."""
-        if self.options.fuse_violations is True:
-            return bool(fusable)  # explicit opt-in wins, even for one kernel
-        if len(fusable) < 2:
-            return False
-        rows = 0
-        for key, v in metrics.items():
-            if key.startswith("table.row_count|") and isinstance(v, int):
-                rows = max(rows, v)
-        return (
-            rows >= self.options.fuse_rows_threshold
-            or len(fusable) >= self.options.fuse_count_threshold
-        )
-
-    def _fused_value_type(self, kernel):
-        """The kernel's value dtype if it — and every column the detail
-        tiers serialize alongside it — survives the JSON round trip
-        losslessly; None otherwise (one Catalyst analysis per kernel,
-        reused by _collect_violations_fused)."""
-        try:
-            vt = self.df.select(kernel.value.alias("x")).schema[0].dataType
-        except Exception:
-            return None
-        if not _json_safe(vt):
-            return None
-        schema = self.df.schema
-        names = schema.fieldNames()
-        check_cols = list(self.rf.unexpected_index_column_names)
-        if self.rf.include_unexpected_rows:
-            check_cols.extend(names)
-        for c in check_cols:
-            if c not in names or not _json_safe(schema[c].dataType):
-                return None
-        return vt
-
-    def _collect_violations_fused(
-        self,
-        fusable: list[tuple[ExpectationConfiguration, Compiled, Any, Any]],
-        metrics: dict[str, Any],
-    ) -> dict[str, Any]:
-        """ONE early-stopping scan extracts bounded violation detail for
-        every violated kernel expectation at once (vs one-to-three jobs per
-        expectation): each row emits an array entry per expectation it
-        violates, the exploded (eid, value) stream is capped per partition
-        with an early-exit mapInPandas, and a row_number window trims to
-        the per-expectation budget. SUMMARY value counts add one fused
-        groupBy((eid, value)) shuffle — map-side combined, skew-free —
-        replacing a full re-scan per expectation."""
-        import json as _json
-
-        rf = self.rf
+    def _collect_violations(self, sources: list[tuple[ExpectationConfiguration, Any]]
+                            ) -> dict[str, Any]:
+        """The violation lists of violated map expectations from ONE query.
+        Each source is an expectation with its kernel, or with the
+        violation frame its eager query built (``__value``, plus the source
+        columns for uniqueness). Every unexpected row becomes ``(eid, v,
+        i, r)``: ``v`` holds the value in the struct field of its type,
+        ``i`` the index columns and ``r`` the source row when the tier asks
+        for them. A ``row_number`` window keeps each expectation's ``need``
+        smallest rows by (value, index columns, row) — Spark plans it as a
+        partial top-k before the exchange and a final one after — and, at
+        SUMMARY, a second one its ``k`` most frequent values. The lists are
+        ``compiler.unexpected_lists``' definition on any partition layout."""
+        rf, df = self.rf, self.df
         k = rf.partial_unexpected_count
-        cap = self.options.complete_list_cap
-        need = cap if rf.at_least("COMPLETE") else k
-        idx_cols = [c for c in rf.unexpected_index_column_names]
-        want_rows = bool(rf.include_unexpected_rows)
-        schema = self.df.schema
-        jopts = {"ignoreNullFields": "false"}
+        need = self.options.complete_list_cap if rf.at_least("COMPLETE") else k
+        idx = list(rf.unexpected_index_column_names) if rf.at_least("COMPLETE") else []
+        row_cols = df.columns if rf.include_unexpected_rows else []
+        kernels = [s for _c, s in sources if not isinstance(s, DataFrame)]
+        kernel_types = iter([f.dataType for f in df.select(
+            *[kn.value.alias(f"x{j}") for j, kn in enumerate(kernels)]).schema]
+            if kernels else [])
+        dtypes = [s.schema["__value"].dataType if isinstance(s, DataFrame)
+                  else next(kernel_types) for _c, s in sources]
+        # an eager frame of values only (referential, monotonic) has no
+        # index columns or rows to report
+        has_source = [not isinstance(s, DataFrame) or set(df.columns) <= set(s.columns)
+                      for _c, s in sources]
+        fields = {dt.simpleString(): dt for dt in dtypes}  # one field per type
+        slot = {name: f"t{j}" for j, name in enumerate(fields)}
 
-        ij = (
-            F.to_json(F.struct(*[
-                _fuse_encode(F.col(c), schema[c].dataType).alias(c)
-                for c in idx_cols
-            ]), jopts)
-            if idx_cols
-            else F.lit(None).cast("string")
-        )
-        rj = (
-            F.to_json(F.struct(*[
-                _fuse_encode(F.col(c), schema[c].dataType).alias(c)
-                for c in self.df.columns
-            ]), jopts)
-            if want_rows
-            else F.lit(None).cast("string")
-        )
+        def typed(value: Column, dt: T.DataType) -> Column:
+            mine = slot[dt.simpleString()]
+            return F.struct(*[
+                (_zero_signed(value, dt) if slot[name] == mine
+                 else F.lit(None).cast(t)).alias(slot[name])
+                for name, t in fields.items()]).alias("v")
 
-        entries: list[Any] = []
-        vtypes: list[T.DataType] = []
-        out: dict[str, Any] = {}
-        for eid, (config, comp, kernel, _vt) in enumerate(fusable):
-            unexpected = kernel.include & F.coalesce(~kernel.ok, F.lit(False))
-            vj = F.to_json(
-                F.struct(_fuse_encode(kernel.value, _vt).alias("v")), jopts)
-            entries.append(
-                F.when(
-                    unexpected,
-                    F.struct(
-                        F.lit(eid).alias("eid"),
-                        vj.alias("vj"),
-                        ij.alias("ij"),
-                        rj.alias("rj"),
-                    ),
-                )
-            )
-            vtypes.append(_vt)  # resolved once in _fused_value_type
-            if rf.at_least("COMPLETE") and rf.return_unexpected_index_query:
-                out[f"unexpected_index_query|{config.id}"] = _render_index_query(unexpected)
+        extra_types = {}
+        if idx:
+            extra_types["i"] = T.StructType([df.schema[c] for c in idx])
+        if row_cols:
+            extra_types["r"] = T.StructType(list(df.schema.fields))
 
-        ex = (
-            self.df.select(F.explode(F.array_compact(F.array(*entries))).alias("e"))
-            .select("e.eid", "e.vj", "e.ij", "e.rj")
-        )
+        def extras(eid: int) -> list[Column]:
+            names = {"i": idx, "r": row_cols}
+            return [(F.struct(*[F.col(c) for c in names[x]]) if has_source[eid]
+                     else F.lit(None).cast(t)).alias(x) for x, t in extra_types.items()]
 
-        def fmt(v: Any, eid: int) -> Any:
-            kernel = fusable[eid][2]
-            if kernel.value_format == "pair" and isinstance(v, dict):
-                return [v.get(c) for c in kernel.columns]
-            return v
+        streams, entries = [], []
+        for eid, ((_config, s), dt) in enumerate(zip(sources, dtypes)):
+            if isinstance(s, DataFrame):
+                streams.append(s.select(F.lit(eid).alias("eid"),
+                                        typed(F.col("__value"), dt), *extras(eid)))
+            else:
+                unexpected = s.include & F.coalesce(~s.ok, F.lit(False))
+                entries.append(F.when(unexpected, F.struct(
+                    F.lit(eid).alias("eid"), typed(s.value, dt), *extras(eid))))
+        if entries:
+            streams.append(df.select(F.explode(F.array_compact(F.array(*entries)))
+                                     .alias("e")).select("e.*"))
+        stream = functools.reduce(DataFrame.unionByName, streams)
 
-        capped = ex.mapInPandas(
-            _partition_capper(need, len(fusable)),
-            schema="eid int, vj string, ij string, rj string",
-        )
-        w = Window.partitionBy("eid").orderBy("vj")
-        rows = (
-            capped.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= need)
-            .drop("__rn")
-            .collect()
-        )
-        by_eid: dict[int, list] = {}
-        for r in rows:
-            by_eid.setdefault(r["eid"], []).append(r)
-
-        for eid, (config, comp, kernel, _vt) in enumerate(fusable):
-            rs = by_eid.get(eid, [])
-            vals = [
-                fmt(_from_json_value(_json.loads(r["vj"])["v"], vtypes[eid]), eid)
-                for r in rs
-            ]
-            out[f"partial_unexpected_list|{config.id}"] = vals[:k]
-            if want_rows:
-                limit = cap if rf.at_least("COMPLETE") else k
-                out[f"unexpected_rows|{config.id}"] = [
-                    {
-                        c: _from_json_value(_json.loads(r["rj"]).get(c), schema[c].dataType)
-                        for c in self.df.columns
-                    }
-                    for r in rs[:limit]
-                ]
-            if rf.at_least("COMPLETE"):
-                out[f"unexpected_list|{config.id}"] = vals[:cap]
-                if idx_cols:
-                    out[f"unexpected_index_list|{config.id}"] = [
-                        {
-                            c: _from_json_value(_json.loads(r["ij"]).get(c), schema[c].dataType)
-                            for c in idx_cols
-                        }
-                        for r in rs[:cap]
-                    ]
-
+        by_value = [F.col("v")[slot[name]] for name, t in fields.items() if _orderable(t)]
+        by_row = [F.col(x) for x, t in extra_types.items() if _orderable(t)]
+        q = (stream.withColumn("__rn", F.row_number().over(
+                Window.partitionBy("eid").orderBy(*by_value, *by_row)))
+             .where(F.col("__rn") <= need)
+             .withColumn("__n", F.lit(None).cast("long")))
         if rf.at_least("SUMMARY"):
-            # tie-break surrogate so count-tied NUMERIC values rank in typed
-            # order (the per-expectation path orders by the native column):
-            # strip the {"v":...} wrapper and try_cast — numbers sort
-            # numerically, everything else falls back to the JSON string
-            num = F.expr(
-                "try_cast(regexp_replace(vj, '^\\\\{\"v\":|\\\\}$', '') as double)")
-            # string ties order by the UNESCAPED value (get_json_object),
-            # not the raw JSON — escaping ('"' -> '\\"') would otherwise
-            # rank strings differently from the native column order the
-            # per-expectation path uses, evicting the wrong values at the
-            # window cut; raw vj stays only as the final stable key
-            unesc = F.get_json_object(F.col("vj"), "$.v")
-            cw = Window.partitionBy("eid").orderBy(
-                F.desc("__n"), F.asc_nulls_last(num),
-                F.asc_nulls_last(unesc), F.asc("vj"))
-            crows = (
-                ex.groupBy("eid", "vj")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .withColumn("__rn", F.row_number().over(cw))
-                # +200 margin absorbs count-tied boundary groups before the
-                # typed re-sort below; residual: >200-way ties of ARRAY/
-                # STRUCT values (JSON order != native order) could still
-                # surface different tied entries than the per-expectation
-                # path — atomic types (the realistic case) are exact
-                .where(F.col("__rn") <= k + 200)
-                .collect()
-            )
-            counts_by_eid: dict[int, list] = {}
-            for r in crows:
-                counts_by_eid.setdefault(r["eid"], []).append(r)
-            for eid, (config, comp, kernel, _vt) in enumerate(fusable):
-                items = [
-                    (
-                        fmt(_from_json_value(_json.loads(r["vj"])["v"], vtypes[eid]), eid),
-                        int(r["__n"]),
-                    )
-                    for r in counts_by_eid.get(eid, [])
-                ]
-                # re-sort ties by TYPED value (the per-expectation path
-                # orders by the native column); fall back to the stable
-                # JSON-string order for unorderable values
-                try:
-                    items.sort(key=lambda t: (-t[1], t[0]))
-                except TypeError:
-                    items.sort(key=lambda t: (-t[1], _json.dumps(t[0], default=str)))
-                out[f"partial_unexpected_counts|{config.id}"] = [
-                    {"value": v, "count": n} for v, n in items[:k]
-                ]
-        return out
+            q = q.unionByName(
+                stream.groupBy("eid", "v").agg(F.count(F.lit(1)).alias("__n"))
+                .withColumn("__rn", F.row_number().over(
+                    Window.partitionBy("eid").orderBy(F.desc("__n"), *by_value)))
+                .where(F.col("__rn") <= k),
+                allowMissingColumns=True)
+        got: dict[tuple[bool, int], list] = {}
+        for r in q.collect():
+            got.setdefault((r["__n"] is not None, r["eid"]), []).append(r)
 
-    def _collect_violations(
-        self, config: ExpectationConfiguration, comp: Compiled, metrics: dict[str, Any]
-    ) -> dict[str, Any]:
         out: dict[str, Any] = {}
-        k = self.rf.partial_unexpected_count
-        cap = self.options.complete_list_cap
+        for eid, ((config, s), dt) in enumerate(zip(sources, dtypes)):
+            field = slot[dt.simpleString()]
+            # reference value shapes (fixture corpus contract): column-pair
+            # domains emit each unexpected value as a LIST [a, b];
+            # multicolumn domains a dict {col: value}; columns a scalar
+            pair = (s.columns if not isinstance(s, DataFrame) and s.value_format == "pair"
+                    else None)
 
-        vdf_key = f"__violations_df__|{config.id}"
-        kernel = comp.kernel
-        if kernel is None and comp.kernel2 is not None:
-            kernel = comp.kernel2(metrics)
+            def value(r: Any) -> Any:
+                v = _py(r["v"][field])
+                return [v.get(c) for c in pair] if pair and isinstance(v, dict) else v
 
-        if vdf_key in metrics:  # eager op (uniqueness/referential/monotonic)
-            # already built the violation frame; when it carries the source
-            # columns (uniqueness does), index columns and unexpected_rows
-            # resolve from it directly
-            vdf = metrics[vdf_key].withColumnRenamed("__value", "__v")
-            src_cols = [c for c in vdf.columns
-                        if c != "__v" and not c.startswith("__")]
-            if self.rf.include_unexpected_rows and src_cols:
-                limit = cap if self.rf.at_least("COMPLETE") else k
-                full_rows = vdf.select(*src_cols).limit(limit).collect()
-                out[f"unexpected_rows|{config.id}"] = [
-                    {c: _py(v) for c, v in r.asDict().items()} for r in full_rows
-                ]
-            keep = ["__v"] + [c for c in self.rf.unexpected_index_column_names
-                              if c in src_cols]
-            vdf = vdf.select(*keep)
-        elif kernel is not None:
-            unexpected = kernel.include & F.coalesce(~kernel.ok, F.lit(False))
-            index_cols = [c for c in self.rf.unexpected_index_column_names]
-            sel = [kernel.value.alias("__v"), unexpected.alias("__u")] + [
-                F.col(c) for c in index_cols
-            ]
-            vdf = self.df.select(*sel).where(F.col("__u")).drop("__u")
-            if self.rf.include_unexpected_rows:
-                # reference result_format.include_unexpected_rows: the FULL
-                # source rows for unexpected values, bounded like the lists
-                limit = cap if self.rf.at_least("COMPLETE") else k
-                full_rows = (
-                    self.df.withColumn("__u", unexpected)
-                    .where(F.col("__u")).drop("__u").limit(limit).collect()
-                )
-                out[f"unexpected_rows|{config.id}"] = [
-                    {c: _py(v) for c, v in r.asDict().items()} for r in full_rows
-                ]
-            if self.rf.at_least("COMPLETE") and self.rf.return_unexpected_index_query:
-                out[f"unexpected_index_query|{config.id}"] = _render_index_query(unexpected)
-        else:
-            return out
-
-        # reference value shapes (fixture corpus contract): column-pair
-        # domains emit each unexpected value as a LIST [a, b]; multicolumn
-        # domains emit a dict {col: value}; columns stay scalars
-        def fmt(v):
-            v = _py(v)
-            if kernel is not None and kernel.value_format == "pair" and isinstance(v, dict):
-                return [v.get(c) for c in kernel.columns]
-            return v
-
-        rows = vdf.limit(k).collect()
-        out[f"partial_unexpected_list|{config.id}"] = [fmt(r["__v"]) for r in rows]
-
-        if self.rf.at_least("SUMMARY"):
-            counts = (
-                vdf.groupBy("__v")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .orderBy(F.desc("__n"), F.col("__v"))
-                .limit(k)
-                .collect()
-            )
-            out[f"partial_unexpected_counts|{config.id}"] = [
-                {"value": fmt(r["__v"]), "count": int(r["__n"])} for r in counts
-            ]
-
-        if self.rf.at_least("COMPLETE"):
-            full = vdf.limit(cap).collect()
-            out[f"unexpected_list|{config.id}"] = [fmt(r["__v"]) for r in full]
-            index_cols = [c for c in self.rf.unexpected_index_column_names
-                          if c in vdf.columns]
-            if index_cols:
+            listed, counted = (sorted(got.get((b, eid), []), key=lambda r: r["__rn"])
+                               for b in (False, True))
+            out.update(unexpected_lists(
+                config.id, rf, need, [(value(r), 1) for r in listed],
+                [(value(r), int(r["__n"])) for r in counted]))
+            if not has_source[eid]:
+                continue
+            if idx:
                 out[f"unexpected_index_list|{config.id}"] = [
-                    {c: _py(r[c]) for c in index_cols} for r in full
-                ]
+                    {c: _py(r["i"][c]) for c in idx} for r in listed]
+            if row_cols:
+                out[f"unexpected_rows|{config.id}"] = [
+                    {c: _py(r["r"][c]) for c in row_cols} for r in listed]
         return out
 
 

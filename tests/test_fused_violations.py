@@ -1,24 +1,28 @@
-"""Fused pass-2 violation extraction: one early-stopping scan for ALL
-violated map expectations must report the same violations as the
-per-expectation bounded jobs (Options(fuse_violations=False)).
+"""Pass-2 violation extraction: ONE query serves every violated map
+expectation, and its lists are ``compiler.unexpected_lists``' definition —
+the k smallest unexpected values, each repeated by its count; the k most
+frequent values at SUMMARY; at COMPLETE every unexpected value up to the
+cap, with its index columns and source row in (value, index, row) order.
 
-Partial lists are k-SAMPLES of the violation multiset — WHICH k appear is
-engine-arbitrary in both plans (the per-expectation path takes first-k in
-partition order), so the tests assert sample validity against the full
-violation multiset plus exact equality of everything deterministic:
-counts, success, full COMPLETE lists, index lists, rows, value counts."""
+Every case compares exact values against ``collect()`` of the violating
+rows, so the typed values (sub-ms timestamps, timestamp_ntz, float32,
+binary, decimal, containers) must come back exactly as the JVM holds
+them."""
 
 from __future__ import annotations
 
+import ast
 import datetime
+import decimal
 import json
+import pathlib
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from great_expectations_spark import ExpectationSuite, validate
-from great_expectations_spark.plans.compiler import Options
+from great_expectations_spark.plans.compiler import _ascending_nulls_first, _py
 
 
 def _suite() -> ExpectationSuite:
@@ -34,9 +38,21 @@ def _suite() -> ExpectationSuite:
         .add("expect_column_pair_values_a_to_be_greater_than_b",
              column_A="x", column_B="y", mostly=0.1,
              ignore_row_if="either_value_is_missing")
-        # clean expectation: must emit empty lists, no fused participation
+        # clean expectation: must emit empty lists and join no query
         .add("expect_column_values_to_not_be_null", column="x")
     )
+
+
+def _truth():
+    """Per expectation of _suite(): (predicate of its unexpected rows, value)."""
+    return [
+        (F.col("tag").isNull(), F.col("tag")),
+        (F.col("x") > 10, F.col("x")),
+        (~F.col("lang").isin("en", "de"), F.col("lang")),
+        (F.col("tag").isNotNull() & ~F.col("tag").rlike("^t"), F.col("tag")),
+        (F.col("x") <= F.col("y"), F.array("x", "y")),
+        (F.col("x").isNull(), F.col("x")),
+    ]
 
 
 @pytest.fixture(scope="module")
@@ -61,21 +77,21 @@ def _c(v):
     return json.dumps(v, sort_keys=True, default=str)
 
 
-def _mset(values):
-    return Counter(_c(v) for v in values)
+def _violating(df, bad, value, *extra):
+    """``(value, *extra)`` of every violating row, collected and sorted in
+    Spark's ascending order (NULL first, NaN last)."""
+    got = [tuple(_py(x) for x in r)
+           for r in df.where(bad).select(value, *extra).collect()]
+    return sorted(got, key=lambda t: tuple(_ascending_nulls_first(x) for x in t))
 
 
-@pytest.fixture(scope="module")
-def solo_complete(spark, frame):
-    """Ground truth: per-expectation path at COMPLETE with index cols and
-    rows — unexpected_list is the FULL violation multiset (count < cap)."""
-    rf = {
-        "result_format": "COMPLETE",
-        "unexpected_index_column_names": ["x"],
-        "include_unexpected_rows": True,
-    }
-    return validate(frame, _suite(), result_format=rf,
-                    options=Options(fuse_violations=False))
+def _top(values, k):
+    counts = Counter(_c(v) for v in values)
+    first = {}
+    for v in values:
+        first.setdefault(_c(v), v)
+    ranked = sorted(counts, key=lambda c: (-counts[c], _ascending_nulls_first(first[c])))
+    return [{"value": first[c], "count": counts[c]} for c in ranked[:k]]
 
 
 @pytest.mark.parametrize(
@@ -92,48 +108,29 @@ def solo_complete(spark, frame):
     ],
     ids=["basic", "summary", "complete", "complete_idx_rows"],
 )
-def test_fused_matches_per_expectation(spark, frame, rf, solo_complete):
-    fused = validate(frame, _suite(), result_format=rf,
-                     options=Options(fuse_violations=True))
+def test_fused_matches_per_expectation(spark, frame, rf):
+    res = validate(frame, _suite(), result_format=rf)
+    tier = rf if isinstance(rf, str) else rf["result_format"]
     k = 20
-    for f_evr, truth in zip(fused.results, solo_complete.results):
-        n = truth.result["unexpected_count"]
-        full = _mset(truth.result["unexpected_list"])
-        assert f_evr.success == truth.success
-        assert f_evr.result["unexpected_count"] == n
-
-        partial = f_evr.result["partial_unexpected_list"]
-        assert len(partial) == min(k, n)
-        assert not _mset(partial) - full  # every sampled value is a violation
-
-        tier = rf if isinstance(rf, str) else rf["result_format"]
+    for evr, (bad, value) in zip(res.results, _truth()):
+        truth = [v for v, in _violating(frame, bad, value)]
+        r = evr.result
+        assert r["unexpected_count"] == len(truth)
+        assert r["partial_unexpected_list"] == truth[:k]
         if tier in ("SUMMARY", "COMPLETE"):
-            got = f_evr.result["partial_unexpected_counts"]
-            truth_counts = Counter()
-            for v in truth.result["unexpected_list"]:
-                truth_counts[_c(v)] += 1
-            assert len(got) == min(k, len(truth_counts))
-            for d in got:  # reported counts are exact
-                assert truth_counts[_c(d["value"])] == d["count"]
-            # valid top-k: the REPORTED count multiset equals the true one
-            # (selection among equal-count ties is engine-arbitrary)
-            top = sorted(truth_counts.values(), reverse=True)[:k]
-            assert sorted((d["count"] for d in got), reverse=True) == top
+            assert _c(r["partial_unexpected_counts"]) == _c(_top(truth, k))
         if tier == "COMPLETE":
-            assert _mset(f_evr.result["unexpected_list"]) == full
-            assert f_evr.result.get("unexpected_index_query") == truth.result.get(
-                "unexpected_index_query")
-        if isinstance(rf, dict):
-            assert _mset(f_evr.result.get("unexpected_index_list", [])) == _mset(
-                truth.result.get("unexpected_index_list", []))
-            assert _mset(f_evr.result.get("unexpected_rows", [])) == _mset(
-                truth.result.get("unexpected_rows", []))
+            assert r["unexpected_list"] == truth
+        if isinstance(rf, dict) and truth:
+            ordered = _violating(frame, bad, value, "x", "y", "tag", "lang", "ts")
+            assert r["unexpected_index_list"] == [{"x": t[1]} for t in ordered]
+            names = ["x", "y", "tag", "lang", "ts"]
+            assert r["unexpected_rows"] == [dict(zip(names, t[1:])) for t in ordered]
 
 
 def test_fused_partial_counts_exact(spark, frame):
-    """SUMMARY counts from the fused groupBy must be exact per value."""
-    res = validate(frame, _suite(), result_format="SUMMARY",
-                   options=Options(fuse_violations=True))
+    """SUMMARY counts from the grouped branch are exact per value."""
+    res = validate(frame, _suite(), result_format="SUMMARY")
     in_set = next(
         r for r in res.results
         if r.expectation_config.kwargs.get("value_set") == ["en", "de"])
@@ -143,8 +140,8 @@ def test_fused_partial_counts_exact(spark, frame):
 
 
 def test_fused_timestamp_values_roundtrip(spark):
-    """Datetime violation values must come back as the same naive-UTC ISO
-    strings the per-expectation path emits."""
+    """Datetime violation values come back as naive-UTC ISO strings, the
+    collected values' own rendering."""
     rows = [(i, datetime.datetime(2024, 1, 1, i)) for i in range(6)]
     df = spark.createDataFrame(rows, "i int, ts timestamp")
     suite = (
@@ -154,25 +151,10 @@ def test_fused_timestamp_values_roundtrip(spark):
         .add("expect_column_values_to_be_between",
              column="i", max_value=1, mostly=0.1)
     )
-    fused = validate(df, suite, result_format="COMPLETE",
-                     options=Options(fuse_violations=True))
-    solo = validate(df, suite, result_format="COMPLETE",
-                    options=Options(fuse_violations=False))
-    f_list = fused.results[0].result["unexpected_list"]
-    s_list = solo.results[0].result["unexpected_list"]
-    assert sorted(f_list) == sorted(s_list)
-    assert all(isinstance(v, str) and v.startswith("2024-01-01T") for v in f_list)
-
-
-def test_single_violation_skips_fusion(spark):
-    """With one violated expectation the per-expectation plan is already
-    minimal — the fused path must not engage (no behavior change)."""
-    df = spark.createDataFrame([(1,), (2,), (300,)], "x int")
-    suite = ExpectationSuite("s").add(
-        "expect_column_values_to_be_between", column="x", min_value=0, max_value=10)
-    res = validate(df, suite, result_format="COMPLETE",
-                   options=Options(fuse_violations=True))
-    assert res.results[0].result["unexpected_list"] == [300]
+    got = validate(df, suite, result_format="COMPLETE").results[0].result
+    truth = [v for v, in _violating(df, F.col("ts") > "2024-01-01 02:00:00", "ts")]
+    assert got["unexpected_list"] == truth
+    assert all(isinstance(v, str) and v.startswith("2024-01-01T") for v in truth)
 
 
 def test_fused_respects_partial_cap(spark):
@@ -184,70 +166,17 @@ def test_fused_respects_partial_cap(spark):
         .add("expect_column_values_to_be_between", column="a", max_value=-1, mostly=0.01)
         .add("expect_column_values_to_be_between", column="b", max_value=-1, mostly=0.01)
     )
-    res = validate(df, suite, result_format={"result_format": "BASIC",
-                                             "partial_unexpected_count": 7},
-                   options=Options(fuse_violations=True))
-    for evr in res.results:
-        assert evr.result["unexpected_count"] == n
-        assert len(evr.result["partial_unexpected_list"]) == 7
+    res = validate(df.repartition(5), suite, result_format={
+        "result_format": "BASIC", "partial_unexpected_count": 7})
+    a, b = (evr.result for evr in res.results)
+    assert a["unexpected_count"] == b["unexpected_count"] == n
+    assert a["partial_unexpected_list"] == list(range(7))
+    assert b["partial_unexpected_list"] == [0] * 7
 
 
-def test_adaptive_policy(spark, frame, monkeypatch):
-    """fuse_violations=None picks the plan from pass-1 statistics: solo
-    below the thresholds, fused above (rows OR violated-expectation count)."""
-    from great_expectations_spark import validator as vmod
-
-    calls = []
-    orig = vmod.SparkValidator._collect_violations_fused
-
-    def spy(self, fusable, metrics):
-        calls.append(len(fusable))
-        return orig(self, fusable, metrics)
-
-    monkeypatch.setattr(vmod.SparkValidator, "_collect_violations_fused", spy)
-
-    # 200 rows, 5 violated; the not-null one needs no rows (its values are
-    # all NULL), so 4 enter the plan choice < count threshold ->
-    # per-expectation path
-    validate(frame, _suite(), result_format="SUMMARY", options=Options())
-    assert calls == []
-
-    # rows threshold forced down -> fused path engages
-    validate(frame, _suite(), result_format="SUMMARY",
-             options=Options(fuse_rows_threshold=100))
-    assert calls == [4]
-
-    # count threshold alone can trigger it
-    validate(frame, _suite(), result_format="SUMMARY",
-             options=Options(fuse_count_threshold=4))
-    assert calls == [4, 4]
-
-
-def _forbid_solo_fallback(monkeypatch):
-    """While fuse_violations=True, any call into the per-expectation
-    violation fallback is a test failure — the typed encodings must carry
-    the expectation through the fused scan."""
-    import great_expectations_spark.validator as vmod
-
-    orig = vmod.SparkValidator._collect_violations
-
-    def guard(self, config, comp, metrics):
-        if self.options.fuse_violations is True and comp.kernel is not None:
-            raise AssertionError(
-                f"fused run fell back to per-expectation violations for "
-                f"{config.expectation_type}")
-        return orig(self, config, comp, metrics)
-
-    monkeypatch.setattr(vmod.SparkValidator, "_collect_violations", guard)
-
-
-def test_fused_submillisecond_timestamps_exact(spark, monkeypatch):
-    """Timestamps ARE fused-eligible via the unix_micros typed encoding
-    (round 3): sub-ms-distinct violations must keep full microsecond
-    precision and distinct counts, identical to the per-expectation path,
-    AND the detail must come from the fused scan (the per-expectation
-    fallback is forbidden here)."""
-    _forbid_solo_fallback(monkeypatch)
+def test_fused_submillisecond_timestamps_exact(spark):
+    """Sub-ms-distinct timestamps keep their microseconds and stay
+    distinct values in the counts."""
     rows = [
         (1, datetime.datetime(2024, 1, 2, 3, 4, 5, 123456)),
         (2, datetime.datetime(2024, 1, 2, 3, 4, 5, 123999)),
@@ -261,23 +190,17 @@ def test_fused_submillisecond_timestamps_exact(spark, monkeypatch):
              column="ts", max_value="2024-01-01T12:00:00", mostly=0.1)
         .add("expect_column_values_to_be_between", column="i", max_value=2, mostly=0.1)
     )
-    fused = validate(df, suite, result_format="SUMMARY",
-                     options=Options(fuse_violations=True))
-    solo = validate(df, suite, result_format="SUMMARY",
-                    options=Options(fuse_violations=False))
-    f_counts = fused.results[0].result["partial_unexpected_counts"]
-    s_counts = solo.results[0].result["partial_unexpected_counts"]
-    assert f_counts == s_counts
-    # the two sub-ms values are DISTINCT (count 1 each), microseconds intact
-    assert {d["value"]: d["count"] for d in f_counts} == {
-        "2024-01-02T03:04:05.123456": 1, "2024-01-02T03:04:05.123999": 1}
+    got = validate(df, suite, result_format="SUMMARY").results[0].result
+    truth = [v for v, in _violating(df, F.col("ts") > "2024-01-01 12:00:00", "ts")]
+    assert got["partial_unexpected_list"] == truth == [
+        "2024-01-02T03:04:05.123456", "2024-01-02T03:04:05.123999"]
+    assert got["partial_unexpected_counts"] == [
+        {"value": "2024-01-02T03:04:05.123456", "count": 1},
+        {"value": "2024-01-02T03:04:05.123999", "count": 1}]
 
 
-def test_fused_float32_exact(spark, monkeypatch):
-    """float32 IS fused-eligible via the exact cast(double) widening
-    (round 3): fused == solo exactly, THROUGH the fused plan (the
-    per-expectation fallback is forbidden here)."""
-    _forbid_solo_fallback(monkeypatch)
+def test_fused_float32_exact(spark):
+    """float32 values come back as the collected float32-widened doubles."""
     df = spark.createDataFrame(
         [(1, 0.1), (2, 0.2), (3, 9.9), (300, 9.9)], "i int, x float")
     suite = (
@@ -287,22 +210,16 @@ def test_fused_float32_exact(spark, monkeypatch):
         .add("expect_column_values_to_be_between", column="i", max_value=2,
              mostly=0.1)
     )
-    fused = validate(df, suite, result_format="COMPLETE",
-                     options=Options(fuse_violations=True))
-    solo = validate(df, suite, result_format="COMPLETE",
-                    options=Options(fuse_violations=False))
-    f_list = fused.results[0].result["unexpected_list"]
-    s_list = solo.results[0].result["unexpected_list"]
-    assert sorted(f_list) == sorted(s_list)
+    got = validate(df, suite, result_format="COMPLETE").results[0].result
+    truth = [v for v, in _violating(df, F.col("x") > 1.0, "x")]
+    assert got["unexpected_list"] == truth
     # the float32-widened double, not the naive 9.9
-    assert all(abs(v - 9.899999618530273) < 1e-9 for v in f_list)
+    assert all(abs(v - 9.899999618530273) < 1e-9 for v in truth)
 
 
-def test_fused_binary_exact(spark, monkeypatch):
-    """binary IS fused-eligible via the base64 typed encoding (round 4):
-    byte-exact values (incl. non-UTF8 bytes) through the fused plan —
-    per-expectation fallback forbidden."""
-    _forbid_solo_fallback(monkeypatch)
+def test_fused_binary_exact(spark):
+    """Binary values are byte-exact (non-UTF8 bytes included) and order by
+    unsigned byte."""
     rows = [
         (1, bytearray(b"\x00\xff\xfe magic")),
         (2, bytearray(b"plain")),
@@ -317,27 +234,17 @@ def test_fused_binary_exact(spark, monkeypatch):
         .add("expect_column_values_to_be_between", column="i", max_value=2,
              mostly=0.1)
     )
-    fused = validate(df, suite, result_format="SUMMARY",
-                     options=Options(fuse_violations=True))
-    solo = validate(df, suite, result_format="SUMMARY",
-                    options=Options(fuse_violations=False))
-    f_len = fused.results[0].result
-    s_len = solo.results[0].result
-    assert f_len["unexpected_count"] == s_len["unexpected_count"] == 3
-    assert sorted(f_len["partial_unexpected_list"]) == \
-        sorted(s_len["partial_unexpected_list"])
-    assert bytearray(b"\x00\xff\xfe magic") in f_len["partial_unexpected_list"]
-    assert f_len["partial_unexpected_counts"] == s_len["partial_unexpected_counts"]
+    got = validate(df, suite, result_format="SUMMARY").results[0].result
+    truth = [v for v, in _violating(df, F.length("b") < 100, "b")]
+    assert got["unexpected_count"] == 3
+    assert got["partial_unexpected_list"] == truth
+    assert truth[0] == b"" and truth[1] == b"\x00\xff\xfe magic"
+    assert got["partial_unexpected_counts"] == [{"value": v, "count": 1} for v in truth]
 
 
-def test_fused_decimal_exact(spark, monkeypatch):
-    """decimal IS fused-eligible via the exact string-cast encoding
-    (round 4): values come back as decimal.Decimal at the declared scale,
-    identical to collect() — incl. a 38-digit value no double can hold —
-    through the fused plan (fallback forbidden)."""
-    import decimal
-
-    _forbid_solo_fallback(monkeypatch)
+def test_fused_decimal_exact(spark):
+    """Decimals come back as decimal.Decimal at the declared scale,
+    including a 38-digit value no double can hold."""
     big = decimal.Decimal("12345678901234567890123456.789012345678")
     rows = [
         (1, decimal.Decimal("1.500000000000")),
@@ -353,23 +260,15 @@ def test_fused_decimal_exact(spark, monkeypatch):
         .add("expect_column_values_to_be_between", column="i", max_value=2,
              mostly=0.1)
     )
-    fused = validate(df, suite, result_format="COMPLETE",
-                     options=Options(fuse_violations=True))
-    solo = validate(df, suite, result_format="COMPLETE",
-                    options=Options(fuse_violations=False))
-    f_list = fused.results[0].result["unexpected_list"]
-    s_list = solo.results[0].result["unexpected_list"]
-    assert sorted(f_list) == sorted(s_list)
-    assert all(isinstance(v, decimal.Decimal) for v in f_list)
-    assert big in f_list  # full 38-digit precision survived the round trip
+    got = validate(df, suite, result_format="COMPLETE").results[0].result
+    truth = [v for v, in _violating(df, F.col("d") > 0, "d")]
+    assert got["unexpected_list"] == truth
+    assert all(isinstance(v, decimal.Decimal) for v in truth)
+    assert truth[-1] == big
 
 
-def test_fused_binary_decimal_rows_and_index(spark, monkeypatch):
-    """binary/decimal in INDEX columns and unexpected_rows round-trip
-    through the fused scan identically to solo."""
-    import decimal
-
-    _forbid_solo_fallback(monkeypatch)
+def test_fused_binary_decimal_rows_and_index(spark):
+    """Binary and decimal index columns and unexpected rows are exact."""
     rows = [
         (1, bytearray(b"\x01\x02"), decimal.Decimal("3.14")),
         (2, None, decimal.Decimal("-0.01")),
@@ -382,24 +281,17 @@ def test_fused_binary_decimal_rows_and_index(spark, monkeypatch):
     rf = {"result_format": "COMPLETE",
           "unexpected_index_column_names": ["b", "d"],
           "include_unexpected_rows": True}
-    fused = validate(df, suite, result_format=rf,
-                     options=Options(fuse_violations=True))
-    solo = validate(df, suite, result_format=rf,
-                    options=Options(fuse_violations=False))
-    fr, sr = fused.results[0].result, solo.results[0].result
-    key = lambda d: json.dumps(d, sort_keys=True, default=str)
-    assert sorted(map(key, fr["unexpected_index_list"])) == \
-        sorted(map(key, sr["unexpected_index_list"]))
-    assert sorted(map(key, fr["unexpected_rows"])) == \
-        sorted(map(key, sr["unexpected_rows"]))
-    got = {key(d) for d in fr["unexpected_index_list"]}
-    assert key({"b": b"\x01\x02", "d": decimal.Decimal("3.14")}) in got
+    got = validate(df, suite, result_format=rf).results[0].result
+    truth = _violating(df, F.col("i") > 0, "i", "b", "d")
+    assert got["unexpected_index_list"] == [{"b": b, "d": d} for _i, b, d in truth]
+    assert got["unexpected_rows"] == [{"i": i, "b": b, "d": d} for i, b, d in truth]
+    assert {"b": b"\x01\x02", "d": decimal.Decimal("3.14")} in got["unexpected_index_list"]
 
 
 def test_fused_string_tie_order_matches_native(spark):
-    """>50 count-tied string violations incl. JSON-escaping-sensitive ones
-    ('\"a...' sorts first natively but after 'm' when escaped): the fused
-    window cut must keep the natively-smallest values, matching solo."""
+    """>50 count-tied string violations, some that JSON escaping would
+    reorder ('\"a...' sorts first natively): the cut keeps the natively
+    smallest values."""
     vals = [f'"a{i:03d}' for i in range(10)] + [f"m{i:03d}" for i in range(110)]
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i int, s string")
     suite = (
@@ -409,22 +301,18 @@ def test_fused_string_tie_order_matches_native(spark):
         .add("expect_column_values_to_be_between", column="i", max_value=-1,
              mostly=0.001)
     )
-    fused = validate(df, suite, result_format="SUMMARY",
-                     options=Options(fuse_violations=True))
-    solo = validate(df, suite, result_format="SUMMARY",
-                    options=Options(fuse_violations=False))
-    f_counts = fused.results[0].result["partial_unexpected_counts"]
-    s_counts = solo.results[0].result["partial_unexpected_counts"]
-    assert f_counts == s_counts
-    assert [d["value"] for d in f_counts][:10] == [f'"a{i:03d}' for i in range(10)]
+    got = validate(df.repartition(3), suite, result_format="SUMMARY").results[0].result
+    smallest = sorted(vals)[:20]
+    assert got["partial_unexpected_counts"] == [{"value": v, "count": 1} for v in smallest]
+    assert got["partial_unexpected_list"] == smallest
+    assert smallest[:10] == [f'"a{i:03d}' for i in range(10)]
 
 
-def test_fused_typed_encoding_rows_and_index(spark, monkeypatch):
-    """Timestamps/float32 in INDEX columns and unexpected_rows round-trip
-    through the fused scan's typed encodings byte-identically to solo."""
+def test_fused_typed_encoding_rows_and_index(spark):
+    """Timestamp and float32 index columns and rows (an array<float> too)
+    keep microseconds and the widened doubles."""
     import datetime as dt
 
-    _forbid_solo_fallback(monkeypatch)
     rows = [
         (1, dt.datetime(2024, 5, 6, 7, 8, 9, 100001), 0.1, [0.25, 0.1]),
         (2, dt.datetime(2024, 5, 6, 7, 8, 9, 100002), 9.9, None),
@@ -438,31 +326,20 @@ def test_fused_typed_encoding_rows_and_index(spark, monkeypatch):
     rf = {"result_format": "COMPLETE",
           "unexpected_index_column_names": ["ts", "x"],
           "include_unexpected_rows": True}
-    fused = validate(df, suite, result_format=rf,
-                     options=Options(fuse_violations=True))
-    solo = validate(df, suite, result_format=rf,
-                    options=Options(fuse_violations=False))
-    fr, sr = fused.results[0].result, solo.results[0].result
-    key = lambda d: json.dumps(d, sort_keys=True, default=str)
-    assert sorted(map(key, fr["unexpected_index_list"])) == \
-        sorted(map(key, sr["unexpected_index_list"]))
-    assert sorted(map(key, fr["unexpected_rows"])) == \
-        sorted(map(key, sr["unexpected_rows"]))
-    # microseconds intact and floats exactly the widened doubles
-    tss = {d["ts"] for d in fr["unexpected_index_list"]}
-    assert "2024-05-06T07:08:09.100001" in tss
-    assert "2024-05-06T07:08:09.100002" in tss
-    xs = {d["x"] for d in fr["unexpected_index_list"] if d["x"] is not None}
+    got = validate(df, suite, result_format=rf).results[0].result
+    truth = _violating(df, F.col("i") > 0, "i", "ts", "x", "xs")
+    assert got["unexpected_index_list"] == [{"ts": t, "x": x} for _i, t, x, _xs in truth]
+    assert got["unexpected_rows"] == [
+        {"i": i, "ts": t, "x": x, "xs": xs} for i, t, x, xs in truth]
+    tss = {d["ts"] for d in got["unexpected_index_list"]}
+    assert {"2024-05-06T07:08:09.100001", "2024-05-06T07:08:09.100002"} <= tss
+    xs = {d["x"] for d in got["unexpected_index_list"] if d["x"] is not None}
     assert any(abs(v - 9.899999618530273) < 1e-12 for v in xs)
 
 
-def test_fused_timestamp_ntz_exact(spark, monkeypatch):
-    """timestamp_ntz IS fused-eligible via the wall-clock string-cast
-    encoding (round 5 — the last cell of the atom matrix): sub-ms
-    precision intact, identical to the per-expectation path, THROUGH the
-    fused plan, and independent of the session timezone (NTZ carries no
-    zone, so the rendered wall clock must not shift)."""
-    _forbid_solo_fallback(monkeypatch)
+def test_fused_timestamp_ntz_exact(spark):
+    """timestamp_ntz values keep sub-ms precision and do not shift with
+    the session timezone (NTZ carries no zone)."""
     rows = [
         (1, datetime.datetime(2024, 1, 2, 3, 4, 5, 123456)),
         (2, datetime.datetime(2024, 1, 2, 3, 4, 5, 123999)),
@@ -477,33 +354,27 @@ def test_fused_timestamp_ntz_exact(spark, monkeypatch):
         .add("expect_column_values_to_be_between", column="i", max_value=2,
              mostly=0.1)
     )
-    fused = validate(df, suite, result_format="SUMMARY",
-                     options=Options(fuse_violations=True))
-    solo = validate(df, suite, result_format="SUMMARY",
-                    options=Options(fuse_violations=False))
-    f_counts = fused.results[0].result["partial_unexpected_counts"]
-    s_counts = solo.results[0].result["partial_unexpected_counts"]
-    assert f_counts == s_counts
-    assert {d["value"]: d["count"] for d in f_counts} == {
+    got = validate(df, suite, result_format="SUMMARY").results[0].result
+    bad = F.col("ts") > F.lit(datetime.datetime(2024, 1, 1, 12)).cast("timestamp_ntz")
+    truth = [v for v, in _violating(df, bad, "ts")]
+    assert got["partial_unexpected_list"] == truth
+    assert {d["value"]: d["count"] for d in got["partial_unexpected_counts"]} == {
         "2024-01-02T03:04:05.123456": 1, "2024-01-02T03:04:05.123999": 1}
 
-    # session-timezone independence: same wall clock under a shifted zone
     tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        shifted = validate(df, suite, result_format="SUMMARY",
-                           options=Options(fuse_violations=True))
+        shifted = validate(df, suite, result_format="SUMMARY")
         assert (shifted.results[0].result["partial_unexpected_counts"]
-                == f_counts)
+                == got["partial_unexpected_counts"])
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
 
 
-def test_fused_timestamp_ntz_in_containers(spark, monkeypatch):
-    """NTZ nested in arrays also rides the fused encoding: the duplicated
-    NTZ array itself appears in unexpected_list, byte-identical to the
-    per-expectation path (full microseconds)."""
-    _forbid_solo_fallback(monkeypatch)
+def test_fused_timestamp_ntz_in_containers(spark):
+    """An array<timestamp_ntz> value (the duplicated key of a uniqueness
+    check, whose samples come from its own query) is exact to the
+    microsecond."""
     ts = datetime.datetime(2024, 6, 1, 12, 0, 0, 500)
     other = datetime.datetime(2024, 6, 2)
     df = spark.createDataFrame(
@@ -515,10 +386,144 @@ def test_fused_timestamp_ntz_in_containers(spark, monkeypatch):
         .add("expect_column_values_to_be_between", column="i", max_value=2,
              mostly=0.1)
     )
-    fused = validate(df, suite, result_format="COMPLETE",
-                     options=Options(fuse_violations=True))
-    solo = validate(df, suite, result_format="COMPLETE",
-                    options=Options(fuse_violations=False))
-    f_list = fused.results[0].result["unexpected_list"]
-    assert f_list == solo.results[0].result["unexpected_list"]
-    assert f_list and all(v == ["2024-06-01T12:00:00.000500"] for v in f_list)
+    res = validate(df, suite, result_format="COMPLETE").results
+    assert res[0].result["unexpected_list"] == [["2024-06-01T12:00:00.000500"]] * 2
+    # the same value through pass 2's typed field, with the index columns
+    # the uniqueness query leaves to it
+    rf = {"result_format": "COMPLETE", "unexpected_index_column_names": ["i"]}
+    got = validate(df, suite, result_format=rf).results[0].result
+    assert got["unexpected_list"] == [["2024-06-01T12:00:00.000500"]] * 2
+    assert got["unexpected_index_list"] == [{"i": 1}, {"i": 2}]
+
+
+# ------------------------------------------------- one definition, any layout
+
+LAYOUTS = {"repartition1": lambda d: d.repartition(1),
+           "repartition7": lambda d: d.repartition(7),
+           "coalesce2": lambda d: d.repartition(5).coalesce(2)}
+
+
+@pytest.fixture(scope="module")
+def mixed(spark):
+    base = datetime.datetime(2024, 3, 1)
+    strings = ["ünï", "日本", "x😀", "apple", None, "b"]
+    doubles = [float("nan"), -0.0, 0.0, 1.5, None, -2.5]
+    rows = [(i, strings[i % 6], doubles[(i * 5) % 6], i % 4,
+             base + datetime.timedelta(microseconds=137 * (i % 9)) if i % 8 else None)
+            for i in range(240)]
+    return spark.createDataFrame(rows, "i int, s string, d double, g int, t timestamp")
+
+
+def _mixed_suite(with_kl: bool) -> ExpectationSuite:
+    s = ExpectationSuite("layouts")
+    if with_kl:
+        for c, v in (("s", "apple"), ("d", 1.5)):
+            s.add("expect_column_kl_divergence_to_be_less_than", column=c,
+                  partition_object={"values": [v], "weights": [1.0]}, threshold=99.0)
+    return (s
+            .add("expect_column_values_to_be_in_set", column="s", value_set=["apple"])
+            .add("expect_column_values_to_be_in_set", column="d", value_set=[1.5])
+            .add("expect_column_values_to_not_be_null", column="t")
+            .add("expect_column_values_to_be_between", column="t",
+                 max_value="2024-03-01T00:00:00.000300")
+            .add("expect_column_pair_values_a_to_be_greater_than_b",
+                 column_A="g", column_B="i", ignore_row_if="neither"))
+
+
+@pytest.mark.parametrize("rf", [
+    {"result_format": "SUMMARY", "partial_unexpected_count": 7},
+    {"result_format": "COMPLETE", "unexpected_index_column_names": ["i"]},
+], ids=["summary", "complete_idx"])
+def test_lists_identical_across_layouts_and_plans(mixed, rf):
+    """``partial_unexpected_list``, ``partial_unexpected_counts`` and
+    ``unexpected_index_list`` do not depend on the partition layout, nor
+    on whether a KL's value-count query on the same column serves them."""
+    keys = ("partial_unexpected_list", "partial_unexpected_counts", "unexpected_index_list")
+    seen = set()
+    for with_kl in (False, True):
+        for layout in LAYOUTS.values():
+            res = validate(layout(mixed), _mixed_suite(with_kl), result_format=rf)
+            maps = res.results[2:] if with_kl else res.results
+            assert all(r.result["unexpected_count"] for r in maps)
+            seen.add(_c([[r.result.get(key) for key in keys] for r in maps]))
+    assert len(seen) == 1
+    d_list = json.loads(seen.pop())[1][0]
+    # -0.0 and 0.0 are one value, as grouping reports it; NaN ranks last
+    assert "-0.0" not in _c(d_list)
+
+
+def test_pass2_is_one_jvm_query_with_a_window_cut(spark, frame, monkeypatch):
+    """Pass 2 collects ONE query; its plan cuts with ``WindowGroupLimit``
+    (partial before the exchange, final after it) and runs no Python."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from great_expectations_spark.validator import SparkValidator
+
+    plans: list[str] = []
+    inside = []
+    collect = DataFrame.collect
+    entry = SparkValidator._collect_violations
+
+    def spy_collect(self):
+        out = collect(self)
+        if inside:
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    def spy_entry(self, sources):
+        inside.append(1)
+        try:
+            return entry(self, sources)
+        finally:
+            inside.pop()
+
+    monkeypatch.setattr(DataFrame, "collect", spy_collect)
+    monkeypatch.setattr(SparkValidator, "_collect_violations", spy_entry)
+    validate(frame, _suite(), result_format="SUMMARY")
+    assert len(plans) == 1
+    plan = plans[0]
+    assert "WindowGroupLimit" in plan and "Partial" in plan and "Final" in plan, plan
+    assert "Python" not in plan and "MapInPandas" not in plan, plan
+
+
+def test_validator_has_no_python_capper_or_json_codec():
+    """AST guard: pass 2 builds no ``mapInPandas`` stage and encodes no
+    value as JSON text."""
+    src = pathlib.Path(__file__).parents[1] / "great_expectations_spark" / "validator.py"
+    names = {n.attr for n in ast.walk(ast.parse(src.read_text()))
+             if isinstance(n, ast.Attribute)}
+    names |= {n.id for n in ast.walk(ast.parse(src.read_text())) if isinstance(n, ast.Name)}
+    assert not names & {"mapInPandas", "to_json", "_from_json_value", "get_json_object"}
+
+
+def test_a_failing_kernel_keeps_the_other_lists(spark, frame, monkeypatch):
+    """A kernel whose value raises at run time fails the one query; the
+    query then runs per expectation, so every other expectation keeps its
+    lists, every count and verdict is unchanged, and the failure is
+    reported under ``meta["degradations"]``."""
+    from great_expectations_spark.functions.conditions import MAP_KERNELS, MapKernel
+
+    name = "expect_column_values_to_be_small_or_raise"
+
+    def kernel(kwargs):
+        col = F.col(kwargs["column"])
+        return MapKernel(include=col.isNotNull(), ok=col <= 3,
+                         value=F.when(col > 5, F.raise_error(F.lit("boom"))).otherwise(col),
+                         columns=[kwargs["column"]])
+
+    monkeypatch.setitem(MAP_KERNELS, name, kernel)
+    suite = _suite().add(name, column="x", mostly=0.1)
+    got = validate(frame, suite, result_format="SUMMARY")
+    want = validate(frame, _suite(), result_format="SUMMARY")
+    for g, w in zip(got.results, want.results):
+        assert _c(g.result) == _c(w.result)
+        assert g.success == w.success
+    bad = got.results[-1]
+    assert not bad.exception_info.get("raised_exception")
+    assert bad.result["unexpected_count"] == 196 and bad.success is False
+    assert "partial_unexpected_list" not in bad.result
+    [d] = got.meta["degradations"]
+    assert d["expectation_id"] == suite.expectations[-1].id
+    assert d["fallback"] == "pass2"
+    assert "boom" in d["message"] and d["exception"]
+    assert "degradations" not in want.meta

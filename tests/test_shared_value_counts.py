@@ -30,19 +30,13 @@ def fruit(spark):
 def pass2(monkeypatch):
     """Config ids whose violation lists pass 2 read from rows."""
     ids: list[str] = []
-    single = SparkValidator._collect_violations
-    fused = SparkValidator._collect_violations_fused
+    entry = SparkValidator._collect_violations
 
-    def spy_single(self, config, comp, metrics):
-        ids.append(config.id)
-        return single(self, config, comp, metrics)
+    def spy(self, sources):
+        ids.extend(config.id for config, _source in sources)
+        return entry(self, sources)
 
-    def spy_fused(self, fusable, metrics):
-        ids.extend(c.id for c, *_ in fusable)
-        return fused(self, fusable, metrics)
-
-    monkeypatch.setattr(SparkValidator, "_collect_violations", spy_single)
-    monkeypatch.setattr(SparkValidator, "_collect_violations_fused", spy_fused)
+    monkeypatch.setattr(SparkValidator, "_collect_violations", spy)
     return ids
 
 
@@ -119,10 +113,10 @@ def test_complete_lists_run_to_the_cap(fruit, pass2):
 
 
 def test_samples_match_pass2_on_a_single_value_layout(fruit, pass2):
-    """With one partition holding the rows in sorted order the scan-order
-    samples of pass 2 are the smallest values too: both paths agree."""
+    """Pass 2 and the value-count groups give the same lists on any
+    layout: both take the smallest unexpected values."""
     etype, kw, _bad = KERNELS[0]
-    df = fruit.orderBy("s").coalesce(1)
+    df = fruit.repartition(3)
     alone = validate(df, ExpectationSuite("a").add(etype, column="s", **kw),
                      result_format="SUMMARY").results[0].result
     shared = validate(df, ExpectationSuite("b").add(
